@@ -73,14 +73,6 @@ def rows_to_json(df: DataFrame, colname: str = "content") -> DataFrame:
     )
 
 
-def json_to_rows(df: DataFrame, schema, colname: str = "content") -> DataFrame:
-    """S11: parse staged JSON back into typed columns."""
-    parsed = df.withColumn(
-        "__parsed", F.from_json(F.col(colname), schema, {"timestampFormat": DATETIME_FORMAT})
-    )
-    return parsed.select("__parsed.*")
-
-
 def extras_to_dict(extras: list[dict]) -> dict:
     """Pure-Python pair-list → dict (reference ``extras_to_dict``)."""
     return {x["key"]: x["value"] for x in extras}

@@ -168,17 +168,6 @@ def slugify_udf(length: int = 90):
     return pandas_udf(_slugify, StringType())
 
 
-def slugify_simple_col(c: Column) -> Column:
-    """JVM-side slug for values known to fit the length budget (no
-    truncation branch): transliteration via each engine's accent stripping
-    is NOT included — callers must pass already-ASCII or accept diacritics
-    handled by ``slugify_udf`` instead. Used in oracle-comparable queries
-    where DuckDB's ``strip_accents`` mirrors the transliteration."""
-    slug = F.regexp_replace(c, r"[^\w\s-]", "")
-    slug = F.lower(F.trim(slug))
-    return F.regexp_replace(slug, r"[-\s]+", "-")
-
-
 # ---------------------------------------------------------------------------
 # F3 tagify / F4 get_package_tags
 # ---------------------------------------------------------------------------

@@ -93,10 +93,3 @@ def children_lists(nodes: DataFrame, id_col: str, parent_col: str, payload) -> D
         .agg(F.array_sort(F.collect_list(payload)).alias("children"))
     )
 
-
-def topological_levels(closure: DataFrame) -> DataFrame:
-    """Sink-ordering helper: nodes grouped by depth. Create parents before
-    children (ascending depth); delete children before parents
-    (descending) — the ordering constraint the reference satisfies by
-    recursion order."""
-    return closure.select("id", "depth").orderBy("depth")

@@ -61,21 +61,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return np.random.RandomState(seed).normal(size=(n_planes, dim))
 
 
-def lsh_signature(vec: Column, planes: np.ndarray) -> Column:
-    """Sign-bit signature as a bigint: bit i = 1 iff vec · plane_i > 0.
-
-    Expression form — n_planes interpreted HOF dot products per row. Use
-    ``with_lsh_signature_arrow`` on the hot path; this stays as the
-    pure-JVM fallback (no Python workers)."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        sig = sig + F.when(dot(vec, p) > 0, F.lit(1 << i).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sig
-
-
 def with_lsh_signature_arrow(
     df: DataFrame,
     planes: np.ndarray,

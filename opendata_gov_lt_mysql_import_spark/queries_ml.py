@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.clustering import _tdiv
 from .operators.dedup import (
     _spread,
     blocked_jaccard_pairs,
@@ -8850,15 +8851,6 @@ def _pq_adc_trained_oracle(iters: int = 2, scale: int = 10**4) -> str:
     SELECT vec_id, adc_dist FROM adc
     ORDER BY adc_dist, vec_id LIMIT 10
     """
-
-
-def _tdiv(a: int, b: int) -> int:
-    """Truncate-toward-zero integral division — the exact semantics of
-    Spark ``DIV`` and DuckDB ``//`` on BIGINTs (Python ``//`` floors,
-    which differs on mixed signs; the Lloyd update sums CAN go negative
-    on negative embedding coordinates)."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
 
 
 def _pq_cb_argmin_sql(cb: dict[int, list[tuple[int, list[int]]]]) -> str:

@@ -32,13 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def evolved_schema(spark: SparkSession, path: str) -> StructType:
-    """Union schema across every file in a parquet directory (footer
-    merge — discovery-time only; persist the result in a catalog rather
-    than calling this per query at scale)."""
-    return spark.read.option("mergeSchema", "true").parquet(path).schema
-
-
 def read_evolved(
     spark: SparkSession,
     path: str,

@@ -59,6 +59,8 @@ catalog-integrated one.
 
 from __future__ import annotations
 
+import os
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -81,6 +83,16 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from .snapshots import (
+    _added_files,
+    _collect_file_stats,
+    _file_may_match,
+    _txn_landed,
+    current_version,
+    publish_new_files,
+    resolve_snapshot,
+)
 
 
 def load_snapshot_df(spark, table_dir: str, version: int | None = None):
@@ -139,8 +151,6 @@ class SnapshotDataSource(DataSource):
 
     def _resolved(self) -> dict:
         if getattr(self, "_m", None) is None:
-            from .snapshots import resolve_snapshot
-
             v = self.options.get("version")
             self._m = resolve_snapshot(
                 self._table_dir(), None if v is None else int(v)
@@ -232,46 +242,6 @@ class SnapshotFilePartition(InputPartition):
         self.path = path
 
 
-def _file_may_match(f, stats) -> bool:
-    """Conservative file-skip test: False ONLY when the file's manifest
-    stats PROVE no row can satisfy filter ``f`` (then the file never
-    opens); True on any uncertainty. Sound per-conjunct: Spark pushes a
-    conjunction, so one impossible conjunct kills the whole file."""
-    from .snapshots import _norm_stat_value
-
-    attr = getattr(f, "attribute", None)
-    if attr is None or len(attr) != 1 or stats is None:
-        return True
-    col_stats = stats.get(attr[0])
-    if not col_stats:
-        return True
-    lo, hi, has_nulls = col_stats
-    if isinstance(f, IsNull):
-        return bool(has_nulls)
-    if isinstance(f, IsNotNull):
-        return True  # stats exist => at least one non-null value
-    try:
-        if isinstance(f, In):
-            vs = [_norm_stat_value(v) for v in f.value if v is not None]
-            return any(lo <= v <= hi for v in vs)
-        v = _norm_stat_value(f.value)
-        if v is None:
-            return True
-        if isinstance(f, (EqualTo, EqualNullSafe)):
-            return lo <= v <= hi
-        if isinstance(f, GreaterThan):
-            return hi > v
-        if isinstance(f, GreaterThanOrEqual):
-            return hi >= v
-        if isinstance(f, LessThan):
-            return lo < v
-        if isinstance(f, LessThanOrEqual):
-            return lo <= v
-    except TypeError:
-        return True  # incomparable types (schema drift) — never skip
-    return True
-
-
 class SnapshotReader(DataSourceReader):
     def __init__(
         self,
@@ -283,7 +253,6 @@ class SnapshotReader(DataSourceReader):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         self._files = files
-        self._schema = schema
         self._arrow_schema = to_arrow_schema(schema)
         # per-file manifest stats for file-level skipping (keyed by the
         # manifest-relative path, parallel to `files`)
@@ -348,20 +317,22 @@ class SnapshotReader(DataSourceReader):
         return out
 
     def read(self, partition: SnapshotFilePartition):
-        import pyarrow.dataset as pads
+        yield from _read_arrow_file(
+            partition.path, self._arrow_schema, self._arrow_filter
+        )
 
-        # the DECLARED schema, not the file's own: older files null-fill
-        # added columns and upcast compatible drifts, matching
-        # read_snapshot's declared-schema semantics
-        ds = pads.dataset(
-            partition.path, format="parquet", schema=self._arrow_schema
-        )
-        # row groups whose min/max exclude the filter never decode
-        scanner = ds.scanner(
-            columns=[f.name for f in self._schema.fields],
-            filter=self._arrow_filter,
-        )
-        yield from scanner.to_batches()
+
+def _read_arrow_file(path: str, arrow_schema, arrow_filter=None):
+    """One data file's Arrow batches under the DECLARED schema, not the
+    file's own: older files null-fill added columns and upcast
+    compatible drifts, matching read_snapshot. Row groups whose min/max
+    exclude ``arrow_filter`` never decode."""
+    import pyarrow.dataset as pads
+
+    ds = pads.dataset(path, format="parquet", schema=arrow_schema)
+    yield from ds.scanner(
+        columns=arrow_schema.names, filter=arrow_filter
+    ).to_batches()
 
 
 class SnapshotStreamReader(DataSourceStreamReader):
@@ -384,59 +355,34 @@ class SnapshotStreamReader(DataSourceStreamReader):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         self._table_dir = table_dir
-        self._schema = schema
         self._arrow_schema = to_arrow_schema(schema)
 
     def initialOffset(self) -> dict:
         return {"version": -1}
 
     def latestOffset(self) -> dict:
-        from .snapshots import current_version
-
         v = current_version(self._table_dir)
         return {"version": -1 if v is None else v}
 
     def partitions(self, start: dict, end: dict):
-        from .snapshots import _load_manifest, _manifest_path, resolve_snapshot
-        import os
-
         sv, ev = int(start["version"]), int(end["version"])
         if ev <= sv:
             return []
         target = resolve_snapshot(self._table_dir, ev)
-        if sv < 0:
-            added = target["_abs_files"]  # initial backfill: current state
-        else:
-            for v in range(sv + 1, ev + 1):
-                if not os.path.exists(_manifest_path(self._table_dir, v)):
-                    raise FileNotFoundError(
-                        f"snapshot stream: version {v} was vacuumed — "
-                        "incremental lineage broken, restart the stream"
-                    )
-                if _load_manifest(self._table_dir, v)["mode"] != "append":
-                    raise ValueError(
-                        f"snapshot stream: version {v} is not an append "
-                        "— streaming requires append-only lineage"
-                    )
-            base_files = set(
-                resolve_snapshot(self._table_dir, sv)["files"]
+        added = (
+            target["files"]  # initial backfill: current state
+            if sv < 0
+            else _added_files(
+                self._table_dir, resolve_snapshot(self._table_dir, sv), target
             )
-            added = [
-                ap
-                for ap, rel in zip(target["_abs_files"], target["files"])
-                if rel not in base_files
-            ]
-        return [SnapshotFilePartition(p) for p in added]
+        )
+        return [
+            SnapshotFilePartition(os.path.join(self._table_dir, rel))
+            for rel in added
+        ]
 
     def read(self, partition: SnapshotFilePartition):
-        import pyarrow.dataset as pads
-
-        ds = pads.dataset(
-            partition.path, format="parquet", schema=self._arrow_schema
-        )
-        yield from ds.scanner(
-            columns=[f.name for f in self._schema.fields]
-        ).to_batches()
+        yield from _read_arrow_file(partition.path, self._arrow_schema)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are durable versions; nothing to acknowledge
@@ -449,6 +395,41 @@ class SnapshotFileMessage(WriterCommitMessage):
     rel_path: str | None = None
     stats: dict = field(default_factory=dict)
     n_rows: int = 0
+
+
+def _write_arrow_file(iterator, table_dir: str, rel: str) -> SnapshotFileMessage:
+    """Stream one write task's Arrow batches into the single parquet
+    file ``rel`` — created, with its directory, only once a first batch
+    arrives, so an empty partition leaves nothing behind — and describe
+    it as a commit message."""
+    import pyarrow.parquet as pq
+
+    abs_path = os.path.join(table_dir, rel)
+    writer, n = None, 0
+    try:
+        for batch in iterator:
+            if writer is None:
+                os.makedirs(os.path.dirname(abs_path), exist_ok=True)
+                writer = pq.ParquetWriter(abs_path, batch.schema)
+            writer.write_batch(batch)
+            n += batch.num_rows
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is None:
+        return SnapshotFileMessage()
+    return SnapshotFileMessage(rel, _collect_file_stats(abs_path), n)
+
+
+def _written_files(messages) -> tuple[list, dict, dict]:
+    """The (files, stats, rows) that a write job's commit messages
+    describe, in the shape ``publish_new_files`` takes."""
+    done = [m for m in messages if m and m.rel_path]
+    return (
+        sorted(m.rel_path for m in done),
+        {m.rel_path: m.stats for m in done},
+        {m.rel_path: m.n_rows for m in done},
+    )
 
 
 class SnapshotWriter(DataSourceArrowWriter):
@@ -466,22 +447,13 @@ class SnapshotWriter(DataSourceArrowWriter):
     partially-written commit dir (vacuum would reclaim it anyway)."""
 
     def __init__(self, table_dir: str, schema: StructType, overwrite: bool):
-        import uuid
-
         self._table_dir = table_dir
         self._schema = schema
         self._mode = "overwrite" if overwrite else "append"
         self._commit_id = uuid.uuid4().hex  # shared by all write tasks
 
     def write(self, iterator):
-        import os
-        import uuid
-
-        import pyarrow.parquet as pq
-
         from pyspark import TaskContext
-
-        from .snapshots import _collect_file_stats
 
         tc = TaskContext.get()
         part = tc.partitionId() if tc is not None else 0
@@ -490,32 +462,10 @@ class SnapshotWriter(DataSourceArrowWriter):
             self._commit_id,
             f"part-{part:05d}-{uuid.uuid4().hex}.parquet",
         )
-        abs_path = os.path.join(self._table_dir, rel)
-        os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        writer, n = None, 0
-        try:
-            for batch in iterator:
-                if writer is None:
-                    writer = pq.ParquetWriter(abs_path, batch.schema)
-                writer.write_batch(batch)
-                n += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            return SnapshotFileMessage()  # empty partition: no file
-        return SnapshotFileMessage(rel, _collect_file_stats(abs_path), n)
+        return _write_arrow_file(iterator, self._table_dir, rel)
 
     def commit(self, messages):
-        from .snapshots import publish_new_files
-
-        files = sorted(m.rel_path for m in messages if m and m.rel_path)
-        stats = {
-            m.rel_path: m.stats for m in messages if m and m.rel_path
-        }
-        rows = {
-            m.rel_path: m.n_rows for m in messages if m and m.rel_path
-        }
+        files, stats, rows = _written_files(messages)
         publish_new_files(
             self._table_dir,
             files,
@@ -527,7 +477,6 @@ class SnapshotWriter(DataSourceArrowWriter):
         )
 
     def abort(self, messages):
-        import os
         import shutil
 
         shutil.rmtree(
@@ -555,54 +504,17 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
         self._txn_app = txn_app
 
     def write(self, iterator):
-        import os
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        from .snapshots import _collect_file_stats
-
         # one single-file commit dir per task: micro-batch tasks cannot
         # coordinate a shared dir name (the writer pickles per batch),
         # and manifests list files, not dirs, so the layout is free
-        rel = os.path.join(
-            "data", uuid.uuid4().hex, "part-00000.parquet"
-        )
-        abs_path = os.path.join(self._table_dir, rel)
-        os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        writer, n = None, 0
-        try:
-            for batch in iterator:
-                if writer is None:
-                    writer = pq.ParquetWriter(abs_path, batch.schema)
-                writer.write_batch(batch)
-                n += batch.num_rows
-        finally:
-            if writer is not None:
-                writer.close()
-        if writer is None:
-            os.rmdir(os.path.dirname(abs_path))
-            return SnapshotFileMessage()
-        return SnapshotFileMessage(rel, _collect_file_stats(abs_path), n)
+        rel = os.path.join("data", uuid.uuid4().hex, "part-00000.parquet")
+        return _write_arrow_file(iterator, self._table_dir, rel)
 
     def commit(self, messages, batchId: int) -> None:
-        from .snapshots import (
-            _load_manifest,
-            current_version,
-            publish_new_files,
-        )
-
         txn_id = f"{self._txn_app}-{batchId}" if self._txn_app else None
-        if txn_id is not None:
-            v = current_version(self._table_dir)
-            if (
-                v is not None
-                and _load_manifest(self._table_dir, v).get("txn_id") == txn_id
-            ):
-                return  # replayed batch already landed — exactly-once
-        files = sorted(m.rel_path for m in messages if m and m.rel_path)
-        stats = {m.rel_path: m.stats for m in messages if m and m.rel_path}
-        rows = {m.rel_path: m.n_rows for m in messages if m and m.rel_path}
+        if txn_id is not None and _txn_landed(self._table_dir, txn_id) is not None:
+            return  # replayed batch already landed — exactly-once
+        files, stats, rows = _written_files(messages)
         publish_new_files(
             self._table_dir,
             files,
@@ -615,7 +527,6 @@ class SnapshotStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def abort(self, messages, batchId: int) -> None:
-        import os
         import shutil
 
         for m in messages:

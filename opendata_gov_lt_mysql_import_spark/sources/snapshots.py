@@ -30,6 +30,23 @@ Readers load the manifest (latest or a pinned ``version``) and hand
 Spark the explicit file list with the recorded schema — no directory
 listing, no footer merge, no visibility of in-flight writer dirs.
 
+Each rule of the format has one owner, shared by every writer and
+reader (the DataSource tier in ``snapshot_datasource`` included):
+
+- data-file write + per-file stats/row counts: :func:`_write_commit_files`
+  (DataFrame commits); ``snapshot_datasource._write_arrow_file`` (Arrow
+  tasks of the DataSource writers);
+- manifest layout and the atomic publish: :func:`_put_manifest`; the
+  parent files a new version carries: :func:`_stacked`;
+- append/overwrite optimistic retry: :func:`publish_new_files`;
+  single-attempt rewrites (merge, delete): :func:`_commit_rewrite`;
+- append schema union: :func:`_merged_append_schema`;
+- the ``(column, op, value)`` filter language: ``_FILTER_OPS``, checked
+  by :func:`_parse_filters`, tested against file stats by
+  :func:`_file_may_match`, applied to rows by :func:`_row_predicate`;
+- append-lineage check and added-file diff: :func:`_added_files`;
+- exactly-once txn check: :func:`_txn_landed`.
+
 Scale notes: one manifest is a JSON file listing file paths — fine to
 millions of files per table at 100 TB (a few hundred MB of driver-side
 JSON at the extreme; real table formats shard manifests, noted here as
@@ -50,13 +67,28 @@ everything above the publish call is storage-agnostic.
 
 from __future__ import annotations
 
+import bisect
+import datetime as dt
+import functools
 import json
+import operator
 import os
 import threading
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.datasource import (
+    EqualNullSafe,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+)
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 _MANIFEST_DIR = "_manifests"
 
@@ -179,9 +211,6 @@ def _nullability_merged(pt, nt):
     append of the SAME logical type with strict flags must not read
     as schema drift (found by the round-15 multi-fold lifecycle test
     on the gram table's array<bigint> column)."""
-    from pyspark.sql.types import ArrayType, MapType, StructField
-    from pyspark.sql.types import StructType as _ST
-
     if pt == nt:
         return pt
     if isinstance(pt, ArrayType) and isinstance(nt, ArrayType):
@@ -195,7 +224,7 @@ def _nullability_merged(pt, nt):
         if k is None or v is None:
             return None
         return MapType(k, v, pt.valueContainsNull or nt.valueContainsNull)
-    if isinstance(pt, _ST) and isinstance(nt, _ST):
+    if isinstance(pt, StructType) and isinstance(nt, StructType):
         if [f.name for f in pt.fields] != [f.name for f in nt.fields]:
             return None
         fs = []
@@ -204,7 +233,7 @@ def _nullability_merged(pt, nt):
             if m is None:
                 return None
             fs.append(StructField(a.name, m, a.nullable or b.nullable))
-        return _ST(fs)
+        return StructType(fs)
     return None
 
 
@@ -216,8 +245,6 @@ def _merged_append_schema(parent_struct: StructType, new_struct: StructType):
     that column from every read of the new version (the manifest only
     recorded the incoming df's schema), and a narrowed type (parent
     bigint files declared int) broke the vectorized reader."""
-    from pyspark.sql.types import StructField
-
     new_by_name = {f.name: f for f in new_struct.fields}
     fields = []
     for pf in parent_struct.fields:
@@ -254,8 +281,6 @@ def _norm_stat_value(v):
     scalar: datetimes → UTC epoch micros, dates → ordinal day. Both the
     write-side stats and the read-side filter values go through this,
     so comparisons are always like-typed."""
-    import datetime as dt
-
     if isinstance(v, dt.datetime):
         if v.tzinfo is None:
             v = v.replace(tzinfo=dt.timezone.utc)
@@ -376,31 +401,90 @@ def commit_snapshot(
         ).sortWithinPartitions(*cols)
     elif target_files:
         df = df.coalesce(target_files)
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_dir, "data", commit_id)
-    df.write.mode("error").parquet(data_dir)
-    new_files = sorted(
-        os.path.join("data", commit_id, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+    commit_id, new_files, new_stats, new_rows = _write_commit_files(
+        df, table_dir
     )
-    # per-file min/max stats power manifest-level FILE skipping in the
-    # readers (the tier above parquet row-group pruning — at large file
-    # counts a pruned file never even opens); collection is O(footers)
-    new_stats = {
-        rel: _collect_file_stats(os.path.join(table_dir, rel))
-        for rel in new_files
-    }
-    new_rows = {
-        rel: _file_row_count(os.path.join(table_dir, rel))
-        for rel in new_files
-    }
-
     return publish_new_files(
         table_dir, new_files, new_stats, df.schema, mode,
         max_retries=max_retries, txn_id=_txn_id, tag=commit_id,
         publish_primitive=publish_primitive, new_rows=new_rows,
     )
+
+
+def _write_commit_files(
+    df: DataFrame, table_dir: str
+) -> tuple[str, list, dict, dict]:
+    """Write df into a fresh data/<uuid>/ dir; return (commit_id,
+    relative file list, per-file stats, per-file row counts). The stats
+    power manifest-level file skipping in every reader; collecting them
+    is O(footers)."""
+    commit_id = uuid.uuid4().hex
+    data_dir = os.path.join(table_dir, "data", commit_id)
+    df.write.mode("error").parquet(data_dir)
+    rels = sorted(
+        os.path.join("data", commit_id, f)
+        for f in os.listdir(data_dir)
+        if f.endswith(".parquet")
+    )
+    stats = {
+        rel: _collect_file_stats(os.path.join(table_dir, rel)) for rel in rels
+    }
+    rows = {
+        rel: _file_row_count(os.path.join(table_dir, rel)) for rel in rels
+    }
+    return commit_id, rels, stats, rows
+
+
+def _stacked(
+    parent: dict, carried: list[str], new: tuple[list, dict, dict]
+) -> tuple[list, dict, dict]:
+    """(files, stats, rows) of a version that keeps the ``carried``
+    files of manifest ``parent`` by reference, with their stats and row
+    counts, followed by the ``new`` (files, stats, rows) just written."""
+    files, stats, rows = new
+    keep = set(carried)
+
+    def carry(key: str) -> dict:
+        return {f: v for f, v in parent.get(key, {}).items() if f in keep}
+
+    return (
+        [*carried, *files],
+        {**carry("stats"), **stats},
+        {**carry("file_rows"), **rows},
+    )
+
+
+def _put_manifest(
+    table_dir: str,
+    parent: int | None,
+    mode: str,
+    schema_json: str,
+    written: tuple[list, dict, dict],
+    tag: str,
+    txn_id: str | None = None,
+    publish_primitive: PublishPrimitive | None = None,
+) -> int | None:
+    """Publish the manifest of version ``parent + 1`` (0 for a new
+    table) listing ``written`` = (files, stats, rows), atomically and
+    first-wins. Returns the version, or None when a concurrent writer
+    already published it."""
+    files, stats, rows = written
+    version = 0 if parent is None else parent + 1
+    manifest = {
+        "version": version,
+        "parent": parent,
+        "mode": mode,
+        "schema": schema_json,
+        "files": files,
+        "stats": stats,
+        "file_rows": rows,
+    }
+    if txn_id is not None:
+        manifest["txn_id"] = txn_id
+    published = (publish_primitive or DEFAULT_PUBLISH).put_if_absent(
+        _manifest_path(table_dir, version), json.dumps(manifest), tag
+    )
+    return version if published else None
 
 
 def publish_new_files(
@@ -421,43 +505,23 @@ def publish_new_files(
     re-stacks onto whatever parent wins a race; see commit_snapshot for
     the full semantics. ``publish_primitive`` injects the storage
     put-if-absent (default POSIX link; see :class:`PublishPrimitive`)."""
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    for attempt in range(max_retries + 1):
+    os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
+    new = (list(new_files), dict(new_stats), dict(new_rows or {}))
+    for _ in range(max_retries + 1):
         parent = current_version(table_dir)
-        files = list(new_files)
-        stats = dict(new_stats)
-        rows = dict(new_rows or {})
-        schema_json = schema.json()
+        written, schema_json = new, schema.json()
         if mode == "append" and parent is not None:
             pm = _load_manifest(table_dir, parent)
-            files = pm["files"] + files
-            stats = {**pm.get("stats", {}), **stats}
-            rows = {**pm.get("file_rows", {}), **rows}
+            written = _stacked(pm, pm["files"], new)
             schema_json = _merged_append_schema(
                 StructType.fromJson(json.loads(pm["schema"])), schema
             ).json()
-
-        version = 0 if parent is None else parent + 1
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "mode": mode,
-            "schema": schema_json,
-            "files": files,
-            "stats": stats,
-            "file_rows": rows,
-        }
-        if txn_id is not None:
-            manifest["txn_id"] = txn_id  # commit_snapshot_idempotent
-        # atomic first-wins publish through the injected storage
-        # primitive (POSIX link by default; conditional put on object
-        # stores) — False means a concurrent writer won this version
-        if (publish_primitive or DEFAULT_PUBLISH).put_if_absent(
-            _manifest_path(table_dir, version), json.dumps(manifest), tag
-        ):
+        version = _put_manifest(
+            table_dir, parent, mode, schema_json, written, tag,
+            txn_id, publish_primitive,
+        )
+        if version is not None:
             return version
-        continue  # lost the race — re-resolve parent and retry
     raise RuntimeError(
         f"snapshot publish lost the race {max_retries + 1} times "
         f"in {table_dir} — pathological contention, coordinate writers"
@@ -475,15 +539,26 @@ def commit_snapshot_idempotent(
     ``txn_id`` (e.g. ``f"{query_id}-{batch_id}"``) is recorded in the
     manifest; if the CURRENT version already carries it, the commit is
     a no-op returning that version — a micro-batch replayed after a
-    sink crash lands once. The check is current-version-only by design:
-    structured streaming replays only the LAST unacknowledged batch, so
-    deeper history scans would cost O(versions) for nothing."""
+    sink crash lands once (see :func:`_txn_landed`). The txn_id rides
+    INSIDE the atomically-published manifest, so there is no
+    publish-then-stamp window for a crash to lose the marker in."""
+    landed = _txn_landed(table_dir, txn_id)
+    if landed is not None:
+        return landed
+    return commit_snapshot(df, table_dir, mode=mode, _txn_id=txn_id, **kwargs)
+
+
+def _txn_landed(table_dir: str, txn_id: str) -> int | None:
+    """The current version when its manifest already carries
+    ``txn_id``, else None — the exactly-once check shared by
+    :func:`commit_snapshot_idempotent` and the snapshot stream writer.
+    Current-version-only by design: structured streaming replays only
+    the LAST unacknowledged batch, so deeper history scans would cost
+    O(versions) for nothing."""
     v = current_version(table_dir)
     if v is not None and _load_manifest(table_dir, v).get("txn_id") == txn_id:
         return v
-    # txn_id rides INSIDE the atomically-published manifest — there is
-    # no publish-then-stamp window for a crash to lose the marker in
-    return commit_snapshot(df, table_dir, mode=mode, _txn_id=txn_id, **kwargs)
+    return None
 
 
 def resolve_snapshot(table_dir: str, version: int | None = None) -> dict:
@@ -500,8 +575,6 @@ def resolve_snapshot(table_dir: str, version: int | None = None) -> dict:
     # every pre-existing row NULL in it, so no non-nullability recorded
     # at write time survives schema evolution (a non-nullable field here
     # makes Spark's vectorized reader crash on the null-filled batches)
-    from pyspark.sql.types import StructField
-
     m["_struct"] = StructType(
         [StructField(f.name, f.dataType, True, f.metadata) for f in raw.fields]
     )
@@ -516,55 +589,54 @@ def read_snapshot(
     manifest's explicit file list under its recorded schema — immune to
     in-flight writers and stray files."""
     m = resolve_snapshot(table_dir, version)
-    if not m["_abs_files"]:
+    return _read_files(spark, table_dir, m, m["files"])
+
+
+def _read_files(
+    spark: SparkSession, table_dir: str, m: dict, rels: list[str]
+) -> DataFrame:
+    """The manifest-relative files ``rels`` under resolved manifest
+    ``m``'s declared schema (an empty frame when there are none)."""
+    if not rels:
         return spark.createDataFrame([], m["_struct"])
-    return spark.read.schema(m["_struct"]).parquet(*m["_abs_files"])
-
-
-def _write_commit_files(
-    df: DataFrame, table_dir: str
-) -> tuple[str, list, dict, dict]:
-    """Write df into a fresh data/<uuid>/ dir; return (commit_id,
-    relative file list, per-file stats, per-file row counts)."""
-    commit_id = uuid.uuid4().hex
-    data_dir = os.path.join(table_dir, "data", commit_id)
-    df.write.mode("error").parquet(data_dir)
-    rels = sorted(
-        os.path.join("data", commit_id, f)
-        for f in os.listdir(data_dir)
-        if f.endswith(".parquet")
+    return spark.read.schema(m["_struct"]).parquet(
+        *(os.path.join(table_dir, f) for f in rels)
     )
-    stats = {
-        rel: _collect_file_stats(os.path.join(table_dir, rel)) for rel in rels
-    }
-    rows = {
-        rel: _file_row_count(os.path.join(table_dir, rel)) for rel in rels
-    }
-    return commit_id, rels, stats, rows
 
 
-def _publish_once(
+def _commit_rewrite(
     table_dir: str,
-    manifest: dict,
-    tag: str,
-    publish_primitive: PublishPrimitive | None = None,
-) -> None:
-    """Single-attempt atomic publish; raises on a concurrent commit.
-    Used by rewriting transactions (merge/delete), whose row work was
-    computed against a SPECIFIC parent — unlike append/overwrite they
-    cannot re-stack onto a different winner, so a lost race must abort
-    (the orphaned data dir is reclaimed by vacuum)."""
-    mdir = os.path.join(table_dir, _MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    version = manifest["version"]
-    if not (publish_primitive or DEFAULT_PUBLISH).put_if_absent(
-        _manifest_path(table_dir, version), json.dumps(manifest), tag
-    ):
+    m: dict,
+    affected: list[str],
+    rewritten: DataFrame,
+    mode: str,
+) -> int:
+    """Commit a rewriting transaction (merge/delete): ``rewritten``
+    replaces the ``affected`` files of resolved manifest ``m``, every
+    other file carries forward by reference, and version m+1 is
+    published in ONE attempt. The row work was computed against this
+    specific parent, so unlike append/overwrite it cannot re-stack onto
+    a concurrent winner: a lost race raises (vacuum reclaims the
+    orphaned data dir)."""
+    commit_id, *new = _write_commit_files(rewritten, table_dir)
+    gone = set(affected)
+    carried = [f for f in m["files"] if f not in gone]
+    version = _put_manifest(
+        table_dir, m["version"], mode, m["schema"],
+        _stacked(m, carried, new), commit_id,
+    )
+    if version is None:
         raise RuntimeError(
             f"concurrent commit beat this transaction to version "
-            f"{version} in {table_dir}; its rewrite is based on version "
-            f"{manifest['parent']} — re-run against the new state"
+            f"{m['version'] + 1} in {table_dir}; its rewrite is based on "
+            f"version {m['version']} — re-run against the new state"
         )
+    return version
+
+
+# merge_snapshot collects up to this many distinct source keys for an
+# exact per-file key test; a larger source falls back to its key range
+_KEY_SET_CAP = 100_000
 
 
 def merge_snapshot(
@@ -578,16 +650,20 @@ def merge_snapshot(
     Publishes a new ``mode='merge'`` version.
 
     Scale shape: only files whose manifest min/max MAY contain a source
-    key are rewritten — on a single stats-covered key column the
-    affected set is bounded by the source's [min, max] key range, so
-    merges into a ``cluster_by(key)`` table touch a handful of files
-    while every other file carries forward by reference (the
-    copy-on-write granularity of real table formats). The rewrite is
-    one anti-join (kept = affected ⟕̸ source keys) + a union; Spark
-    broadcasts the key side when small. Source columns must match the
-    declared schema by name. (Reference analog: the harvester's
-    per-object update-or-create against CKAN, odgovlt.py:387-407 —
-    here set-oriented and file-granular instead of row-at-a-time.)"""
+    key are rewritten, so merges into a ``cluster_by(key)`` table touch
+    a handful of files while every other file carries forward by
+    reference (the copy-on-write granularity of real table formats). On
+    a single stats-covered key column a small source (the common upsert
+    shape — a daily batch against a big table) collects its distinct
+    keys in one pass and each file is tested EXACTLY against its [min,
+    max]; a source with more than 100,000 distinct keys falls back to
+    the overall key-range overlap; multi-column keys affect every file.
+    The rewrite is one anti-join (kept = affected ⟕̸ source keys) + a
+    union; Spark broadcasts the key side when small. Source columns
+    must match the declared schema by name. (Reference analog: the
+    harvester's per-object update-or-create against CKAN,
+    odgovlt.py:387-407 — here set-oriented and file-granular instead of
+    row-at-a-time.)"""
     keys = [on] if isinstance(on, str) else list(on)
     m = resolve_snapshot(table_dir)
     declared = [f.name for f in m["_struct"].fields]
@@ -600,82 +676,37 @@ def merge_snapshot(
         )
     source = source.select(*declared)
 
-    # stats-scoped affected-file set, tiered by source size: a small
-    # source (the common upsert shape — a daily batch against a big
-    # table) collects its distinct keys once and each file is tested
-    # EXACTLY against its [min, max] via bisect, so scattered keys only
-    # touch their own files; a huge source falls back to the overall
-    # key-range overlap; multi-column keys affect everything. Cap keeps
-    # the driver collect bounded.
-    stats = m.get("stats", {})
-    affected, kept_files = [], []
-    key_set, key_range = None, None
-    if len(keys) == 1:
-        distinct = source.select(keys[0]).where(
-            F.col(keys[0]).isNotNull()
-        ).distinct()
-        if distinct.limit(100_001).count() <= 100_000:
-            key_set = sorted(
-                _norm_stat_value(r[0]) for r in distinct.collect()
-            )
-        else:
-            row = source.agg(
-                F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
-            ).collect()[0]
-            if row["lo"] is not None:
-                key_range = (
-                    _norm_stat_value(row["lo"]),
-                    _norm_stat_value(row["hi"]),
-                )
-    for rel in m["files"]:
-        st = (stats.get(rel) or {}).get(keys[0]) if len(keys) == 1 else None
-        untouched = False
-        if st is not None:
-            if key_set is not None:
-                import bisect
-
-                i = bisect.bisect_left(key_set, st[0])  # noqa: import cached
-                untouched = i >= len(key_set) or key_set[i] > st[1]
-            elif key_range is not None:
-                untouched = st[1] < key_range[0] or st[0] > key_range[1]
-        (kept_files if untouched else affected).append(rel)
-
-    pieces = []
-    if affected:
-        old = spark.read.schema(m["_struct"]).parquet(
-            *(os.path.join(table_dir, f) for f in affected)
+    if len(keys) != 1:
+        affected = list(m["files"])
+    else:
+        key = keys[0]
+        probe = (
+            source.select(key).where(F.col(key).isNotNull()).distinct()
+            .limit(_KEY_SET_CAP + 1).collect()
         )
-        pieces.append(old.join(source.select(*keys).distinct(), keys, "left_anti"))
-    pieces.append(source)
-    rewritten = pieces[0]
-    for p in pieces[1:]:
-        rewritten = rewritten.unionByName(p)
+        if len(probe) <= _KEY_SET_CAP:
+            key_set = sorted(_norm_stat_value(r[0]) for r in probe)
+            stats = m.get("stats", {})
 
-    commit_id, new_rels, new_stats, new_rows = _write_commit_files(
-        rewritten, table_dir
-    )
-    version = m["version"] + 1
-    kept_rows = m.get("file_rows", {})
-    _publish_once(
-        table_dir,
-        {
-            "version": version,
-            "parent": m["version"],
-            "mode": "merge",
-            "schema": m["schema"],
-            "files": kept_files + new_rels,
-            "stats": {
-                **{k: v for k, v in stats.items() if k in set(kept_files)},
-                **new_stats,
-            },
-            "file_rows": {
-                **{k: v for k, v in kept_rows.items() if k in set(kept_files)},
-                **new_rows,
-            },
-        },
-        commit_id,
-    )
-    return version
+            def may_hold_key(rel: str) -> bool:
+                st = (stats.get(rel) or {}).get(key)
+                if st is None:
+                    return True
+                i = bisect.bisect_left(key_set, st[0])
+                return i < len(key_set) and key_set[i] <= st[1]
+
+            affected = [rel for rel in m["files"] if may_hold_key(rel)]
+        else:
+            lo, hi = source.agg(F.min(key), F.max(key)).first()
+            affected = _may_match_files(m, [(key, ">=", lo), (key, "<=", hi)])
+
+    rewritten = source
+    if affected:
+        old = _read_files(spark, table_dir, m, affected)
+        rewritten = old.join(
+            source.select(*keys).distinct(), keys, "left_anti"
+        ).unionByName(source)
+    return _commit_rewrite(table_dir, m, affected, rewritten, "merge")
 
 
 def delete_snapshot_rows(
@@ -688,113 +719,99 @@ def delete_snapshot_rows(
     new ``mode='delete'`` version. Files whose stats prove no row can
     match carry forward BY REFERENCE; only possibly-matching files are
     rewritten without the matching rows."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    from .snapshot_datasource import _file_may_match
-
-    _OPS = {"=": EqualTo, ">": GreaterThan, ">=": GreaterThanOrEqual,
-            "<": LessThan, "<=": LessThanOrEqual, "in": In}
     if not filters:
         raise ValueError("refusing to delete with no filters (use overwrite)")
     m = resolve_snapshot(table_dir)
-    parsed = [
-        _OPS[op]((col,), tuple(v) if op == "in" else v)
-        for col, op, v in filters
-    ]
-    stats = m.get("stats", {})
-    affected = [
-        rel
-        for rel in m["files"]
-        if all(_file_may_match(f, stats.get(rel)) for f in parsed)
-    ]
-    kept_files = [rel for rel in m["files"] if rel not in set(affected)]
-
-    def _cond(df):
-        c = None
-        for col, op, v in filters:
-            cc = (
-                F.col(col).isin(list(v))
-                if op == "in"
-                else {"=": F.col(col) == v, ">": F.col(col) > v,
-                      ">=": F.col(col) >= v, "<": F.col(col) < v,
-                      "<=": F.col(col) <= v}[op]
-            )
-            c = cc if c is None else c & cc
-        return c
-
+    affected = _may_match_files(m, filters)
     if not affected:
         return m["version"]  # nothing can match; no new version needed
-    old = spark.read.schema(m["_struct"]).parquet(
-        *(os.path.join(table_dir, f) for f in affected)
-    )
-    survivors = old.filter(~F.coalesce(_cond(old), F.lit(False)))
-    commit_id, new_rels, new_stats, new_rows = _write_commit_files(
-        survivors, table_dir
-    )
-    version = m["version"] + 1
-    kept_rows = m.get("file_rows", {})
-    _publish_once(
-        table_dir,
-        {
-            "version": version,
-            "parent": m["version"],
-            "mode": "delete",
-            "schema": m["schema"],
-            "files": kept_files + new_rels,
-            "stats": {
-                **{k: v for k, v in stats.items() if k in set(kept_files)},
-                **new_stats,
-            },
-            "file_rows": {
-                **{k: v for k, v in kept_rows.items() if k in set(kept_files)},
-                **new_rows,
-            },
-        },
-        commit_id,
-    )
-    return version
+    old = _read_files(spark, table_dir, m, affected)
+    survivors = old.filter(~F.coalesce(_row_predicate(filters), F.lit(False)))
+    return _commit_rewrite(table_dir, m, affected, survivors, "delete")
 
 
-def _stats_kept_files(m: dict, filters: list[tuple] | None) -> list[str]:
-    """Absolute paths of the manifest's files whose min/max stats cannot
-    rule out every ``(column, op, value)`` conjunct — the file-skipping
-    core shared by :func:`read_snapshot_pruned` and
-    :func:`pruned_file_counts`."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
+# The (column, op, value) conjunct language of read_snapshot_pruned,
+# pruned_file_counts and delete_snapshot_rows: per op, the pushed-filter
+# class the manifest stats are tested against and the row predicate.
+_FILTER_OPS = {
+    "=": (EqualTo, operator.eq),
+    ">": (GreaterThan, operator.gt),
+    ">=": (GreaterThanOrEqual, operator.ge),
+    "<": (LessThan, operator.lt),
+    "<=": (LessThanOrEqual, operator.le),
+    "in": (In, lambda c, v: c.isin(list(v))),
+}
 
-    from .snapshot_datasource import _file_may_match
 
-    ops = {
-        "=": EqualTo,
-        ">": GreaterThan,
-        ">=": GreaterThanOrEqual,
-        "<": LessThan,
-        "<=": LessThanOrEqual,
-        "in": In,
-    }
+def _parse_filters(filters: list[tuple] | None) -> list:
+    """The conjuncts as pushed-filter objects for the per-file stats
+    test — the one validation of the filter language."""
     parsed = []
     for col, op, value in filters or []:
-        if op not in ops:
+        if op not in _FILTER_OPS:
             raise ValueError(f"unsupported op {op!r} (use = > >= < <= in)")
-        parsed.append(ops[op]((col,), tuple(value) if op == "in" else value))
+        parsed.append(
+            _FILTER_OPS[op][0]((col,), tuple(value) if op == "in" else value)
+        )
+    return parsed
+
+
+def _row_predicate(filters: list[tuple]) -> Column:
+    """The conjunction of (already parsed) ``filters`` as a row-level
+    Column."""
+    return functools.reduce(
+        operator.and_,
+        (_FILTER_OPS[op][1](F.col(col), v) for col, op, v in filters),
+    )
+
+
+def _file_may_match(f, stats) -> bool:
+    """Conservative file-skip test: False ONLY when the file's manifest
+    stats PROVE no row can satisfy filter ``f`` (then the file never
+    opens); True on any uncertainty. Sound per-conjunct: Spark pushes a
+    conjunction, so one impossible conjunct kills the whole file."""
+    attr = getattr(f, "attribute", None)
+    if attr is None or len(attr) != 1 or stats is None:
+        return True
+    col_stats = stats.get(attr[0])
+    if not col_stats:
+        return True
+    lo, hi, has_nulls = col_stats
+    if isinstance(f, IsNull):
+        return bool(has_nulls)
+    if isinstance(f, IsNotNull):
+        return True  # stats exist => at least one non-null value
+    try:
+        if isinstance(f, In):
+            vs = [_norm_stat_value(v) for v in f.value if v is not None]
+            return any(lo <= v <= hi for v in vs)
+        v = _norm_stat_value(f.value)
+        if v is None:
+            return True
+        if isinstance(f, (EqualTo, EqualNullSafe)):
+            return lo <= v <= hi
+        if isinstance(f, GreaterThan):
+            return hi > v
+        if isinstance(f, GreaterThanOrEqual):
+            return hi >= v
+        if isinstance(f, LessThan):
+            return lo < v
+        if isinstance(f, LessThanOrEqual):
+            return lo <= v
+    except TypeError:
+        return True  # incomparable types (schema drift) — never skip
+    return True
+
+
+def _may_match_files(m: dict, filters: list[tuple] | None) -> list[str]:
+    """Manifest-relative files of ``m`` whose min/max stats cannot rule
+    out every ``(column, op, value)`` conjunct — the file-skipping core
+    of the pruned reads, DELETE and MERGE's key-range fallback."""
+    parsed = _parse_filters(filters)
     stats = m.get("stats", {})
     return [
-        ap
-        for ap, rel in zip(m["_abs_files"], m["files"])
+        rel
+        for rel in m["files"]
         if all(_file_may_match(f, stats.get(rel)) for f in parsed)
     ]
 
@@ -809,7 +826,7 @@ def pruned_file_counts(
     contract, so layout claims (clustering, ZORDER) can be ASSERTED
     quantitatively instead of taken on faith."""
     m = resolve_snapshot(table_dir, version)
-    return len(_stats_kept_files(m, filters)), len(m["files"])
+    return len(_may_match_files(m, filters)), len(m["files"])
 
 
 def read_snapshot_pruned(
@@ -828,25 +845,31 @@ def read_snapshot_pruned(
     ``commit_snapshot(cluster_by=...)`` writes, which give files
     disjoint ranges. The DataSource tier does this automatically via
     pushFilters; this is the whole-stage-codegen twin."""
-    from pyspark.sql import functions as F
-
     m = resolve_snapshot(table_dir, version)
-    kept = _stats_kept_files(m, filters)
-    if not kept:
-        df = spark.createDataFrame([], m["_struct"])
-    else:
-        df = spark.read.schema(m["_struct"]).parquet(*kept)
-    # re-apply row-level so skipped-file certainty is the only thing
-    # manifest stats ever decide
-    for col, op, value in filters or []:
-        c = F.col(col)
-        df = df.filter(
-            c.isin(list(value))
-            if op == "in"
-            else {"=": c == value, ">": c > value, ">=": c >= value,
-                  "<": c < value, "<=": c <= value}[op]
-        )
-    return df
+    df = _read_files(spark, table_dir, m, _may_match_files(m, filters))
+    return df.filter(_row_predicate(filters)) if filters else df
+
+
+def _added_files(table_dir: str, base: dict, target: dict) -> list[str]:
+    """Manifest-relative files of ``target`` absent from ``base`` —
+    the rows added between them, which is only what the diff means
+    across APPEND lineage: a non-append version in (base, target]
+    raises ValueError, a vacuumed one FileNotFoundError. Shared by
+    :func:`read_snapshot_changes` and the snapshot stream reader."""
+    for v in range(base["version"] + 1, target["version"] + 1):
+        if not os.path.exists(_manifest_path(table_dir, v)):
+            raise FileNotFoundError(
+                f"version {v} was vacuumed: incremental lineage broken — "
+                "read the full version (or restart the stream) instead"
+            )
+        if _load_manifest(table_dir, v)["mode"] != "append":
+            raise ValueError(
+                f"version {v} is not an append: file-set diff does not "
+                "mean added rows — read the full version (or restart the "
+                "stream) instead"
+            )
+    base_files = set(base["files"])
+    return [rel for rel in target["files"] if rel not in base_files]
 
 
 def read_snapshot_changes(
@@ -874,26 +897,9 @@ def read_snapshot_changes(
             f"to_version {target['version']} precedes from_version "
             f"{base['version']}"
         )
-    for v in range(base["version"] + 1, target["version"] + 1):
-        if os.path.exists(_manifest_path(table_dir, v)):
-            if _load_manifest(table_dir, v)["mode"] != "append":
-                raise ValueError(
-                    f"version {v} is not an append: file-set diff does "
-                    "not mean added rows — read the full version instead"
-                )
-        else:
-            raise FileNotFoundError(
-                f"version {v} was vacuumed: incremental lineage broken"
-            )
-    base_files = set(base["files"])
-    added = [
-        ap
-        for ap, rel in zip(target["_abs_files"], target["files"])
-        if rel not in base_files
-    ]
-    if not added:
-        return spark.createDataFrame([], target["_struct"])
-    return spark.read.schema(target["_struct"]).parquet(*added)
+    return _read_files(
+        spark, table_dir, target, _added_files(table_dir, base, target)
+    )
 
 
 def compact_snapshot(

@@ -1483,35 +1483,19 @@ def test_lloyd_fixed_point_job_budget_and_map_only_rounds(
     assert "Scan ExistingRDD" in plan, plan  # over the quantize ckpt
 
 
-def test_clustering_tdiv_matches_spark_div_on_negatives(spark):
-    """clustering._tdiv (the driver-side centroid update division of
-    the round-16 Lloyd rewrite) must reproduce Spark `DIV` exactly —
-    truncation toward zero, NOT Python floor — or a negative-sum
-    centroid coordinate silently shifts by one fixed-point unit."""
+def test_tdiv_matches_spark_div_on_negatives(spark):
+    """_tdiv (operators/clustering.py, also imported by queries_ml for
+    the PQ codebook update — the driver-side Lloyd update division) must
+    reproduce Spark `DIV` exactly — truncation toward zero, NOT Python
+    floor — because centroid sums go negative on negative embedding
+    coordinates and a floor/truncate mismatch silently shifts a
+    codeword by one fixed-point unit."""
+    from opendata_gov_lt_mysql_import_spark import queries_ml
     from opendata_gov_lt_mysql_import_spark.operators.clustering import (
         _tdiv,
     )
 
-    cases = [(7, 2), (-7, 2), (7, -2), (-7, -2), (-1, 3), (1, 3),
-             (-99999, 16), (99999, 16), (0, 5)]
-    rows = spark.sql(
-        "SELECT " + ", ".join(
-            f"CAST({a} AS BIGINT) DIV CAST({b} AS BIGINT) AS r{i}"
-            for i, (a, b) in enumerate(cases)
-        )
-    ).collect()[0]
-    for i, (a, b) in enumerate(cases):
-        assert _tdiv(a, b) == rows[f"r{i}"], (a, b)
-
-
-def test_tdiv_matches_spark_div_on_negatives(spark):
-    """_tdiv (the driver-side Lloyd update division) must reproduce
-    Spark `DIV` exactly — truncation toward zero, NOT Python floor —
-    because centroid sums go negative on negative embedding
-    coordinates and a floor/truncate mismatch silently shifts a
-    codeword by one fixed-point unit."""
-    from opendata_gov_lt_mysql_import_spark.queries_ml import _tdiv
-
+    assert queries_ml._tdiv is _tdiv  # one copy, not two that can drift
     cases = [(7, 2), (-7, 2), (7, -2), (-7, -2), (-1, 3), (1, 3),
              (-99999, 16), (99999, 16), (0, 5)]
     rows = spark.sql(

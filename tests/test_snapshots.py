@@ -723,6 +723,58 @@ class TestSnapshotMergeDelete:
         assert read_snapshot(spark, t).filter(F.col("id") == 5).collect()[0]["v"] == 50
 
 
+    def test_unsupported_filter_op_is_a_typed_error(self, spark, tmp_path):
+        """The (column, op, value) filter language has one validation:
+        an op outside = > >= < <= in raises the same ValueError from
+        DELETE, the pruned read and the pruned file count, and a
+        refused DELETE publishes nothing."""
+        from opendata_gov_lt_mysql_import_spark.sources.snapshots import (
+            delete_snapshot_rows,
+            pruned_file_counts,
+            read_snapshot_pruned,
+        )
+
+        t = self._clustered_table(spark, tmp_path, n=100, files=2)
+        bad = [("id", "!=", 5)]
+        with pytest.raises(ValueError, match="unsupported op '!='"):
+            delete_snapshot_rows(spark, t, bad)
+        with pytest.raises(ValueError, match="unsupported op '!='"):
+            read_snapshot_pruned(spark, t, bad)
+        with pytest.raises(ValueError, match="unsupported op '!='"):
+            pruned_file_counts(t, bad)
+        assert current_version(t) == 0
+
+    def test_merge_key_range_fallback_equals_anti_join_union(
+        self, spark, tmp_path
+    ):
+        """A source with more than 100,000 distinct keys skips the exact
+        key-set probe and scopes the rewrite by the source's key range:
+        the result must still equal read ⟕̸ source keys ∪ source, and
+        files wholly below the range carry forward by reference."""
+        from opendata_gov_lt_mysql_import_spark.sources.snapshots import (
+            merge_snapshot,
+            resolve_snapshot,
+        )
+
+        t = self._clustered_table(spark, tmp_path, n=50_000, files=4)
+        before = resolve_snapshot(t)
+        src = spark.range(40_000, 140_001).withColumn("v", -F.col("id"))
+        want = (
+            read_snapshot(spark, t)
+            .join(src.select("id"), "id", "left_anti")
+            .unionByName(src)
+        )
+        v = merge_snapshot(spark, t, src, on="id")
+        got = read_snapshot(spark, t, version=v)
+        assert got.count() == 140_001
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        after = resolve_snapshot(t)
+        carried = set(before["files"]) & set(after["files"])
+        assert carried  # the low files lie wholly below the source range
+        assert all(before["stats"][f]["id"][1] < 40_000 for f in carried)
+
+
 class TestSnapshotDataFrameWriter:
     """df.write.format('snapshot') — the DataFrame-writer tier."""
 
@@ -969,6 +1021,40 @@ class TestSnapshotStreaming:
         assert read_snapshot(spark, t).count() == 20
         w.commit([msg], batchId=8)  # next batch commits normally
         assert current_version(t) == 2
+
+    def test_vacuumed_version_breaks_incremental_reads(self, spark, tmp_path):
+        """The batch CDC read and the stream reader share one lineage
+        check: a missing manifest inside the range is FileNotFoundError
+        in both, as is a base version that vacuum already removed."""
+        from pyspark.sql.types import StructType
+
+        from opendata_gov_lt_mysql_import_spark.sources.snapshot_datasource import (
+            SnapshotStreamReader,
+        )
+        from opendata_gov_lt_mysql_import_spark.sources.snapshots import (
+            _manifest_path,
+            read_snapshot_changes,
+            vacuum,
+        )
+
+        t = str(tmp_path / "tbl")
+        for i in range(4):  # v0..v3, all appends
+            commit_snapshot(spark.range(i * 10, (i + 1) * 10).coalesce(1), t)
+        reader = SnapshotStreamReader(t, read_snapshot(spark, t).schema)
+        assert len(reader.partitions({"version": 0}, {"version": 3})) == 3
+        os.remove(_manifest_path(t, 2))
+        with pytest.raises(FileNotFoundError, match="version 2 was vacuumed"):
+            read_snapshot_changes(spark, t, 0, 3)
+        with pytest.raises(FileNotFoundError, match="version 2 was vacuumed"):
+            reader.partitions({"version": 0}, {"version": 3})
+        # a real vacuum drops the oldest manifests: the base is gone
+        vacuum(t, keep_last=1, orphan_grace_seconds=0)
+        with pytest.raises(FileNotFoundError):
+            read_snapshot_changes(spark, t, 0)
+        with pytest.raises(FileNotFoundError):
+            SnapshotStreamReader(t, StructType()).partitions(
+                {"version": 0}, {"version": 3}
+            )
 
     def test_stream_rejects_overwrite_lineage(self, spark, tmp_path):
         from pyspark.errors.exceptions.captured import StreamingQueryException

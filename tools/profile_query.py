@@ -184,14 +184,17 @@ def main() -> None:
                         flush=True,
                     )
         if plan_tag:
-            os.makedirs(os.path.join(here, "plans", "r15"), exist_ok=True)
+            plan_dir = os.path.join(
+                here, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r16")
+            )
+            os.makedirs(plan_dir, exist_ok=True)
             df = fn(spark, sf_dir)
             p = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
                 )
             )
-            out = os.path.join(here, "plans", os.environ.get("SPARK_GRAFT_PLAN_DIR", "r16"), f"{name}_{plan_tag}.txt")
+            out = os.path.join(plan_dir, f"{name}_{plan_tag}.txt")
             with open(out, "w") as fh:
                 fh.write(p)
             print(f"  plan -> {out}", flush=True)
