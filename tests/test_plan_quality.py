@@ -1483,6 +1483,27 @@ def test_lloyd_fixed_point_job_budget_and_map_only_rounds(
     assert "Scan ExistingRDD" in plan, plan  # over the quantize ckpt
 
 
+def test_clustering_tdiv_matches_spark_div_on_negatives(spark):
+    """clustering._tdiv (the driver-side centroid update division of
+    the round-16 Lloyd rewrite) must reproduce Spark `DIV` exactly —
+    truncation toward zero, NOT Python floor — or a negative-sum
+    centroid coordinate silently shifts by one fixed-point unit."""
+    from opendata_gov_lt_mysql_import_spark.operators.clustering import (
+        _tdiv,
+    )
+
+    cases = [(7, 2), (-7, 2), (7, -2), (-7, -2), (-1, 3), (1, 3),
+             (-99999, 16), (99999, 16), (0, 5)]
+    rows = spark.sql(
+        "SELECT " + ", ".join(
+            f"CAST({a} AS BIGINT) DIV CAST({b} AS BIGINT) AS r{i}"
+            for i, (a, b) in enumerate(cases)
+        )
+    ).collect()[0]
+    for i, (a, b) in enumerate(cases):
+        assert _tdiv(a, b) == rows[f"r{i}"], (a, b)
+
+
 def test_tdiv_matches_spark_div_on_negatives(spark):
     """_tdiv (operators/clustering.py, also imported by queries_ml for
     the PQ codebook update — the driver-side Lloyd update division) must
