@@ -1,9 +1,12 @@
 """Benchmark harness — times the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": <total sec>, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": <sf>}
+Prints ONE compact JSON line on stdout:
+  {"metric": "...", "value": <total sec>, "unit": "sec", "n": <entries>,
+   "slowest_10": {name: sec, ...}, "sf": <sf>, "full_record": <file>}
+The full record, with every entry's timing and min/med/max spread, is
+written to BENCH_LOCAL.json (gitignored); ``--commit`` also writes it
+to BENCH_COMMITTED.json.
 
 Each query is fully evaluated: a xxhash64 checksum over EVERY output
 column is aggregated, so Catalyst cannot prune the projection expressions
@@ -445,7 +448,8 @@ def main() -> None:
     # parsed:null — the round-5 "compact" line still carried the 81-entry
     # per-query map: 2,915 chars vs the driver's 2,000-char tail). Split
     # the record for real this time: the FULL JSON (with the per-query
-    # map) is written to BENCH_LOCAL.json (committed, judge-readable);
+    # map) is written to BENCH_LOCAL.json (gitignored; --commit copies it
+    # to BENCH_COMMITTED.json);
     # stdout carries ONE compact line — metric/value/unit/n/sf +
     # slowest-10 only, ~700 chars — small enough to survive the window.
     full = {

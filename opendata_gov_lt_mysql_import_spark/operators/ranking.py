@@ -1,4 +1,6 @@
-"""Corpus ranking / data-selection scoring: Okapi BM25 and DSIR.
+"""Corpus ranking / data-selection scoring: Okapi BM25 and DSIR, and
+``argbest``, the best-row-per-group primitive the ANN, PQ, dedup and
+span-keeper operators share.
 
 Beyond-reference LLM-pipeline surface (no counterpart in the reference
 harvester, odgovlt.py — cited per repo convention): retrieval-style
@@ -37,12 +39,14 @@ Scale shape at 100 TB:
 
 from __future__ import annotations
 
+from collections.abc import Mapping, Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .textanalysis import tokens
 
-__all__ = ["bm25_topk", "dsir_importance_weights", "DSIR_WIDTH"]
+__all__ = ["argbest", "bm25_topk", "dsir_importance_weights", "DSIR_WIDTH"]
 
 #: DSIR hashed-feature space: first two hex nibbles of md5(token),
 #: fixed width 256 (the count-min sketch bucket idiom, so the DuckDB
@@ -257,5 +261,75 @@ def dsir_importance_weights(
         .join(scored, "doc_id", "left")
         .select(
             "doc_id", F.coalesce("dsir_fp", F.lit(0).cast("long")).alias("dsir_fp")
+        )
+    )
+
+
+def argbest(
+    df: DataFrame,
+    by: str | Sequence[str],
+    score: str,
+    tie: str,
+    largest: bool = False,
+    carry: Sequence[str] = (),
+    aggs: Mapping[str, Column] | None = None,
+    tie_as: str | None = None,
+    score_as: str | None = None,
+) -> DataFrame:
+    """One row per group of ``by``: the row with the smallest ``score``
+    (the largest with ``largest``), ties broken by the smallest ``tie``.
+
+    Returns ``(*by, tie, [score], *carry, *aggs)``: ``tie`` is renamed
+    ``tie_as`` when given, ``score`` is kept only when ``score_as`` names
+    it, ``carry`` columns ride along from the chosen row, and ``aggs``
+    (name -> aggregate Column) are computed over the whole group in the
+    same aggregate. Builds Column expressions only (no schema lookup).
+
+    The choice is ``F.min(struct(score, tie, *carry))``, or
+    ``F.max(struct(score, -tie, *carry))`` with the tie negated back on
+    output, and equals ``row_number() OVER (PARTITION BY by ORDER BY
+    score ASC|DESC, tie ASC) = 1``:
+
+    * Spark compares structs field by field, left to right, with the
+      ordering its sort uses for each field type, so the aggregate's
+      winner is the first row of that lexicographic order.
+    * Negating an integral ``tie`` is exact and reverses its order, so
+      under ``max`` the smallest tie wins (``tie`` must be integral and
+      never the type's minimum value).
+    * NULL: a NULL field compares below every value, which is where
+      ``ASC`` (NULLS FIRST) and ``DESC`` (NULLS LAST) put it, so a NULL
+      score wins under ``min`` and loses under ``max`` exactly as the
+      window's first row does. ``tie`` must be non-NULL: ``-NULL`` is
+      NULL, so under ``max`` a NULL tie would lose where ``ASC`` puts it
+      first.
+    * NaN: Spark orders NaN above +Infinity and equal to itself, in
+      struct comparison and in sort alike, so a NaN score wins under
+      ``max``/``DESC`` and loses under ``min``/``ASC``; ``-0.0`` and
+      ``0.0`` compare equal in both, and the tie decides.
+    * ``(score, tie)`` must be unique within a group (ids are), or the
+      window's pick among equal rows is arbitrary while the aggregate's
+      is decided by ``carry``. ``carry`` columns sit inside the
+      comparison struct, so they must be of orderable types (no maps).
+
+    Unlike the window, which shuffles and sorts every candidate row,
+    the aggregate is partial: the map side folds each partition's
+    candidates to one row per group before the exchange."""
+    by = [by] if isinstance(by, str) else list(by)
+    aggs = aggs or {}
+    if largest:
+        best = F.max(F.struct(score, (-F.col(tie)).alias(tie), *carry))
+        tie_col = -F.col(f"_m.{tie}")
+    else:
+        best = F.min(F.struct(score, tie, *carry))
+        tie_col = F.col(f"_m.{tie}")
+    return (
+        df.groupBy(*by)
+        .agg(best.alias("_m"), *[c.alias(n) for n, c in aggs.items()])
+        .select(
+            *by,
+            tie_col.alias(tie_as or tie),
+            *([F.col(f"_m.{score}").alias(score_as)] if score_as else []),
+            *[F.col(f"_m.{c}").alias(c) for c in carry],
+            *aggs,
         )
     )

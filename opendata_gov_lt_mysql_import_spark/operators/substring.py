@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .ranking import argbest
 from .textanalysis import tokens
 
 __all__ = [
@@ -98,25 +99,24 @@ def duplicated_spans(
 
     Returns (fp, n_docs, n_occ, keeper_id, keeper_pos): occurrence
     counts plus the span's globally-first occurrence — the copy the
-    removal transform retains. ONE shuffle on fp; the keeper is
-    min(struct(id, pos)) (Spark struct comparison is lexicographic,
-    identical to ORDER BY id, pos)."""
+    removal transform retains: the ``argbest`` row by (id, pos). ONE
+    shuffle on fp."""
     w = span_fingerprints(df, text_col, id_col, k)
     return (
-        w.groupBy("fp")
-        .agg(
-            F.countDistinct("id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_occ"),
-            F.min(F.struct("id", "pos")).alias("_first"),
+        argbest(
+            w,
+            "fp",
+            "id",
+            "pos",
+            aggs={
+                "n_docs": F.countDistinct("id"),
+                "n_occ": F.count(F.lit(1)),
+            },
+            tie_as="keeper_pos",
+            score_as="keeper_id",
         )
         .filter(F.col("n_docs") >= min_docs)
-        .select(
-            "fp",
-            "n_docs",
-            "n_occ",
-            F.col("_first.id").alias("keeper_id"),
-            F.col("_first.pos").alias("keeper_pos"),
-        )
+        .select("fp", "n_docs", "n_occ", "keeper_id", "keeper_pos")
     )
 
 

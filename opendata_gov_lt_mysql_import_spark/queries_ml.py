@@ -9,10 +9,11 @@ pytest-verified against exact recomputation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.clustering import _tdiv
+from .operators.ranking import argbest
 from .operators.dedup import (
     _spread,
     blocked_jaccard_pairs,
@@ -654,22 +655,9 @@ def dedup_keep_best_q(spark: SparkSession, sf: str) -> DataFrame:
             "q",
         )
     )
-    # round-16: keeper + member count in ONE partial-aggregated groupBy
-    # instead of a rank window plus a count window over the same
-    # partitioning — max(struct(q, -doc_id)) ≡ row_number over
-    # (q DESC, doc_id ASC) = 1 (integer negation of the tiebreak id is
-    # exact; ids unique per cluster), and the map side folds each
-    # cluster's members to one row before the exchange (guide §2.3,
-    # the batch-F transform).
-    return (
-        labeled.groupBy("cluster")
-        .agg(
-            F.max(
-                F.struct(F.col("q"), (-F.col("doc_id")).alias("nid"))
-            ).alias("_m"),
-            F.count(F.lit(1)).alias("n_members"),
-        )
-        .select("cluster", (-F.col("_m.nid")).alias("keep_id"), "n_members")
+    return argbest(
+        labeled, "cluster", "q", "doc_id", largest=True,
+        aggs={"n_members": F.count(F.lit(1))}, tie_as="keep_id",
     )
 
 
@@ -3673,27 +3661,11 @@ def semantic_decontaminate_q(spark: SparkSession, sf: str) -> DataFrame:
     scored = tr.crossJoin(F.broadcast(ev)).select(
         "vec_id", "eval_id", cosine(F.col("embedding"), F.col("ee")).alias("sim")
     ).filter(F.col("sim") >= 0.3)
-    # round-16: argmax as a partial-aggregated lexicographic max-struct,
-    # not a window — max(struct(sim, -eval_id)) ≡ row_number over
-    # (sim DESC, eval_id ASC) = 1 (integer negation of the tiebreak id
-    # is exact; eval ids unique per vec_id), and the surviving
-    # (vec_id, eval) match rows fold map-side to one row per vec_id
-    # before the exchange (guide §2.3, the batch-F transform). The
-    # comparison runs on the UNROUNDED sim, exactly as the window did;
-    # rounding stays in the output projection.
-    return (
-        scored.groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("sim"), (-F.col("eval_id")).alias("nid"))
-            ).alias("_m")
-        )
-        .select(
-            "vec_id",
-            (-F.col("_m.nid")).alias("eval_id"),
-            F.round(F.col("_m.sim"), 4).alias("sim"),
-        )
-    )
+    # The comparison runs on the UNROUNDED sim, exactly as the window
+    # did; rounding stays in the output projection.
+    return argbest(
+        scored, "vec_id", "sim", "eval_id", largest=True, score_as="sim"
+    ).select("vec_id", "eval_id", F.round(F.col("sim"), 4).alias("sim"))
 
 
 @query(
@@ -6055,21 +6027,12 @@ def corpus_datasheet_q(spark: SparkSession, sf: str) -> DataFrame:
         F.sum((F.col("n_tokens") == 0).cast("int")).cast("long")
         .alias("n_empty"),
     )
-    lc = tok.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("c"))
-    # round-16: top language as a partial-aggregated min-struct, not a
-    # window — min(struct(-c, lang)) ≡ row_number over (c DESC,
-    # lang ASC) = 1 (integer negation of the count is exact; the
-    # string tiebreak stays ascending), folding the per-(source, lang)
-    # rows map-side before the source exchange (guide §2.3).
-    top = (
-        lc.groupBy("source")
-        .agg(
-            F.min(
-                F.struct((-F.col("c")).alias("nc"), F.col("lang"))
-            ).alias("_m")
-        )
-        .select("source", F.col("_m.lang").alias("top_lang"))
+    # top language: min over the NEGATED count (exact on integers), so
+    # the string tiebreak stays ascending
+    lc = tok.groupBy("source", "lang").agg(
+        (-F.count(F.lit(1))).alias("nc")
     )
+    top = argbest(lc, "source", "nc", "lang", tie_as="top_lang")
     return per.join(F.broadcast(top), "source").select(
         "source",
         "n_docs",
@@ -7654,34 +7617,12 @@ def ann_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     piv = emb.filter(F.col("vec_id").between(1, 16)).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("ce")
     )
-    # round-16: coarse argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -cid)) ≡ row_number over (d DESC, cid ASC)
-    # = 1 (integer negation of the tiebreak id is exact; cids unique per
-    # vec_id), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform).
-    asg = (
-        emb.crossJoin(F.broadcast(piv))
-        .select(
-            "vec_id",
-            "cid",
-            dot(F.col("embedding"), F.col("ce")).alias("d"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("d"), (-F.col("cid")).alias("nc"))
-            ).alias("_m")
-        )
-        .select("vec_id", (-F.col("_m.nc")).alias("cid"))
+    asg = _assign_cells(
+        emb, piv, dot(F.col("embedding"), F.col("ce")), "cid", True
     )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("d"), F.asc("cid"))
-    probe = (
-        qs.crossJoin(F.broadcast(piv))
-        .select("qid", "cid", dot(F.col("qe"), F.col("ce")).alias("d"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 2)
-        .select("qid", "cid")
-    )
+    probe = _probe_cells(
+        qs, piv, dot(F.col("qe"), F.col("ce")), "cid", 2, True
+    ).select("qid", "cid")
     w_top = Window.partitionBy("qid").orderBy(
         F.desc("sim"), F.asc("vec_id")
     )
@@ -8077,27 +8018,19 @@ def _pq_dist():
 def _pq_assign(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, m, cid, d): every subvector's nearest codeword (squared
     L2, codeword-id tiebreak) from the data-as-codebook rows 1..8 —
-    shared by the quantizer and the ADC search. Round 15: the argmin is
-    a partial-aggregated min over struct(d, cid) instead of a
-    row_number window — bit-identical choice (lexicographic struct
-    comparison ≡ ORDER BY d, cid with cid unique per group), but the
-    map side reduces the 8 candidate rows per (vec_id, m) to ONE before
-    the exchange (guide §2.3: aggregate before you shuffle)."""
+    shared by the quantizer and the ADC search."""
     sub = _pq_sub(spark, sf)
     cb = sub.filter(F.col("vec_id").between(1, 8)).select(
         F.col("vec_id").alias("cid"), "m", F.col("sv").alias("cv")
     )
-    return (
-        sub.join(F.broadcast(cb), "m")
-        .select("vec_id", "m", "cid", _pq_dist().alias("d"))
-        .groupBy("vec_id", "m")
-        .agg(F.min(F.struct("d", "cid")).alias("b"))
-        .select(
-            "vec_id",
-            "m",
-            F.col("b.cid").alias("cid"),
-            F.col("b.d").alias("d"),
-        )
+    return argbest(
+        sub.join(F.broadcast(cb), "m").select(
+            "vec_id", "m", "cid", _pq_dist().alias("d")
+        ),
+        ["vec_id", "m"],
+        "d",
+        "cid",
+        score_as="d",
     )
 
 
@@ -8529,22 +8462,7 @@ def ann_ivfadc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
         .limit(2)
         .select("pid")
     )
-    # round-16: coarse argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -pid)) ≡ row_number over (d DESC, pid ASC)
-    # = 1 (integer negation of the tiebreak id is exact; pids unique per
-    # vec_id), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform).
-    ivf = (
-        emb64.crossJoin(F.broadcast(piv))
-        .select("vec_id", "pid", dot(F.col("e"), F.col("pe")).alias("d"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("d"), (-F.col("pid")).alias("np"))
-            ).alias("_m")
-        )
-        .select("vec_id", (-F.col("_m.np")).alias("pid"))
-    )
+    ivf = _assign_cells(emb64, piv, dot(F.col("e"), F.col("pe")), "pid", True)
     members = ivf.join(F.broadcast(probe), "pid").filter(
         F.col("vec_id") != 0
     )
@@ -8666,30 +8584,10 @@ def ivfadc_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     qs = emb64.join(F.broadcast(panel), "vec_id").select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )
-    # round-16: coarse argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -pid)) ≡ row_number over (d DESC, pid ASC)
-    # = 1 (integer negation of the tiebreak id is exact; pids unique per
-    # vec_id), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform).
-    ivf = (
-        emb64.crossJoin(F.broadcast(piv))
-        .select("vec_id", "pid", dot(F.col("e"), F.col("pe")).alias("d"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("d"), (-F.col("pid")).alias("np"))
-            ).alias("_m")
-        )
-        .select("vec_id", (-F.col("_m.np")).alias("pid"))
-    )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("d"), F.asc("pid"))
-    probe = (
-        qs.crossJoin(F.broadcast(piv))
-        .select("qid", "pid", dot(F.col("qe"), F.col("pe")).alias("d"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 2)
-        .select("qid", "pid")
-    )
+    ivf = _assign_cells(emb64, piv, dot(F.col("e"), F.col("pe")), "pid", True)
+    probe = _probe_cells(
+        qs, piv, dot(F.col("qe"), F.col("pe")), "pid", 2, True
+    ).select("qid", "pid")
     members = ivf.join(F.broadcast(probe), "pid").filter(
         F.col("vec_id") != F.col("qid")
     ).select("qid", "vec_id")
@@ -10376,29 +10274,8 @@ def ann_ivf_occupancy_drift_q(spark: SparkSession, sf: str) -> DataFrame:
     piv = emb64.filter(F.col("vec_id").between(1, 16)).select(
         F.col("vec_id").alias("pid"), F.col("e").alias("pe")
     )
-
-    # round-16: cell argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -pid)) ≡ row_number over (d DESC, pid ASC)
-    # = 1 (integer negation of the tiebreak id is exact; pids unique per
-    # vec_id), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform
-    # applied to the audit's inline ah/ab blocks — round-15 verdict
-    # item 4).
-    def assign(df):
-        return (
-            df.crossJoin(F.broadcast(piv))
-            .select("vec_id", "pid", dot(F.col("e"), F.col("pe")).alias("d"))
-            .groupBy("vec_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("d"), (-F.col("pid")).alias("np"))
-                ).alias("_m")
-            )
-            .select("vec_id", (-F.col("_m.np")).alias("pid"))
-        )
-
-    ah = assign(emb64)
-    ab = assign(batch)
+    ah = _assign_cells(emb64, piv, dot(F.col("e"), F.col("pe")), "pid", True)
+    ab = _assign_cells(batch, piv, dot(F.col("e"), F.col("pe")), "pid", True)
     h = ah.groupBy("pid").agg(F.count(F.lit(1)).alias("ch"))
     b = ab.groupBy("pid").agg(F.count(F.lit(1)).alias("cb"))
     rep = (
@@ -10547,6 +10424,49 @@ def _l2_col(a, b):
     )
 
 
+def _assign_cells(
+    df: DataFrame, piv: DataFrame, d: Column, key: str, largest: bool
+) -> DataFrame:
+    """(vec_id, key): each vector's IVF cell — the pivot (id column
+    ``key`` of ``piv``) at the smallest distance ``d`` (the largest
+    similarity with ``largest``), ties to the smaller pivot id. The
+    pivots are broadcast, so the corpus never shuffles for the cross
+    join; ``argbest`` folds the N × n_cells candidates map-side."""
+    return argbest(
+        df.crossJoin(F.broadcast(piv)).select("vec_id", key, d.alias("d")),
+        "vec_id",
+        "d",
+        key,
+        largest=largest,
+    )
+
+
+def _probe_cells(
+    qs: DataFrame,
+    piv: DataFrame,
+    d: Column,
+    key: str,
+    n: int,
+    largest: bool,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Each query's ``n`` nearest IVF cells: rows (qid, key, *carry, d,
+    rn) of the broadcast ``qs`` × ``piv`` cross join with rank ``rn``
+    <= ``n`` under (d ASC, or DESC with ``largest``; key ASC). A window,
+    not ``argbest``: the multi-probe callers need the top n, not the
+    top 1."""
+    from pyspark.sql import Window
+
+    order = F.desc("d") if largest else F.asc("d")
+    w = Window.partitionBy("qid").orderBy(order, F.asc(key))
+    return (
+        qs.crossJoin(F.broadcast(piv))
+        .select("qid", key, *carry, d.alias("d"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+    )
+
+
 def _subspace_explode(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
     """Explode a 64-dim array column into (…, m, out_col) 16-dim
     subvectors — the ``_pq_sub`` slicing, reusable on any frame."""
@@ -10571,38 +10491,20 @@ def _pq_encode_with(sub: DataFrame, cb: DataFrame) -> DataFrame:
     (`_pq_code_frames`); INGEST must encode new vectors against the
     FROZEN served codebook or the ADC lookup tables go stale — this
     helper is that shared encode. Extra columns on ``sub`` (e.g. the
-    cell id) ride along through the assignment. Round 15: the argmin
-    is a partial-aggregated min over struct(d, cid, ride-alongs)
-    instead of a row_number window — bit-identical choice ((d, cid) is
-    unique per group so the ride-along suffix never breaks a tie, and
-    every ride-along is constant within its (vec_id, m) group), but
-    the map side reduces the 8 candidates per subvector to ONE row
-    before the exchange (guide §2.3). CONTRACT tightened by that
-    rewrite (round-15 advisory): ride-along columns must be of
-    ORDERABLE types — they sit inside the comparison struct, so a
-    map-typed or otherwise non-comparable column that rode through the
-    old window fails analysis here. Current callers pass ids (pid,
-    cell ids) only; ship a non-orderable ride-along by joining it back
-    on (vec_id, m) after the assignment instead."""
+    cell id) ride along through the assignment; they must be of
+    orderable types (``argbest`` carry columns), so ship a
+    non-orderable one by joining it back on (vec_id, m) after the
+    assignment instead."""
     keep = [c for c in sub.columns if c != "sv"]
-    others = [c for c in keep if c not in ("vec_id", "m")]
-    return (
-        sub.join(F.broadcast(cb), "m")
-        .select(*keep, "cid", _pq_dist().alias("d"))
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min(
-                F.struct("d", "cid", *[F.col(c) for c in others])
-            ).alias("b")
-        )
-        .select(
-            *[
-                F.col(c) if c in ("vec_id", "m") else F.col(f"b.{c}").alias(c)
-                for c in keep
-            ],
-            F.col("b.cid").alias("cid"),
-        )
-    )
+    return argbest(
+        sub.join(F.broadcast(cb), "m").select(
+            *keep, "cid", _pq_dist().alias("d")
+        ),
+        ["vec_id", "m"],
+        "d",
+        "cid",
+        carry=[c for c in keep if c not in ("vec_id", "m")],
+    ).select(*keep, "cid")
 
 
 def _pq_code_frames(
@@ -10659,18 +10561,8 @@ def _rescl_frames(
         F.col("vec_id").alias("pid"), F.col("e").alias("pe")
     )
     cl = _rescl_corpus(emb64, piv0)
-    # Round 15: coarse assignment as a partial-aggregated min over
-    # struct(d, pid) instead of a row_number window — bit-identical
-    # choice (lexicographic ≡ ORDER BY d, pid), 16× fewer rows into
-    # the exchange (guide §2.3).
-    asgc = (
-        cl.crossJoin(F.broadcast(piv0))
-        .select(
-            "vec_id", "pid", _l2_col(F.col("e"), F.col("pe")).alias("d")
-        )
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d", "pid")).alias("b"))
-        .select("vec_id", F.col("b.pid").alias("pid"))
+    asgc = _assign_cells(
+        cl, piv0, _l2_col(F.col("e"), F.col("pe")), "pid", False
     )
     res = (
         asgc.join(cl, "vec_id")
@@ -11098,17 +10990,8 @@ def _ivfadc_batch_codes(
     assigned pivot, `_pq_encode_with` against the frozen codebook.
     Batch-sized cluster work only — shared by the warm ingest and its
     streaming twin (each micro-batch runs exactly this)."""
-    # round-16: coarse argmin as a partial-aggregated min-struct, not a
-    # window — min(struct(d, pid)) ≡ row_number over (d ASC, pid ASC)
-    # = 1 (lexicographic struct comparison; pids unique per vec_id),
-    # folding the batch × n_cells candidate rows map-side before the
-    # exchange (guide §2.3, the batch-F transform).
-    basg = (
-        bcl.crossJoin(F.broadcast(piv0))
-        .select("vec_id", "pid", _l2_col(F.col("e"), F.col("pe")).alias("d"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d", "pid")).alias("_m"))
-        .select("vec_id", F.col("_m.pid").alias("pid"))
+    basg = _assign_cells(
+        bcl, piv0, _l2_col(F.col("e"), F.col("pe")), "pid", False
     )
     bres = (
         basg.join(bcl, "vec_id")
@@ -11263,17 +11146,10 @@ def _ivfadc_serve_batched(
     from .sources.snapshots import read_snapshot
 
     rcb = read_snapshot(spark, dirs["codebook"], version=dirs["codebook_version"])
-    w_probe = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("pid"))
-    probe = (
-        qs.crossJoin(F.broadcast(piv0))
-        .select(
-            "qid", "pid", "pe", "qe",
-            _l2_col(F.col("qe"), F.col("pe")).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 2)
-        .select("qid", "pid", "pe", "qe")
-    )
+    probe = _probe_cells(
+        qs, piv0, _l2_col(F.col("qe"), F.col("pe")), "pid", 2, False,
+        carry=("pe", "qe"),
+    ).select("qid", "pid", "pe", "qe")
     qres = probe.select(
         "qid",
         "pid",
@@ -11610,17 +11486,10 @@ def ivfadc_residual_gain_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     qs = cl.join(F.broadcast(panel), "vec_id").select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )
-    w_probe = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("pid"))
-    probe = (
-        qs.crossJoin(F.broadcast(piv0))
-        .select(
-            "qid", "pid", "pe", "qe",
-            _l2_col(F.col("qe"), F.col("pe")).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 2)
-        .select("qid", "pid", "pe", "qe")
-    )
+    probe = _probe_cells(
+        qs, piv0, _l2_col(F.col("qe"), F.col("pe")), "pid", 2, False,
+        carry=("pe", "qe"),
+    ).select("qid", "pid", "pe", "qe")
     members = (
         asgc.join(F.broadcast(probe.select("qid", "pid")), "pid")
         .filter(F.col("vec_id") != F.col("qid"))
@@ -11818,31 +11687,12 @@ def ivfadc_nprobe_sweep_q(spark: SparkSession, sf: str) -> DataFrame:
     qs = emb64.join(F.broadcast(panel), "vec_id").select(
         F.col("vec_id").alias("qid"), F.col("e").alias("qe")
     )
-    # round-16: coarse argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -pid)) ≡ row_number over (d DESC, pid ASC)
-    # = 1 (integer negation of the tiebreak id is exact; pids unique per
-    # vec_id), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform).
-    ivf = (
-        emb64.crossJoin(F.broadcast(piv))
-        .select("vec_id", "pid", dot(F.col("e"), F.col("pe")).alias("d"))
-        .groupBy("vec_id")
-        .agg(
-            F.max(
-                F.struct(F.col("d"), (-F.col("pid")).alias("np"))
-            ).alias("_m")
-        )
-        .select("vec_id", (-F.col("_m.np")).alias("pid"))
-    )
+    ivf = _assign_cells(emb64, piv, dot(F.col("e"), F.col("pe")), "pid", True)
     nps = F.array(
         F.lit(1).cast("long"), F.lit(2).cast("long"), F.lit(4).cast("long")
     )
-    w_probe = Window.partitionBy("qid").orderBy(F.desc("d"), F.asc("pid"))
     probe_np = (
-        qs.crossJoin(F.broadcast(piv))
-        .select("qid", "pid", dot(F.col("qe"), F.col("pe")).alias("d"))
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 4)
+        _probe_cells(qs, piv, dot(F.col("qe"), F.col("pe")), "pid", 4, True)
         .withColumn("nprobe", F.explode(nps))
         .filter(F.col("rn") <= F.col("nprobe"))
         .select("nprobe", "qid", "pid")
@@ -12031,17 +11881,10 @@ def ivfadc_residual_nprobe_sweep_q(
     nps = F.array(
         F.lit(1).cast("long"), F.lit(2).cast("long"), F.lit(4).cast("long")
     )
-    w_probe = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("pid"))
-    probe = (
-        qs.crossJoin(F.broadcast(piv0))
-        .select(
-            "qid", "pid", "pe", "qe",
-            _l2_col(F.col("qe"), F.col("pe")).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= 4)
-        .select("qid", "pid", "pe", "qe", "rn")
-    )
+    probe = _probe_cells(
+        qs, piv0, _l2_col(F.col("qe"), F.col("pe")), "pid", 4, False,
+        carry=("pe", "qe"),
+    ).select("qid", "pid", "pe", "qe", "rn")
     probe_np = (
         probe.select("qid", "pid", "rn")
         .withColumn("nprobe", F.explode(nps))
@@ -12300,26 +12143,9 @@ def ann_ivf_recall_after_drift_q(spark: SparkSession, sf: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
 
-    # round-16: cell argmax as a partial-aggregated max-struct, not a
-    # window — max(struct(d, -pid)) ≡ row_number over (d DESC, pid ASC)
-    # = 1 (all-BIGINT: the integer dot and the negated tiebreak are
-    # exact), folding the N×16 candidate rows map-side to one row per
-    # vector before the exchange (guide §2.3, the batch-F transform
-    # applied to the drift audit's inline assignment — round-15
-    # verdict item 4).
     def assign(piv_df):
-        return (
-            c2.crossJoin(F.broadcast(piv_df))
-            .select(
-                "vec_id", "pid", int_dot(F.col("ie"), F.col("pe")).alias("d")
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("d"), (-F.col("pid")).alias("np"))
-                ).alias("_m")
-            )
-            .select("vec_id", (-F.col("_m.np")).alias("pid"))
+        return _assign_cells(
+            c2, piv_df, int_dot(F.col("ie"), F.col("pe")), "pid", True
         )
 
     af = assign(fpiv)
@@ -12350,16 +12176,9 @@ def ann_ivf_recall_after_drift_q(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def probe(piv_df):
-        w = Window.partitionBy("qid").orderBy(F.desc("d"), F.asc("pid"))
-        return (
-            qs.crossJoin(F.broadcast(piv_df))
-            .select(
-                "qid", "pid", int_dot(F.col("qe"), F.col("pe")).alias("d")
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 2)
-            .select("qid", "pid")
-        )
+        return _probe_cells(
+            qs, piv_df, int_dot(F.col("qe"), F.col("pe")), "pid", 2, True
+        ).select("qid", "pid")
 
     def mem(asg_df, probe_df):
         return (
@@ -12574,6 +12393,10 @@ def ngram_jaccard_verify_grams_index_q(
 
 _GRAM_WARM_DIRS: dict[str, dict[str, object]] = {}
 _GRAM_WARM_LOCK = _threading.Lock()
+# Files per build and per ingest commit of the gram table: fixed, not
+# the core count, so the ingest version holds 2 × 8 files on every
+# machine and the compaction to 8 id-clustered files always shrinks it.
+_GRAM_WARM_FILES = 8
 
 
 def _gram_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
@@ -12601,8 +12424,10 @@ def _gram_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
 
         root = _warm_scratch_dir("gram_warm_")
         dirs: dict[str, object] = {"grams": os.path.join(root, "grams")}
-        base = _spread(_documents_with_dups(spark, sf)).filter(
-            F.col("doc_id") < 1000000
+        base = (
+            _documents_with_dups(spark, sf)
+            .repartition(_GRAM_WARM_FILES)
+            .filter(F.col("doc_id") < 1000000)
         )
         dirs["grams_base_version"] = commit_snapshot(
             gram_hash_index(base, "text", "doc_id", n=2), dirs["grams"]
@@ -12627,8 +12452,10 @@ def _gram_warm_ingest(spark: SparkSession, sf: str) -> dict[str, object]:
         from .operators.dedup import gram_hash_index
         from .sources.snapshots import commit_snapshot_idempotent
 
-        batch = _spread(_documents_with_dups(spark, sf)).filter(
-            F.col("doc_id") >= 1000000
+        batch = (
+            _documents_with_dups(spark, sf)
+            .repartition(_GRAM_WARM_FILES)
+            .filter(F.col("doc_id") >= 1000000)
         )
         dirs["grams_ingest_version"] = commit_snapshot_idempotent(
             gram_hash_index(batch, "text", "doc_id", n=2),
@@ -13013,30 +12840,12 @@ def incremental_semantic_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
         .select("new_id", "hist_id", cos.alias("cos"))
         .filter(F.col("cos") >= 0.3)
     )
-    # round-16: the top-1 window and the hit count used to consume the
-    # checkpointed hit set through TWO new_id passes (a Window
-    # shuffle+sort and a groupBy). ONE partial-aggregated groupBy
-    # computes both: max(struct(cos, -hist_id)) ≡ the (cos DESC,
-    # hist_id ASC) row_number() = 1 choice (integer negation of the
-    # tiebreak id is exact; hist ids unique per new_id) and the count
-    # rides the same aggregate. With a single consumer the eager
-    # checkpoint became a pure barrier and is dropped — the screen is
-    # computed once inside the one remaining pass (guide §2.3
-    # aggregate-before-shuffle; §5 cache discipline).
-    best = (
-        hits.groupBy("new_id")
-        .agg(
-            F.max(
-                F.struct(F.col("cos"), (-F.col("hist_id")).alias("nh"))
-            ).alias("_m"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .select(
-            "new_id",
-            (-F.col("_m.nh")).alias("nearest_hist_id"),
-            F.col("_m.cos").alias("best_cos"),
-            "_n",
-        )
+    # one pass for the nearest history hit and the hit count: the hit
+    # set has a single consumer, so it needs no checkpoint
+    best = argbest(
+        hits, "new_id", "cos", "hist_id", largest=True,
+        aggs={"_n": F.count(F.lit(1))},
+        tie_as="nearest_hist_id", score_as="best_cos",
     )
     return (
         batch.select(F.col("vec_id").alias("new_id"), "label")
@@ -13215,19 +13024,12 @@ def _semdedup_ivf_screen(
         .select(F.col("vec_id").alias("hist_id"), "pid")
     )
 
-    # argmin as a lexicographic min-struct AGGREGATE, not a window:
-    # min(struct(d, pid)) ≡ row_number over (d asc, pid asc) = 1 —
-    # identical values and tie-break — but partial aggregation folds
-    # the batch × n_cells candidate rows map-side, so no full-width
-    # shuffle+sort grows with the retrained cell count (measured on
-    # the retrained falsifier: the window variant's assignment cost
-    # tracked n_cells)
-    basg = (
-        batch.crossJoin(F.broadcast(piv0))
-        .select("vec_id", "pid", _l2_col(F.col("e"), F.col("pe")).alias("d"))
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d", "pid")).alias("_m"))
-        .select("vec_id", F.col("_m.pid").alias("pid"))
+    # an aggregate, not a window: partial aggregation folds the batch ×
+    # n_cells candidate rows map-side, so no full-width shuffle+sort
+    # grows with the retrained cell count (measured on the retrained
+    # falsifier: the window variant's assignment cost tracked n_cells)
+    basg = _assign_cells(
+        batch, piv0, _l2_col(F.col("e"), F.col("pe")), "pid", False
     )
 
     def _dot(a, b):
@@ -13270,30 +13072,12 @@ def _semdedup_ivf_screen(
         .select("new_id", "hist_id", cos.alias("cos"))
         .filter(F.col("cos") >= 0.3)
     )
-    # round-16: the top-1 window and the hit count used to consume the
-    # checkpointed hit set through TWO new_id passes (a Window
-    # shuffle+sort and a groupBy). ONE partial-aggregated groupBy
-    # computes both: max(struct(cos, -hist_id)) ≡ the (cos DESC,
-    # hist_id ASC) row_number() = 1 choice (integer negation of the
-    # tiebreak id is exact; hist ids unique per new_id) and the count
-    # rides the same aggregate. With a single consumer the eager
-    # checkpoint became a pure barrier and is dropped — the in-cell
-    # screen is computed once inside the one remaining pass (guide
-    # §2.3 aggregate-before-shuffle; §5 cache discipline).
-    best = (
-        hits.groupBy("new_id")
-        .agg(
-            F.max(
-                F.struct(F.col("cos"), (-F.col("hist_id")).alias("nh"))
-            ).alias("_m"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .select(
-            "new_id",
-            (-F.col("_m.nh")).alias("nearest_hist_id"),
-            F.col("_m.cos").alias("best_cos"),
-            "_n",
-        )
+    # one pass for the nearest history hit and the hit count: the hit
+    # set has a single consumer, so it needs no checkpoint
+    best = argbest(
+        hits, "new_id", "cos", "hist_id", largest=True,
+        aggs={"_n": F.count(F.lit(1))},
+        tie_as="nearest_hist_id", score_as="best_cos",
     )
     return (
         batch.select(F.col("vec_id").alias("new_id"))
@@ -13499,27 +13283,6 @@ def _il2_col(a, b):
     )
 
 
-def _int_argmin_assign(av: DataFrame, piv: DataFrame) -> DataFrame:
-    """Per-vec_id nearest pivot by exact integer L2 (pid tiebreak) —
-    the retrain's assignment primitive, broadcast over the (small)
-    pivot frame so the corpus never shuffles for an assignment. The
-    argmin is a lexicographic min-struct aggregate (≡ the row_number
-    window with the same (d, pid) ordering, bit-for-bit) so partial
-    aggregation folds the corpus × n_cells candidates map-side
-    instead of shuffling and sorting them — the term that would
-    otherwise grow with the retrained cell count."""
-    return (
-        av.select("vec_id", "ie")
-        .crossJoin(F.broadcast(piv))
-        .select(
-            "vec_id", "pid", _il2_col(F.col("ie"), F.col("pe")).alias("d")
-        )
-        .groupBy("vec_id")
-        .agg(F.min(F.struct("d", "pid")).alias("_m"))
-        .select("vec_id", F.col("_m.pid").alias("pid"))
-    )
-
-
 def _ivf_retrain_corpus(spark: SparkSession, sf: str, dirs: dict) -> DataFrame:
     """The drifted corpus (history ∪ the ingested jittered batch) with
     BOTH views the retrain needs — doubles (``e``, for residual encode)
@@ -13625,7 +13388,10 @@ def _ivf_retrain_locked(spark: SparkSession, sf: str, dirs: dict) -> dict:
     seeds = av.filter(F.col("vec_id").between(1, n_cells)).select(
         F.col("vec_id").alias("pid"), F.col("ie").alias("pe")
     )
-    a0 = _int_argmin_assign(av, seeds)
+    a0 = _assign_cells(
+        av.select("vec_id", "ie"), seeds,
+        _il2_col(F.col("ie"), F.col("pe")), "pid", False,
+    )
     lloyd = (
         a0.join(av, "vec_id")
         .select("pid", F.posexplode("ie").alias("k", "val"))
@@ -13652,7 +13418,10 @@ def _ivf_retrain_locked(spark: SparkSession, sf: str, dirs: dict) -> dict:
             "pe"
         ),
     )
-    a1 = _int_argmin_assign(av, pivn)
+    a1 = _assign_cells(
+        av.select("vec_id", "ie"), pivn,
+        _il2_col(F.col("ie"), F.col("pe")), "pid", False,
+    )
     res = (
         a1.join(av, "vec_id")
         .join(F.broadcast(pivd), "pid")

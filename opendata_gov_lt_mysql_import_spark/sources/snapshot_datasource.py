@@ -86,7 +86,7 @@ from pyspark.sql.types import StructType
 
 from .snapshots import (
     _added_files,
-    _collect_file_stats,
+    _file_footer,
     _file_may_match,
     _txn_landed,
     current_version,
@@ -405,20 +405,19 @@ def _write_arrow_file(iterator, table_dir: str, rel: str) -> SnapshotFileMessage
     import pyarrow.parquet as pq
 
     abs_path = os.path.join(table_dir, rel)
-    writer, n = None, 0
+    writer = None
     try:
         for batch in iterator:
             if writer is None:
                 os.makedirs(os.path.dirname(abs_path), exist_ok=True)
                 writer = pq.ParquetWriter(abs_path, batch.schema)
             writer.write_batch(batch)
-            n += batch.num_rows
     finally:
         if writer is not None:
             writer.close()
     if writer is None:
         return SnapshotFileMessage()
-    return SnapshotFileMessage(rel, _collect_file_stats(abs_path), n)
+    return SnapshotFileMessage(rel, *_file_footer(abs_path))
 
 
 def _written_files(messages) -> tuple[list, dict, dict]:

@@ -290,13 +290,19 @@ def _norm_stat_value(v):
     return v
 
 
-def _collect_file_stats(abs_path: str) -> dict:
-    """Per-file column stats for manifest-level file skipping:
-    {col: [min, max, has_nulls]} over the file's row groups, only for
-    stats-safe scalar types — strings are excluded (parquet footer
-    min/max may be truncated), floats are excluded (NaN ordering
-    differs between engines), nested paths have no scalar order. A
-    column absent from the dict means 'unknown — never skip on it'."""
+def _file_footer(abs_path: str) -> tuple[dict, int]:
+    """(column stats, row count) from one read of a parquet footer.
+
+    The stats drive manifest-level file skipping: {col: [min, max,
+    has_nulls]} over the file's row groups, only for stats-safe scalar
+    types — strings are excluded (parquet footer min/max may be
+    truncated), floats are excluded (NaN ordering differs between
+    engines), nested paths have no scalar order. A column absent from
+    the dict means 'unknown — never skip on it'. The row count is
+    recorded per file in the manifest so table cardinality becomes
+    MANIFEST ARITHMETIC (:func:`snapshot_row_count`): at 100 TB, "how
+    big is this corpus" must never cost a scan (Delta's numRecords /
+    Iceberg's record_count play the same role)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(abs_path).metadata
@@ -326,19 +332,8 @@ def _collect_file_stats(abs_path: str) -> dict:
                 cur[0] = min(cur[0], lo)
                 cur[1] = max(cur[1], hi)
                 cur[2] = cur[2] or nulls
-    return {k: v for k, v in out.items() if v is not None}
-
-
-def _file_row_count(abs_path: str) -> int:
-    """Row count from the parquet footer — free at commit time (the
-    stats pass opens the footer anyway) and recorded per file in the
-    manifest so table cardinality becomes MANIFEST ARITHMETIC
-    (:func:`snapshot_row_count`): at 100 TB, "how big is this corpus"
-    must never cost a scan (Delta's numRecords / Iceberg's
-    record_count play the same role)."""
-    import pyarrow.parquet as pq
-
-    return int(pq.ParquetFile(abs_path).metadata.num_rows)
+    stats = {k: v for k, v in out.items() if v is not None}
+    return stats, int(md.num_rows)
 
 
 def snapshot_row_count(table_dir: str, version: int | None = None) -> int | None:
@@ -426,12 +421,9 @@ def _write_commit_files(
         for f in os.listdir(data_dir)
         if f.endswith(".parquet")
     )
-    stats = {
-        rel: _collect_file_stats(os.path.join(table_dir, rel)) for rel in rels
-    }
-    rows = {
-        rel: _file_row_count(os.path.join(table_dir, rel)) for rel in rels
-    }
+    footers = {rel: _file_footer(os.path.join(table_dir, rel)) for rel in rels}
+    stats = {rel: f[0] for rel, f in footers.items()}
+    rows = {rel: f[1] for rel, f in footers.items()}
     return commit_id, rels, stats, rows
 
 

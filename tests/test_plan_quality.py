@@ -1300,7 +1300,11 @@ def _count_scheduled_jobs(spark, fn, ceiling: int | None = None) -> int:
     run's job count ~3× (observed: the perceptron at 57 once, 20 on
     every repeat), while a STRUCTURAL regression — a reintroduced
     per-round checkpoint/shuffle — inflates every run and still fails
-    both attempts."""
+    both attempts. A re-measure is reported as a warning naming the
+    pin and both counts, so a flaky budget shows in the run summary."""
+    import os
+    import warnings
+
     sc = spark.sparkContext
 
     def _measure(tag: str) -> int:
@@ -1317,7 +1321,13 @@ def _count_scheduled_jobs(spark, fn, ceiling: int | None = None) -> int:
 
     n_jobs = _measure("a")
     if ceiling is not None and n_jobs > ceiling:
-        n_jobs = min(n_jobs, _measure("b"))
+        n_again = _measure("b")
+        pin = os.environ.get("PYTEST_CURRENT_TEST", "?").split(" ")[0]
+        warnings.warn(
+            f"job-budget pin {pin} re-measured: {n_jobs} jobs, then"
+            f" {n_again} (ceiling {ceiling})"
+        )
+        n_jobs = min(n_jobs, n_again)
     return n_jobs
 
 

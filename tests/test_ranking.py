@@ -1,4 +1,4 @@
-"""Unit tests for operators/ranking.py (BM25, DSIR) and
+"""Unit tests for operators/ranking.py (BM25, DSIR, argbest) and
 operators/graph.py triangle_count — pure-Python golden replicas plus
 structural invariants; the cross-engine oracle parity is covered by the
 full-registry gate (test_oracle_gate.py)."""
@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import random
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -15,6 +16,7 @@ from opendata_gov_lt_mysql_import_spark.operators.graph import triangle_count
 from opendata_gov_lt_mysql_import_spark.operators.ranking import (
     DSIR_WIDTH,
     LOG_SCALE,
+    argbest,
     bm25_topk,
     dsir_importance_weights,
 )
@@ -152,6 +154,77 @@ def test_dsir_prefers_target_like_docs(spark):
         ).collect()
     }
     assert got[100] > got[101]
+
+
+def _argbest_rows():
+    """(g, score, tie, lab): 60 random groups over a score pool with
+    repeats (ties on score), negatives, both zeros, infinities, NULL and
+    NaN, plus hand-made groups whose best is contested between those."""
+    rng = random.Random(7)
+    pool = [-2.5, -1.0, -0.0, 0.0, 1.0, 3.0, math.inf, -math.inf,
+            None, math.nan]
+    rows = []
+    for g in range(60):
+        ties = rng.sample(range(-50, 50), rng.randint(1, 12))
+        rows += [(g, rng.choice(pool), t, f"r{g}.{t}") for t in ties]
+    contested = {
+        100: [None, None],
+        101: [math.nan, math.nan],
+        102: [None, math.nan, 1.0],
+        103: [0.0, -0.0, 0.0],
+        104: [-0.0, 0.0],
+        105: [math.nan, math.inf, None, -math.inf],
+    }
+    for g, scores in contested.items():
+        rows += [(g, sc, t, f"r{g}.{t}") for t, sc in enumerate(scores)]
+    return rows
+
+
+def _canon(rows):
+    # repr keeps NaN comparable and -0.0 apart from 0.0
+    return sorted(
+        tuple(repr(v) if isinstance(v, float) else v for v in r)
+        for r in rows
+    )
+
+
+@pytest.mark.parametrize("largest", [False, True])
+def test_argbest_equals_row_number_first(spark, largest):
+    """argbest picks exactly the row row_number() OVER (PARTITION BY g
+    ORDER BY score ASC|DESC, tie ASC) = 1 picks, NULL and NaN scores
+    included, with ride-along columns from that row and an extra
+    aggregate over the whole group."""
+    df = spark.createDataFrame(
+        _argbest_rows(), "g long, score double, tie long, lab string"
+    ).repartition(4)
+    got = argbest(
+        df,
+        "g",
+        "score",
+        "tie",
+        largest=largest,
+        carry=["lab"],
+        aggs={"n": F.count(F.lit(1))},
+        tie_as="best_tie",
+        score_as="best_score",
+    )
+    assert got.columns == ["g", "best_tie", "best_score", "lab", "n"]
+    df.createOrReplaceTempView("argbest_in")
+    want = spark.sql(
+        f"""
+        SELECT g, tie AS best_tie, score AS best_score, lab, n FROM (
+          SELECT *,
+                 row_number() OVER (PARTITION BY g ORDER BY score
+                                    {"DESC" if largest else "ASC"},
+                                    tie ASC) AS rn,
+                 count(1) OVER (PARTITION BY g) AS n
+          FROM argbest_in)
+        WHERE rn = 1
+        """
+    )
+    got_rows, want_rows = _canon(got.collect()), _canon(want.collect())
+    assert len(got_rows) == 66
+    assert got_rows == want_rows
 
 
 def _edges_df(spark, pairs):

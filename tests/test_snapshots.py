@@ -989,7 +989,7 @@ class TestSnapshotStreaming:
             SnapshotStreamWriter,
         )
         from opendata_gov_lt_mysql_import_spark.sources.snapshots import (
-            _collect_file_stats,
+            _file_footer,
             current_version,
         )
 
@@ -1010,9 +1010,7 @@ class TestSnapshotStreaming:
         rel = os.path.join("data", "replayme", "part-00000.parquet")
         os.makedirs(os.path.join(t, "data", "replayme"))
         shutil.copy(os.path.join(t, src_rel), os.path.join(t, rel))
-        msg = SnapshotFileMessage(
-            rel, _collect_file_stats(os.path.join(t, rel)), 10
-        )
+        msg = SnapshotFileMessage(rel, *_file_footer(os.path.join(t, rel)))
         w.commit([msg], batchId=7)
         assert current_version(t) == 1
         assert read_snapshot(spark, t).count() == 20

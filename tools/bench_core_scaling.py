@@ -17,7 +17,10 @@ Usage:
   python tools/bench_core_scaling.py [--entries a,b,c] [--runs 3]
       [--cpus-main 32] [--cpus-low 8] [--out SCALING.json]
 
-Default entries: the slowest 10 of BENCH_COMMITTED.json.
+Default entries: the slowest 10 of BENCH_COMMITTED.json. Entry names
+are checked against the query registry before any Spark process
+starts. A side that times out is recorded under ``failed_sides`` and
+the rounds already completed are kept.
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SIDE_TIMEOUT_S = 3600
 
 # runs inside a subprocess; prints ONE json line {entry: [sec, n, chk]}
 _RUNNER = r"""
@@ -59,12 +63,18 @@ print("@@RESULT@@" + json.dumps(out))
 """
 
 
-def _run_side(cpus: int, entries: list[str], sf_dir: str) -> dict:
+def _run_side(cpus: int, entries: list[str], sf_dir: str) -> dict | None:
+    """{entry: [sec, n, chk]} from one subprocess, or None if it timed
+    out."""
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_GRAFT_CPUS=str(cpus))
-    proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER, ",".join(entries), sf_dir],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=3600,
-    )
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", _RUNNER, ",".join(entries), sf_dir],
+            cwd=REPO, env=env, capture_output=True, text=True,
+            timeout=SIDE_TIMEOUT_S,
+        )
+    except subprocess.TimeoutExpired:
+        return None
     for line in proc.stdout.splitlines():
         if line.startswith("@@RESULT@@"):
             return json.loads(line[len("@@RESULT@@"):])
@@ -97,14 +107,27 @@ def main() -> int:
                 committed.items(), key=lambda kv: kv[1], reverse=True
             )[:10]
         ]
+    sys.path.insert(0, REPO)
+    import __spark_entry__
+
+    unknown = sorted(set(entries) - set(__spark_entry__.queries()))
+    if unknown:
+        ap.error(f"unknown entries: {', '.join(unknown)}")
     print(f"# entries: {entries}", flush=True)
 
     mains: dict[str, list] = {e: [] for e in entries}
     lows: dict[str, list] = {e: [] for e in entries}
     chks: dict[str, set] = {e: set() for e in entries}
+    failed: list[dict] = []
     for r in range(args.runs):
         for cpus, acc in ((args.cpus_main, mains), (args.cpus_low, lows)):
             res = _run_side(cpus, entries, args.sf_dir)
+            if res is None:
+                failed.append(
+                    {"round": r, "cpus": cpus, "timeout_s": SIDE_TIMEOUT_S}
+                )
+                print(f"# round {r} cpus={cpus}: timed out", flush=True)
+                continue
             for e, (sec, n, chk) in res.items():
                 acc[e].append(sec)
                 chks[e].add((n, chk))
@@ -121,16 +144,18 @@ def main() -> int:
         "cpus_main": args.cpus_main,
         "cpus_low": args.cpus_low,
         "sf_dir": args.sf_dir,
+        "failed_sides": failed,
         "entries": {},
     }
     for e in entries:
-        tm, tl = min(mains[e]), min(lows[e])
+        tm = min(mains[e], default=None)
+        tl = min(lows[e], default=None)
         block["entries"][e] = {
             f"t_c{args.cpus_main}_min": tm,
             f"t_c{args.cpus_low}_min": tl,
             f"all_c{args.cpus_main}": mains[e],
             f"all_c{args.cpus_low}": lows[e],
-            "ratio_low_over_main": round(tl / tm, 3) if tm else None,
+            "ratio_low_over_main": round(tl / tm, 3) if tm and tl else None,
             "chk_match": len(chks[e]) == 1,
             "chk": sorted(chks[e])[0][1] if len(chks[e]) == 1 else None,
         }
