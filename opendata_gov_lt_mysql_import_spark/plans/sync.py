@@ -5,8 +5,10 @@ idempotently (reference J4-J7 + F5 + the per-row create_or_update sinks,
 The reference interleaves existence probes and API writes row by row.
 Here the three sets are computed declaratively (anti joins + the
 canonical-JSON changed-rows diff) and applied through a batched
-``foreachPartition`` sink — Catalyst plans the reads, only the final
-writes are imperative. Ordering constraints for hierarchies (parents
+``foreachPartition`` sink. ``plan_sync`` materializes the sets at call
+time from one derivation of incoming, so later reads of the plan
+(counts, writes, the JDBC sink's updates and deletes) re-query neither
+source nor sink. Ordering constraints for hierarchies (parents
 before children on create, children before parents on delete) are
 satisfied by applying per topological depth, ascending or descending.
 """
@@ -17,6 +19,7 @@ import json
 import re
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -51,16 +54,19 @@ def ensure_harvest_user(users: DataFrame, name: str = "harvest") -> DataFrame:
 
 @dataclass
 class SyncPlan:
+    """The three sets of one sync; ``plan_sync`` returns them already
+    materialized, so reading them again costs no source pass."""
+
     creates: DataFrame
     updates: DataFrame
     deletes: DataFrame
 
     def counts(self) -> dict[str, int]:
-        return {
-            "create": self.creates.count(),
-            "update": self.updates.count(),
-            "delete": self.deletes.count(),
-        }
+        """Sizes of the three sets, in one aggregate job."""
+        sets = {"create": self.creates, "update": self.updates, "delete": self.deletes}
+        kinds = reduce(DataFrame.union, [d.select(F.lit(k).alias("k")) for k, d in sets.items()])
+        n = kinds.agg(*[F.count_if(F.col("k") == k).alias(k) for k in sets])
+        return n.first().asDict()
 
 
 def plan_sync(
@@ -77,11 +83,17 @@ def plan_sync(
       fields only the sink carries don't trigger updates);
     - delete: existing keys absent from incoming, gated by the ownership
       predicate (never delete rows another pipeline owns).
+
+    Runs its jobs at call time: incoming is materialized once, then the
+    change set and the deletes from it and from existing as it stands
+    during the call, so all three sets are read from that one snapshot.
     """
-    changed = changed_rows(incoming, existing, key, compare_fields)
+    incoming = incoming.localCheckpoint(eager=True)
+    changed = changed_rows(incoming, existing, key, compare_fields).localCheckpoint(eager=True)
     creates = changed.filter(F.col("_change_kind") == "create").drop("_change_kind")
     updates = changed.filter(F.col("_change_kind") == "update").drop("_change_kind")
     deletes = stale_rows(existing, incoming, on=key, ownership_filter=ownership_filter)
+    deletes = deletes.localCheckpoint(eager=True)
     return SyncPlan(creates=creates, updates=updates, deletes=deletes)
 
 

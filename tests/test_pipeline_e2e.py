@@ -257,6 +257,76 @@ class TestDiffSync:
         assert kinds["update"][0]["name"] == "testas2-2"
         assert kinds["delete"][0]["name"] == "nebeliko-99"
 
+    @pytest.mark.parametrize("compare_fields", [["title"], None])
+    def test_plan_equals_lazy_definitions(self, spark, tmp_path, compare_fields):
+        """plan_sync's materialized sets equal the lazy definitions
+        (changed_rows split by kind, stale_rows) as multisets, with NULL
+        keys on both sides, stale rows that fail the ownership gate or
+        have a NULL owner, and a sink-only column; and they stay readable
+        after both inputs are gone."""
+        import shutil
+        from collections import Counter
+
+        from opendata_gov_lt_mysql_import_spark.functions.diff import changed_rows
+        from opendata_gov_lt_mysql_import_spark.operators.joins import stale_rows
+
+        incoming = spark.createDataFrame(
+            [
+                (1, "same", "x", 0),
+                (2, "retitled", "x", 0),
+                (3, "same", "other extra", 0),
+                (4, "new", "x", 1),
+                (None, "null key", "x", 0),
+                (None, "null key", "x", 0),
+            ],
+            "id int, title string, extra string, depth int",
+        )
+        existing = spark.createDataFrame(
+            [
+                (1, "same", "x", 0, "IVPK IRS", "s1"),
+                (2, "old title", "x", 0, "IVPK IRS", "s2"),
+                (3, "same", "x", 0, "IVPK IRS", "s3"),
+                (5, "gone", "x", 0, "IVPK IRS", "s5"),
+                (6, "foreign", "x", 0, "kita sistema", "s6"),
+                (7, "no owner", "x", 0, None, "s7"),
+                (None, "null key", "x", 0, "IVPK IRS", "s8"),
+            ],
+            "id int, title string, extra string, depth int, owner string, sink_only string",
+        )
+        inc_dir, ex_dir = str(tmp_path / "incoming"), str(tmp_path / "existing")
+        incoming.write.parquet(inc_dir)
+        existing.write.parquet(ex_dir)
+        incoming, existing = spark.read.parquet(inc_dir), spark.read.parquet(ex_dir)
+        owned = F.col("owner") == "IVPK IRS"
+
+        changed = changed_rows(incoming, existing, "id", compare_fields)
+        want = {
+            kind: Counter(
+                map(tuple, changed.filter(F.col("_change_kind") == kind)
+                    .drop("_change_kind").collect())
+            )
+            for kind in ("create", "update")
+        }
+        want["delete"] = Counter(
+            map(tuple, stale_rows(existing, incoming, on="id", ownership_filter=owned).collect())
+        )
+
+        plan = plan_sync(
+            incoming, existing, key="id", compare_fields=compare_fields,
+            ownership_filter=owned,
+        )
+        shutil.rmtree(inc_dir)
+        shutil.rmtree(ex_dir)
+        got = {
+            "create": Counter(map(tuple, plan.creates.collect())),
+            "update": Counter(map(tuple, plan.updates.collect())),
+            "delete": Counter(map(tuple, plan.deletes.collect())),
+        }
+        assert got == want
+        counts = plan.counts()
+        assert counts == {k: sum(v.values()) for k, v in want.items()}
+        assert counts == {"create": 3, "update": 1 if compare_fields else 2, "delete": 2}
+
 
 class TestObservedExport:
     def test_metrics_ride_the_write_job(self, spark, sf_dir, tmp_path):

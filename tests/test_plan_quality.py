@@ -1355,6 +1355,45 @@ def test_warm_increment_job_budget(spark, sf_dir, queries):
     )
 
 
+def test_sync_cycle_job_budget(spark, tmp_path):
+    """One harvest sync cycle over the reference fixture, with source and
+    catalog read from parquet: package the documents, plan_sync against
+    a catalog with one missing, one retitled and one stale document,
+    counts(), then collect creates ∪ updates and the delete keys. While
+    the plan's sets were lazy, each of those reads re-derived the package
+    documents and the cycle scheduled 36 jobs. With incoming and the
+    change set materialized once in plan_sync it schedules 16, the
+    ceiling: deriving incoming twice (17) already fails here."""
+    from reference_fixture import build_reference_tables
+
+    from opendata_gov_lt_mysql_import_spark.plans.pipeline import HarvestPipeline
+    from opendata_gov_lt_mysql_import_spark.plans.sync import plan_sync
+
+    tables = {}
+    for name, df in build_reference_tables(spark).items():
+        df.write.parquet(str(tmp_path / name))
+        tables[name] = spark.read.parquet(str(tmp_path / name))
+    docs = HarvestPipeline(spark, tables).package_documents()
+    rows = sorted((r.asDict() for r in docs.collect()), key=lambda r: r["id"])
+    rows[1]["title"] = "senas pavadinimas"
+    rows[2]["id"] = "nebeliko-99"
+    spark.createDataFrame(rows[1:], docs.schema).write.parquet(str(tmp_path / "catalog"))
+    existing = spark.read.parquet(str(tmp_path / "catalog"))
+
+    def cycle():
+        incoming = HarvestPipeline(spark, tables).package_documents()
+        plan = plan_sync(incoming, existing, key="id")
+        assert plan.counts() == {"create": 2, "update": 1, "delete": 1}
+        plan.creates.unionByName(plan.updates).collect()
+        plan.deletes.select("id").collect()
+
+    n_jobs = _count_scheduled_jobs(spark, cycle, ceiling=16)
+    assert n_jobs <= 16, (
+        f"one sync cycle scheduled {n_jobs} jobs (ceiling 16)"
+        " — a plan_sync read probably re-derives its inputs again"
+    )
+
+
 def test_gram_warm_lifecycle_exactly_once_and_serves_from_table(
     spark, sf_dir, queries
 ):
