@@ -1,12 +1,31 @@
-"""Benchmark harness — times the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the one timing core of this repository.
 
-Prints ONE compact JSON line on stdout:
+    python bench.py [--commit [--adjudicated=NOTE]]
+    python bench.py run NAME... [--runs N] [--trace]
+    python bench.py ab NAME... (--ref COMMIT | --cpus N | --conf K=V ...) [--runs N]
+
+Every subcommand times registry entries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 fixtures, ``SF_DIR``) on local[$SPARK_GRAFT_CPUS] through one
+loop, :func:`time_runs`.
+
+With no subcommand it times the HEADLINE entries, min of 3 runs each,
+and prints ONE compact JSON line on stdout:
   {"metric": "...", "value": <total sec>, "unit": "sec", "n": <entries>,
    "slowest_10": {name: sec, ...}, "sf": <sf>, "full_record": <file>}
 The full record, with every entry's timing and min/med/max spread, is
 written to BENCH_LOCAL.json (gitignored); ``--commit`` also writes it
 to BENCH_COMMITTED.json.
+
+``run`` times the named entries in one session (``--runs`` each, default
+3) and writes PROFILE_LOCAL.json (gitignored). ``--trace`` adds, per run,
+the layers of ``perfbench/layers.py`` and writes each entry's formatted
+plan to plans/local/ (gitignored); see :func:`traced_record`.
+
+``ab`` compares this checkout (side A) with side B: the tree of another
+commit (``--ref``), another core count (``--cpus``) or extra Spark conf
+(``--conf``). The sides alternate round by round, one subprocess per
+side per round, and the record goes to BENCH_COMPARE.json; see
+:func:`ab_record`.
 
 Each query is fully evaluated: a xxhash64 checksum over EVERY output
 column is aggregated, so Catalyst cannot prune the projection expressions
@@ -16,19 +35,36 @@ fingerprints — to a parquet row-count scan and time nothing).
 
 from __future__ import annotations
 
+import argparse
+import contextlib
+import inspect
+import io
 import json
 import os
+import subprocess
 import sys
+import tarfile
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from __spark_entry__ import queries  # noqa: E402
 from opendata_gov_lt_mysql_import_spark.session import get_spark  # noqa: E402
-from opendata_gov_lt_mysql_import_spark.queries import all_queries  # noqa: E402
-import opendata_gov_lt_mysql_import_spark.queries_ml  # noqa: F401, E402
-import opendata_gov_lt_mysql_import_spark.queries_sql  # noqa: F401, E402
+from perfbench import layers  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# Shared-box noise band: an interleaved B/A ratio inside [1/1.3, 1.3] is
+# noise, and --commit flags cross-round deltas beyond 1.3x.
+NOISE_BAND = 1.3
+# an A/B side still running after this is recorded as failed
+SIDE_TIMEOUT_S = 3600
+PROFILE_PATH = os.path.join(HERE, "PROFILE_LOCAL.json")
+PLAN_DIR = os.path.join(HERE, "plans", "local")
+COMPARE_PATH = os.path.join(HERE, "BENCH_COMPARE.json")
 
 # Headline set: the scale-sensitive queries (scans, joins, aggs, window,
 # closure, dedup families, similarity, text analysis). Cheap point lookups
@@ -300,35 +336,360 @@ HEADLINE = [
 ]
 
 
-def force_eval_chk(df) -> tuple[int, int]:
-    """Evaluate every column of every row; return (row count, checksum).
+def checksum_frame(df):
+    """The one-row aggregate ``(n, chk)`` over ``df``: its row count and
+    the bit_xor of xxhash64 over all of its columns.
 
     bit_xor over xxhash64(all columns) makes each projection expression
     load-bearing (nothing prunable), is order-insensitive, and cannot
     overflow under ANSI arithmetic. Map-typed columns are serialized via
-    to_json first (xxhash64 rejects MapType). The checksum is what makes
-    scaling/curvature points self-verifying across rounds (round-13
-    verdict item 6): a timing claim about a result set that silently
-    changed is worthless, so SCALING.json records the checksum next to
-    every timing.
-    """
+    to_json first (xxhash64 rejects MapType)."""
     cols = []
     for fld in df.schema.fields:
         c = F.col(fld.name)
         if "map<" in fld.dataType.simpleString():
             c = F.to_json(c)
         cols.append(c)
-    hashed = df.select(F.xxhash64(*cols).alias("h"))
-    row = hashed.agg(
+    return df.select(F.xxhash64(*cols).alias("h")).agg(
         F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("chk")
-    ).collect()[0]
-    return row["n"], row["chk"] if row["chk"] is not None else 0
+    )
 
 
-def force_eval(df) -> int:
-    """Row count via :func:`force_eval_chk` (checksum discarded)."""
-    return force_eval_chk(df)[0]
+def force_eval_chk(df) -> tuple[int, int]:
+    """Evaluate every column of every row; return (row count, checksum).
 
+    The checksum makes every timing self-verifying: a timing claim about
+    a result set that silently changed is worthless, so each record
+    carries the checksum next to the timing."""
+    n, chk = checksum_frame(df).collect()[0]
+    return n, chk or 0
+
+
+def time_runs(spark, fn, sf_dir, runs, evaluate, construct=contextlib.nullcontext):
+    """The one timing loop. Per run: clear the cache, build the entry,
+    evaluate it in full and record ``[wall s, construction s, rows,
+    checksum]``. Clearing the cache keeps persisted intermediates (LSH
+    signatures) from accumulating or flattering later runs.
+
+    ``evaluate`` is :func:`force_eval_chk` or the traced twin
+    :meth:`Profile.evaluate`; ``construct`` makes the context wrapped
+    around construction. A/B sides run this function's source against
+    their own checkout (:func:`_side_runner`), so it uses no name of this
+    module but ``time`` and ``contextlib``."""
+    out = []
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        with construct():
+            df = fn(spark, sf_dir)
+        built = time.perf_counter() - t0
+        n, chk = evaluate(df)
+        out.append([round(time.perf_counter() - t0, 4), round(built, 4), n, chk])
+    return out
+
+
+def time_entries(spark, names, runs, evaluate=force_eval_chk,
+                 construct=contextlib.nullcontext):
+    """Warm the JVM and parquet footers with one tiny action, then yield
+    ``(name, time_runs(...))`` per named entry at ``SF_DIR``, with one
+    progress line per entry on stderr."""
+    qs = queries()
+    qs["q1_pricing_summary"](spark, SF_DIR).count()
+    for name in names:
+        res = time_runs(spark, qs[name], SF_DIR, runs, evaluate, construct)
+        s = sorted(r[0] for r in res)
+        print(f"# {name}: min={s[0]:.3f}s med={s[len(s) // 2]:.3f}s "
+              f"max={s[-1]:.3f}s rows={res[-1][2]} chk={res[-1][3]}",
+              file=sys.stderr, flush=True)
+        yield name, res
+
+
+# ---------------------------------------------------------------------------
+# run: one session, optionally traced
+# ---------------------------------------------------------------------------
+
+
+class Profile:
+    """The traced run's counters: every timed run is one op of a
+    ``layers.SparkTracer`` and ``layers.LayerRecorder``, so the jobs of
+    its construction and of its action land in the event-log job groups
+    ``pb:<op>:queries.construct`` and ``pb:<op>:exec.action``."""
+
+    def __init__(self, spark) -> None:
+        self.tracer = layers.SparkTracer(spark.sparkContext)
+        self.rec = layers.LayerRecorder(spark)
+        self.op = 0
+        self.df = None  # the last run's entry frame, for the plan dump
+
+    @contextlib.contextmanager
+    def construct(self):
+        self.op += 1
+        self.rec.begin_op(self.op)
+        with self.tracer.span("queries.construct", self.op):
+            self.rec.arm_py4j()
+            try:
+                yield
+            finally:
+                self.rec.record(self.op, "queries.py4j_calls", self.rec.disarm_py4j())
+
+    def evaluate(self, df) -> tuple[int, int]:
+        with self.tracer.span("exec.action", self.op):
+            agg = checksum_frame(df)
+            n, chk = agg.collect()[0]
+        self.rec.after_action(self.op, agg)
+        self.rec.end_op(self.op)
+        self.df = df
+        return n, chk or 0
+
+
+def _summary(res: list) -> dict:
+    s = sorted(r[0] for r in res)
+    return {"min_s": s[0], "med_s": s[len(s) // 2], "max_s": s[-1],
+            "rows": res[-1][2], "chk": res[-1][3]}
+
+
+def _run_fields(r: list) -> dict:
+    return dict(zip(("s", "construct_s", "rows", "chk"), r))
+
+
+def traced_record(names, runs) -> dict:
+    """Time the named entries in one traced session. Per run the record
+    holds wall and construction seconds, rows and checksum, and the
+    ``layers`` counters under the per-layer names of BENCHMARK.json:
+    ``queries.py4j_calls`` during construction, ``catalyst.*`` phase
+    seconds and exchanges of the evaluated plan, and
+    ``functions.python_udf_s`` (Spark's ``udf.profiler=perf``). Under
+    ``jobs_by_group`` it holds jobs, tasks, task CPU, input, shuffle and
+    spill of the construction's jobs (the eager barriers:
+    checkpoints, driver collects) and of the action's jobs."""
+    os.makedirs(PLAN_DIR, exist_ok=True)
+    timed = {}
+    with tempfile.TemporaryDirectory(prefix="bench-events-") as events:
+        spark = get_spark(app_name="bench-trace", extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": events,
+            "spark.eventLog.compress": "false",
+            "spark.sql.pyspark.udf.profiler": "perf",
+        })
+        prof = Profile(spark)
+        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        try:
+            for name, res in time_entries(spark, names, runs, prof.evaluate, prof.construct):
+                timed[name] = res
+                with open(os.path.join(PLAN_DIR, f"{name}.txt"), "w") as fh:
+                    fh.write(prof.df._jdf.queryExecution().explainString(mode))
+                prof.df = None
+        finally:
+            prof.rec.close()
+            spark.stop()  # flushes the event log
+        by_group = layers.read_event_log(events)
+    out, op = {}, 0
+    for name, res in timed.items():
+        runs_out = []
+        for r in res:
+            op += 1
+            run = _run_fields(r)
+            run.update((k, round(v, 4)) for k, v in sorted(prof.rec.values[op].items()))
+            run["jobs_by_group"] = {
+                phase: {k: round(v, 4) for k, v in vars(by_group[f"pb:{op}:{phase}"]).items()
+                        if k not in ("group", "scan_rows")}
+                for phase in ("queries.construct", "exec.action")
+                if f"pb:{op}:{phase}" in by_group
+            }
+            runs_out.append(run)
+        out[name] = dict(_summary(res), runs=runs_out)
+    return out
+
+
+def _check_names(ap: argparse.ArgumentParser, names: list[str]) -> None:
+    """Refuse names missing from the registry before any Spark process
+    starts (argparse exits with status 2)."""
+    unknown = sorted(set(names) - set(queries()))
+    if unknown:
+        ap.error(f"not in the query registry: {', '.join(unknown)}")
+
+
+def run_cmd(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(
+        prog="bench.py run", description="Time named entries in one session."
+    )
+    ap.add_argument("names", nargs="+", metavar="NAME")
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--trace", action="store_true",
+                    help="record the layered counters and dump the plans")
+    args = ap.parse_args(argv)
+    _check_names(ap, args.names)
+    if args.trace:
+        entries = traced_record(args.names, args.runs)
+    else:
+        spark = get_spark(app_name="bench-run")
+        entries = {
+            name: dict(_summary(res), runs=[_run_fields(r) for r in res])
+            for name, res in time_entries(spark, args.names, args.runs)
+        }
+    with open(PROFILE_PATH, "w") as fh:
+        json.dump({"sf_dir": SF_DIR, "traced": args.trace, "entries": entries}, fh, indent=1)
+        fh.write("\n")
+    total = sum(e["min_s"] for e in entries.values())
+    print(f"# total (min): {total:.3f}s over {len(entries)} entries -> {PROFILE_PATH}")
+    return 0
+
+
+# ---------------------------------------------------------------------------
+# ab: two sides, interleaved round by round
+# ---------------------------------------------------------------------------
+
+
+def _side_runner() -> str:
+    """The program of one A/B side: the source of :func:`time_runs` and
+    :func:`time_entries` over the side's own package and its own
+    ``bench.force_eval_chk`` (a --ref side never imports this file)."""
+    return (
+        "import contextlib, json, os, sys, time\n"
+        "sys.path.insert(0, os.getcwd())\n"
+        "from __spark_entry__ import queries\n"
+        "from bench import force_eval_chk\n"
+        "from opendata_gov_lt_mysql_import_spark.session import get_spark\n"
+        + inspect.getsource(time_runs)
+        + inspect.getsource(time_entries)
+        + "names, SF_DIR = sys.argv[1].split(','), sys.argv[2]\n"
+        "spark = get_spark(app_name='bench-ab', extra_conf=json.loads(sys.argv[3]))\n"
+        "out = {n: r[0] for n, r in time_entries(spark, names, 1)}\n"
+        "print('@@RESULT@@' + json.dumps(out))\n"
+    )
+
+
+def _run_side(side: dict, names: list[str]) -> dict | str:
+    """One round of one side in a fresh interpreter: ``{name: [s,
+    construction s, rows, chk]}``, or why the side failed."""
+    env = dict(os.environ, PYTHONPATH=side["tree"])
+    if side["cpus"]:
+        env["SPARK_GRAFT_CPUS"] = str(side["cpus"])
+    try:
+        proc = subprocess.run(
+            [sys.executable, "-c", _side_runner(), ",".join(names), SF_DIR,
+             json.dumps(side["conf"])],
+            cwd=side["tree"], env=env, capture_output=True, text=True,
+            timeout=SIDE_TIMEOUT_S,
+        )
+    except subprocess.TimeoutExpired:
+        return f"timed out after {SIDE_TIMEOUT_S} s"
+    for line in proc.stdout.splitlines():
+        if line.startswith("@@RESULT@@"):
+            return json.loads(line[len("@@RESULT@@"):])
+    return f"exit {proc.returncode}: {proc.stderr[-2000:]}"
+
+
+def ab_record(names: list[str], rounds: list[dict], sides: dict) -> dict:
+    """The A/B record. ``rounds`` holds one ``{"a": ..., "b": ...}`` per
+    round, each side a ``_run_side`` result or the reason it failed.
+
+    Completed sides are kept; failed ones are listed under
+    ``failed_sides``. Per entry: each side's wall times, its minimum,
+    ``ratio_b_over_a`` of the minima and a verdict — ``noise-band``
+    inside :data:`NOISE_BAND`, else ``a-faster`` or ``b-faster`` — unless
+    the runs disagree on (rows, checksum), which is ``checksum-mismatch``
+    whatever the timings say."""
+    failed = [
+        {"round": i, "side": k, "error": r[k]}
+        for i, r in enumerate(rounds) for k in ("a", "b") if isinstance(r[k], str)
+    ]
+    entries = {}
+    for name in names:
+        got = {k: [r[k][name] for r in rounds if isinstance(r[k], dict)] for k in ("a", "b")}
+        mins = {k: min((x[0] for x in v), default=None) for k, v in got.items()}
+        ratio = round(mins["b"] / mins["a"], 3) if mins["a"] and mins["b"] else None
+        results = sorted({(x[2], x[3]) for v in got.values() for x in v})
+        if len(results) > 1:
+            verdict = "checksum-mismatch"
+        elif ratio is None:
+            verdict = "incomplete"
+        elif ratio > NOISE_BAND:
+            verdict = "a-faster"
+        elif ratio < 1 / NOISE_BAND:
+            verdict = "b-faster"
+        else:
+            verdict = "noise-band"
+        entries[name] = {
+            "a_s": [x[0] for x in got["a"]], "b_s": [x[0] for x in got["b"]],
+            "a_min": mins["a"], "b_min": mins["b"], "ratio_b_over_a": ratio,
+            "rows_chk": [list(x) for x in results], "verdict": verdict,
+        }
+    return {
+        "protocol": "interleaved rounds, the side that goes first alternating, "
+                    "one subprocess per side per round, full-evaluation checksums",
+        "sf_dir": SF_DIR,
+        "sides": sides,
+        "rounds": len(rounds),
+        "noise_band": NOISE_BAND,
+        "failed_sides": failed,
+        "entries": entries,
+    }
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(["git", *args], cwd=HERE, capture_output=True,
+                          text=True, check=True).stdout.strip()
+
+
+def ab_cmd(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(
+        prog="bench.py ab",
+        description="Interleaved A/B: this checkout (A) against side B.",
+    )
+    ap.add_argument("names", nargs="+", metavar="NAME")
+    ap.add_argument("--runs", type=int, default=3, help="rounds")
+    b_side = ap.add_mutually_exclusive_group(required=True)
+    b_side.add_argument("--ref", metavar="COMMIT", help="B runs this commit's tree")
+    b_side.add_argument("--cpus", type=int, metavar="N", help="B runs at local[N]")
+    b_side.add_argument("--conf", action="append", metavar="K=V",
+                        help="B runs with this extra Spark conf (repeatable)")
+    args = ap.parse_args(argv)
+    _check_names(ap, args.names)
+    conf = {}
+    for kv in args.conf or ():
+        k, _, v = kv.partition("=")
+        if not k or not v:
+            ap.error(f"--conf expects K=V, got {kv!r}")
+        conf[k] = v
+    # "<sha>-dirty" when the checkout has uncommitted changes
+    head = _git("describe", "--always", "--dirty", "--abbrev=40", "--exclude=*")
+    a = {"commit": head, "tree": HERE, "conf": {},
+         "cpus": os.environ.get("SPARK_GRAFT_CPUS")}
+    b = dict(a, conf=conf, cpus=args.cpus or a["cpus"])
+    with tempfile.TemporaryDirectory(prefix="bench-ab-") as tree:
+        if args.ref:
+            b.update(commit=_git("rev-parse", "--verify", args.ref + "^{commit}"), tree=tree)
+            archive = subprocess.run(["git", "archive", b["commit"]], cwd=HERE,
+                                     capture_output=True, check=True).stdout
+            with tarfile.open(fileobj=io.BytesIO(archive)) as tf:
+                tf.extractall(tree, filter="data")
+        rounds = []
+        for r in range(args.runs):
+            rounds.append({})
+            # alternate which side goes first, so a load swing mid-round
+            # hits both sides alike
+            for key in ("a", "b") if r % 2 == 0 else ("b", "a"):
+                rounds[-1][key] = res = _run_side(a if key == "a" else b, args.names)
+                print(f"# round {r + 1}/{args.runs} side {key}: "
+                      + (res if isinstance(res, str) else
+                         ", ".join(f"{n}={v[0]:.3f}s" for n, v in res.items())),
+                      file=sys.stderr, flush=True)
+    sides = {k: {f: s[f] for f in ("commit", "cpus", "conf")} for k, s in (("a", a), ("b", b))}
+    record = ab_record(args.names, rounds, sides)
+    with open(COMPARE_PATH, "w") as fh:
+        json.dump(record, fh, indent=1)
+        fh.write("\n")
+    for name, e in record["entries"].items():
+        print(f"{name}: a_min={e['a_min']} b_min={e['b_min']} "
+              f"ratio_b_over_a={e['ratio_b_over_a']} {e['verdict']}")
+    print(f"# {len(record['failed_sides'])} failed sides -> {COMPARE_PATH}")
+    return 0
+
+
+# ---------------------------------------------------------------------------
+# the headline record
+# ---------------------------------------------------------------------------
 
 def adjudication_gate(
     deltas: dict, argv: list[str]
@@ -400,46 +761,24 @@ def _prev_round_committed(here: str) -> tuple[str | None, dict]:
         return None, {}
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+def headline(argv: list[str]) -> int:
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bench")
-    queries = all_queries()
-
-    # warm the JVM + parquet footers with one tiny action
-    queries["q1_pricing_summary"](spark, sf_dir).count()
 
     # best of three runs per query: single-shot wall clock on a shared
     # box swings +/-50% with background load, and even min-of-2 left
     # sub-second entries jittering past a 20% band run-to-run; min-of-3
-    # reports the query's actual cost for ~17s extra wall. Cache cleared
-    # between runs so persisted intermediates (LSH signatures) don't
-    # accumulate or flatter later runs. Full-evaluation checksum
-    # protocol (BASELINE.md) unchanged.
+    # reports the query's actual cost for ~17s extra wall.
     timings: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
-    for name in HEADLINE:
-        fn = queries[name]
-        runs: list[float] = []
-        n = 0
-        for _ in range(3):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = force_eval(df)
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        timings[name] = round(runs[0], 4)
+    for name, res in time_entries(spark, HEADLINE, 3):
+        runs = sorted(r[0] for r in res)
+        timings[name] = runs[0]
         # min/median/max across the 3 runs: a wide max/min ratio marks a
         # noisy entry (shared-box background load), so a regressed *min*
         # with tight spread is a real regression and a regressed min with
         # huge spread is measurement noise — distinguishable at a glance
-        spread[name] = {
-            "min": round(runs[0], 4),
-            "med": round(runs[1], 4),
-            "max": round(runs[2], 4),
-        }
-        print(f"# {name}: {timings[name]:.3f}s ({n} rows)", file=sys.stderr)
+        spread[name] = {"min": runs[0], "med": runs[1], "max": runs[2]}
 
     total = round(sum(timings.values()), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -460,11 +799,11 @@ def main() -> None:
         "spread": spread,
         "sf": sf_val,
     }
-    # sf-scaling appendix: tools/bench_scaling.py runs the most expensive
-    # entries at sf0.1 vs a key-consistent 2x dataset and commits the
-    # ratios; embed the committed result so the full record carries it.
-    here = os.path.dirname(os.path.abspath(__file__))
-    appendix = os.path.join(here, "SCALING.json")
+    # SCALING.json holds the committed data-scale, history-scale,
+    # serve-crossover and core-count results of earlier rounds (git
+    # history keeps the harnesses that measured them); embed it so the
+    # full record carries it.
+    appendix = os.path.join(HERE, "SCALING.json")
     if os.path.exists(appendix):
         try:
             with open(appendix) as fh:
@@ -480,7 +819,7 @@ def main() -> None:
     # `--commit` flag so the builder controls exactly what goes into
     # version control and `git status` is clean at round end by
     # construction.
-    local_path = os.path.join(here, "BENCH_LOCAL.json")
+    local_path = os.path.join(HERE, "BENCH_LOCAL.json")
     # A swallowed write failure must not masquerade as a fresh record:
     # full_record is the filename only when the write SUCCEEDED, else null
     # so consumers can detect the miss (round-6 advisory).
@@ -491,14 +830,14 @@ def main() -> None:
             fh.write("\n")
     except OSError:
         full_record = None
-    committed_path = os.path.join(here, "BENCH_COMMITTED.json")
-    if "--commit" in sys.argv:
+    committed_path = os.path.join(HERE, "BENCH_COMMITTED.json")
+    if "--commit" in argv:
         # Cross-round delta list, auto-emitted INTO the committed record
         # so the >1.3x entries vs the PREVIOUS ROUND's committed numbers
         # are on the record at commit time with a pinned ref — each one
-        # is a tools/bench_compare.py adjudication TODO (interleaved
-        # A/B on the same box; raw cross-day numbers are not verdicts).
-        prev_sha, prev_q = _prev_round_committed(here)
+        # is a `bench.py ab --ref` adjudication TODO (interleaved A/B
+        # on the same box; raw cross-day numbers are not verdicts).
+        prev_sha, prev_q = _prev_round_committed(HERE)
         if not prev_q:
             # A missing anchor silently disables the ENTIRE cross-round
             # audit (delta list + adjudication gate) — the exact class
@@ -507,7 +846,7 @@ def main() -> None:
             # matcher). Refuse unless explicitly attested, and put the
             # attestation on the record.
             refused, adj_note = adjudication_gate(
-                {"<no-anchor>": True}, sys.argv
+                {"<no-anchor>": True}, argv
             )
             if refused:
                 print(
@@ -518,10 +857,10 @@ def main() -> None:
                     "baseline exists>'.",
                     file=sys.stderr,
                 )
-                sys.exit(2)
+                return 2
             full["deltas_vs_prev_round"] = {
                 "ref_commit": None,
-                "band": 1.3,
+                "band": NOISE_BAND,
                 "entries": {},
                 "adjudication": adj_note,
             }
@@ -529,23 +868,23 @@ def main() -> None:
             deltas = {}
             for name, now in timings.items():
                 was = prev_q.get(name)
-                if was and was > 0 and now / was > 1.3:
+                if was and was > 0 and now / was > NOISE_BAND:
                     deltas[name] = {
                         "prev": was, "now": now,
                         "ratio": round(now / was, 2),
                     }
             full["deltas_vs_prev_round"] = {
                 "ref_commit": prev_sha,
-                "band": 1.3,
+                "band": NOISE_BAND,
                 "entries": deltas,
             }
             if deltas:
                 print(
                     f"# NOTE: {len(deltas)} entries >1.3x vs previous "
                     f"round ({prev_sha[:8]}): {sorted(deltas)} — "
-                    "adjudicate with tools/bench_compare.py "
-                    f"{prev_sha[:8]} --entries "
-                    + ",".join(sorted(deltas)),
+                    "adjudicate with python bench.py ab "
+                    + " ".join(sorted(deltas))
+                    + f" --ref {prev_sha[:8]}",
                     file=sys.stderr,
                 )
             # Round-13 postmortem (VERDICT r13 "what's wrong" item 2):
@@ -557,7 +896,7 @@ def main() -> None:
             # adjudication with --adjudicated=<note>; the note is
             # embedded in the record so the attestation is itself on
             # the record. Un-flagged runs commit as before.
-            refused, adj_note = adjudication_gate(deltas, sys.argv)
+            refused, adj_note = adjudication_gate(deltas, argv)
             if refused:
                 print(
                     f"# REFUSED: {len(deltas)} un-adjudicated >1.3x "
@@ -566,7 +905,7 @@ def main() -> None:
                     "with --adjudicated='<summary of the triage>'.",
                     file=sys.stderr,
                 )
-                sys.exit(2)
+                return 2
             if deltas:
                 full["deltas_vs_prev_round"]["adjudication"] = adj_note
         with open(committed_path, "w") as fh:
@@ -611,7 +950,16 @@ def main() -> None:
     # Driver tail window is 2,000 chars; the line must fit WHOLE.
     assert len(line) < 1900, f"stdout record too long: {len(line)}"
     print(line)
+    return 0
+
+
+def main(argv: list[str]) -> int:
+    if argv[1:2] == ["run"]:
+        return run_cmd(argv[2:])
+    if argv[1:2] == ["ab"]:
+        return ab_cmd(argv[2:])
+    return headline(argv)
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv))

@@ -176,9 +176,7 @@ def _oriented_edges(edges: DataFrame, src: str, dst: str):
     order. Both frames are eagerly localCheckpointed — each is consumed
     by multiple downstream subtrees in every caller, and under AQE a
     lazy handle re-runs the (often pair-exploding) upstream lineage per
-    consumer. Shared by ``triangle_count`` and ``oriented_wedge_count``
-    so the scaling tool's evidence counter measures the EXACT wedge
-    space the counting join runs on."""
+    consumer."""
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
@@ -209,26 +207,6 @@ def _oriented_edges(edges: DataFrame, src: str, dst: str):
         F.when(lo < hi, hi).otherwise(lo).alias("dkey"),
     ).localCheckpoint(eager=True)
     return deg, oriented
-
-
-def oriented_wedge_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> int:
-    """sum_v C(outdeg(v), 2) under the (degree, id) orientation — the
-    size of the wedge space ``triangle_count``'s closing join probes,
-    i.e. the evidence count the SCALING.json discipline records next to
-    the triangle timings (time tracking wedge growth = linear per-wedge
-    work; time outrunning it = a plan regression, not data growth)."""
-    _deg, oriented = _oriented_edges(edges, src, dst)
-    row = (
-        oriented.groupBy("s")
-        .agg(F.count(F.lit(1)).cast("long").alias("od"))
-        .agg(
-            F.sum(F.expr("od * (od - 1) div 2")).cast("long").alias("wedges")
-        )
-        .collect()[0]
-    )
-    return int(row["wedges"] or 0)
 
 
 def triangle_count(

@@ -5262,8 +5262,7 @@ def triangle_count_copurchase_q(spark: SparkSession, sf: str) -> DataFrame:
 
 def _copurchase_sampled_edges(spark: SparkSession, sf: str) -> DataFrame:
     """DOULION-sampled (p=1/4, md5 nibble) part co-purchase edge stream
-    — the exact input ``triangle_count_copurchase`` counts on, shared
-    with tools/bench_scaling.py's wedge-evidence counter."""
+    — the exact input ``triangle_count_copurchase`` counts on."""
     li = load_table(spark, sf, "lineitem")
     # per-order part sets in ONE aggregation, pairs by the posexplode
     # anchor + tail-slice generate (the minhash bucket-pair idiom,
@@ -10234,9 +10233,9 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
 def ann_ivf_occupancy_drift_q(spark: SparkSession, sf: str) -> DataFrame:
     """IVF index maintenance under continuous ingest — the incremental
     theme (recipe, near-dup, substring) extended to the ANN family:
-    a new embedding batch (deterministically jittered id-offset copies,
-    the bench_scaling derivation) is assigned to the FROZEN coarse
-    cells by the same max-dot rule the index was built with — cell
+    a new embedding batch (deterministically jittered id-offset copies)
+    is assigned to the FROZEN coarse cells by the same max-dot rule the
+    index was built with — cell
     assignment is per-row, so the ingest is embarrassingly incremental
     (one broadcast of the 16 pivots, one map-side argmin over the
     batch; history is never rescanned). The operational output is the
@@ -12969,11 +12968,8 @@ def incremental_semantic_dedup_ivf_q(spark: SparkSession, sf: str) -> DataFrame:
 
 def _semdedup_ivf_batch(cl: DataFrame, offset: int = 1000000) -> DataFrame:
     """The jittered id-offset batch over a clustered corpus (every
-    third vector negated so both admit/reject outcomes occur) —
-    extracted so the history-scaling falsifier
-    (tools/bench_history_scaling.py) can build the FIXED base-fixture
-    batch through the exact code the driver entry runs. ``offset``
-    lets a second-generation batch (screened post-retrain) stay
+    third vector negated so both admit/reject outcomes occur).
+    ``offset`` lets a second-generation batch (screened post-retrain) stay
     id-disjoint from the first ingest's +1e6 range."""
     jit = (F.col("oid") % 97).cast("double") * F.lit(0.001)
     return cl.select(

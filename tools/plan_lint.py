@@ -21,10 +21,11 @@ complementary *negative* sweep across the whole registry.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opendata_gov_lt_mysql_import_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402

@@ -7,13 +7,17 @@ DuckDB at the given sf dir, then compares row count, column names, and an
 order-insensitive value multiset (stringified, arrays included).
 
 Usage: python tools/verify_oracle.py [sf_dir] [query ...]
+
+Exits 1 on any mismatch, and 2 (before Spark starts) if a named query
+is not registered.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from opendata_gov_lt_mysql_import_spark.oracle_gate import (  # noqa: E402
     check_query,
@@ -26,11 +30,15 @@ import __spark_entry__ as entrymod  # noqa: E402
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"not in the query registry: {', '.join(unknown)}", file=sys.stderr)
+        return 2
 
     con = duckdb_connect(sf_dir)
     spark = get_spark(app_name="verify-oracle")
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
 
     failures = []
     for name, fn in queries.items():
