@@ -420,11 +420,24 @@ class Profile:
         self.rec = layers.LayerRecorder(spark)
         self.op = 0
         self.df = None  # the last run's entry frame, for the plan dump
+        jvm = spark._jvm
+        self._compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        self._codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+        self._cg0 = (0, 0)
+
+    def _codegen_now(self) -> tuple[int, int]:
+        """(classes compiled, compile ns) so far in this JVM. Every
+        compiled-class cache miss adds one sample to the compilation
+        histogram; its reservoir keeps no sum (and whole milliseconds),
+        so the seconds come from ``CodeGenerator.compileTime``, the
+        nanosecond total of the same compiles."""
+        return self._compiles.getCount(), self._codegen.compileTime()
 
     @contextlib.contextmanager
     def construct(self):
         self.op += 1
         self.rec.begin_op(self.op)
+        self._cg0 = self._codegen_now()
         with self.tracer.span("queries.construct", self.op):
             self.rec.arm_py4j()
             try:
@@ -436,6 +449,9 @@ class Profile:
         with self.tracer.span("exec.action", self.op):
             agg = checksum_frame(df)
             n, chk = agg.collect()[0]
+        count, ns = self._codegen_now()
+        self.rec.record(self.op, "codegen.compiles", count - self._cg0[0])
+        self.rec.record(self.op, "codegen.compile_s", (ns - self._cg0[1]) / 1e9)
         self.rec.after_action(self.op, agg)
         self.rec.end_op(self.op)
         self.df = df
@@ -458,7 +474,10 @@ def traced_record(names, runs) -> dict:
     ``layers`` counters under the per-layer names of BENCHMARK.json:
     ``queries.py4j_calls`` during construction, ``catalyst.*`` phase
     seconds and exchanges of the evaluated plan, and
-    ``functions.python_udf_s`` (Spark's ``udf.profiler=perf``). Under
+    ``functions.python_udf_s`` (Spark's ``udf.profiler=perf``), plus
+    ``codegen.compiles`` and ``codegen.compile_s``: the generated classes
+    compiled, and their compile seconds, over construction plus action
+    (0 on a warm run whose code is all in the compiled-class cache). Under
     ``jobs_by_group`` it holds jobs, tasks, task CPU, input, shuffle and
     spill of the construction's jobs (the eager barriers:
     checkpoints, driver collects) and of the action's jobs."""

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.clustering import _tdiv
+from .operators.clustering import _tdiv, check_literal_argmin_cells
 from .operators.ranking import argbest
 from .operators.dedup import (
     _spread,
@@ -8629,8 +8629,13 @@ def ivfadc_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
         .select("qid", "vec_id")
     )
     scanned = members.groupBy("qid").agg(F.count(F.lit(1)).alias("ns"))
-    hits = exact10.join(adc10, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("h")
+    # both sides are <= 64 x 10 rows by construction; the hint pins the
+    # build side, which AQE otherwise picks by stage completion order
+    # (a new plan variant compiles new code on a warm call)
+    hits = (
+        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("h"))
     )
     return (
         qs.select("qid")
@@ -8763,13 +8768,19 @@ def _pq_cb_argmin_sql(cb: dict[int, list[tuple[int, list[int]]]]) -> str:
     and the outer coercion raises AnalysisException instead of
     degrading — unreachable with the shipped fixtures (every m always
     has assignments), so assert loudly rather than emit a mistyped
-    literal (round-15 advisory)."""
+    literal (round-15 advisory). Raises ``ValueError`` past
+    ``operators.clustering.LITERAL_ARGMIN_MAX_CELLS`` codebook cells
+    (codewords × dims over all subspaces); the error names the
+    broadcast-join fallback."""
     missing = [m for m in range(4) if not cb.get(m)]
     if missing:
         raise ValueError(
             f"_pq_cb_argmin_sql: empty codebook subspace(s) {missing} — "
             "every m in 0..3 must hold at least one (cid, cv) entry"
         )
+    check_literal_argmin_cells(
+        sum(len(cv) for m in range(4) for _, cv in cb[m]), "_pq_cb_argmin_sql"
+    )
     per_m = []
     for m in range(4):
         entries = ", ".join(
@@ -8820,7 +8831,14 @@ def _pq_train_lloyd(
     the JVM, the centroid update is truncate-toward-zero integral
     division on Python ints (``_tdiv`` ≡ Spark ``DIV`` ≡ DuckDB ``//``),
     and empty cells drop because the update aggregate only yields
-    occupied (m, cid) groups."""
+    occupied (m, cid) groups.
+
+    Compiled code: each round's codebook reaches generated code as one
+    folded array literal held by reference, not inlined, so a retrain
+    on other data reuses the compiled classes. Measured in one session
+    (``final_recon=True``): the first call at sf0.001 compiled 24
+    classes; later calls at sf0.001, sf0.01 (other codebooks), sf0.1
+    and sf0.001 again compiled 0 each."""
     emb = load_table(spark, sf, "embeddings")
     ms = F.array(*[F.lit(i) for i in range(4)])
     sub = (
@@ -10157,8 +10175,13 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("rn") <= 10)
         .select("qid", "vec_id")
     )
-    hits = exact10.join(adc10, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("h")
+    # both sides are <= 64 x 10 rows by construction; the hint pins the
+    # build side, which AQE otherwise picks by stage completion order
+    # (a new plan variant compiles new code on a warm call)
+    hits = (
+        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("h"))
     )
     return (
         qs.select("qid")

@@ -13,6 +13,23 @@ Config choices are scale-oriented:
   real cluster AQE coalesces from a high initial number, so we set the
   initial number from the environment rather than hardcoding 200.
 - Arrow enabled for the Pandas-UDF paths (similarity / multimodal ops).
+- ``spark.sql.codegen.useIdInClassName=false``: a whole-stage-codegen
+  class name otherwise embeds its stage number, and AQE numbers stages in
+  the order query stages materialize, which changes from call to call.
+  Identical generated code then misses Spark's compiled-class cache,
+  which is keyed by the source text. Measured in one session on 4 vCPUs
+  with the default names: each warm call of
+  ``pq_recall_calibration_trained`` compiled 66-72 classes and each of
+  ``ivfadc_recall_calibration`` 77-82; with the larger cache below but
+  stage numbers still in the names, warm calls compiled 0-20. With both
+  settings, warm calls of both compile 0.
+- ``spark.sql.codegen.cache.maxEntries`` = ``CODEGEN_CACHE_ENTRIES``
+  (Spark's default is 100): the two ``recipe_audit`` entries alone need
+  about 120 distinct classes, so alternating them thrashed a 100-entry
+  cache. The constant records the count it is sized from.
+
+Both codegen settings change no plan and no result; ``extra_conf``
+overrides them like any other setting.
 """
 
 from __future__ import annotations
@@ -22,6 +39,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "odgovlt-spark-engine"
+
+# Compiled-class cache size. Measured at sf0.01 on 4 vCPUs, in one session
+# with stage-free class names: one pass over bench.py's 150 HEADLINE
+# entries compiled 2,131 classes (as many distinct classes as it needs)
+# and a second pass 9; with Spark's defaults the passes compiled 5,303
+# and 4,814. 4,096 is that count plus about 90% headroom, for the test
+# suite's shared session and entries outside the headline set. A cached
+# class holds Metaspace, so the cache stays bounded.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def cpu_count() -> int:
@@ -65,6 +91,9 @@ def get_spark(
         # parquet min/max statistics, which kills timestamp predicate
         # pushdown and the snapshot manifests' file-skipping stats
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # repeated calls reuse their compiled code (module docstring)
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if master:
         builder = builder.master(master)

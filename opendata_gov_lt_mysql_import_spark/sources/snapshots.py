@@ -73,6 +73,7 @@ import functools
 import json
 import operator
 import os
+import re
 import threading
 import uuid
 
@@ -189,6 +190,21 @@ def current_version(table_dir: str) -> int | None:
 def _load_manifest(table_dir: str, version: int) -> dict:
     with open(_manifest_path(table_dir, version)) as fh:
         return json.load(fh)
+
+
+# ``_put_manifest`` writes "version", "parent" and "mode" first
+_MANIFEST_HEAD = re.compile(
+    r'\{"version": -?\d+, "parent": (?:-?\d+|null), "mode": "(\w+)"'
+)
+
+
+def _manifest_mode(table_dir: str, version: int) -> str:
+    """The ``mode`` of one version, read from the first bytes of its
+    manifest without parsing the file list and per-file stats; a
+    manifest laid out otherwise is parsed in full."""
+    with open(_manifest_path(table_dir, version)) as fh:
+        head = _MANIFEST_HEAD.match(fh.read(128))
+    return head.group(1) if head else _load_manifest(table_dir, version)["mode"]
 
 
 # integer/float widening chains — an append whose column type sits
@@ -847,14 +863,19 @@ def _added_files(table_dir: str, base: dict, target: dict) -> list[str]:
     the rows added between them, which is only what the diff means
     across APPEND lineage: a non-append version in (base, target]
     raises ValueError, a vacuumed one FileNotFoundError. Shared by
-    :func:`read_snapshot_changes` and the snapshot stream reader."""
+    :func:`read_snapshot_changes` and the snapshot stream reader. The
+    versions in between are read for their mode only
+    (:func:`_manifest_mode`), so the check does not grow with their
+    file lists."""
     for v in range(base["version"] + 1, target["version"] + 1):
-        if not os.path.exists(_manifest_path(table_dir, v)):
+        try:
+            mode = _manifest_mode(table_dir, v)
+        except FileNotFoundError:
             raise FileNotFoundError(
                 f"version {v} was vacuumed: incremental lineage broken — "
                 "read the full version (or restart the stream) instead"
-            )
-        if _load_manifest(table_dir, v)["mode"] != "append":
+            ) from None
+        if mode != "append":
             raise ValueError(
                 f"version {v} is not an append: file-set diff does not "
                 "mean added rows — read the full version (or restart the "

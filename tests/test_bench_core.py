@@ -1,7 +1,8 @@
 """Pins for bench.py's one timing core: the ``run`` and ``ab``
 subcommands refuse unregistered names before Spark starts, ``run``
 reports the same results as an in-process evaluation and, traced, the
-layers of perfbench/layers.py, and the A/B record keeps what completed."""
+layers of perfbench/layers.py plus the codegen counters, and the A/B
+record keeps what completed."""
 
 from __future__ import annotations
 
@@ -39,7 +40,9 @@ def test_unregistered_name_exits_2_without_a_jvm(command, sf_dir):
 @pytest.mark.parametrize("trace", [False, True], ids=["untraced", "traced"])
 def test_run_matches_in_process_evaluation(spark, sf_dir, trace):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir)
-    argv = [sys.executable, "bench.py", "run", *ENTRIES, "--runs", "1"]
+    # traced: three runs, so the warm runs' codegen counters are seen
+    runs = 3 if trace else 1
+    argv = [sys.executable, "bench.py", "run", *ENTRIES, "--runs", str(runs)]
     subprocess.run(
         argv + ["--trace"] * trace, cwd=bench.HERE, env=env,
         capture_output=True, text=True, timeout=300, check=True,
@@ -51,13 +54,21 @@ def test_run_matches_in_process_evaluation(spark, sf_dir, trace):
         want = bench.force_eval_chk(queries()[name](spark, sf_dir))
         entry = record["entries"][name]
         assert (entry["rows"], entry["chk"]) == want
+        assert len(entry["runs"]) == runs
         if trace:
-            (run,) = entry["runs"]
+            run = entry["runs"][0]
             assert run["jobs_by_group"]["exec.action"]["jobs"] >= 1
             assert run["queries.py4j_calls"] > 0
             phases = [f"catalyst.{p}_s" for p in ("analysis", "optimization", "planning")]
             assert all(p in run for p in phases)
             assert sum(run[p] for p in phases) > 0
+            for r in entry["runs"]:
+                assert r["codegen.compiles"] >= 0 and r["codegen.compile_s"] >= 0
+    if trace:
+        # a cold run compiles; a warm run reuses the classes compiled before it
+        runs_of = {name: record["entries"][name]["runs"] for name in ENTRIES}
+        assert runs_of["image_dhash_dedup"][0]["codegen.compiles"] > 0
+        assert runs_of["q1_pricing_summary"][2]["codegen.compiles"] == 0
 
 
 def test_ab_record_keeps_completed_rounds_and_flags_mismatch():

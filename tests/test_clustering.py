@@ -272,6 +272,31 @@ def test_lloyd_fixed_point_validation_and_negatives(spark):
         lloyd_fixed_point(sparse, k=2, iters=1)
 
 
+def test_literal_argmin_refuses_more_cells_than_the_limit():
+    """Both literal-SQL argmins accept up to LITERAL_ARGMIN_MAX_CELLS
+    cells (centroids × dims) and refuse one centroid more with a typed
+    error that names the broadcast-join fallback."""
+    import pytest
+
+    from opendata_gov_lt_mysql_import_spark.operators.clustering import (
+        LITERAL_ARGMIN_MAX_CELLS,
+        _cent_argmin_expr,
+    )
+    from opendata_gov_lt_mysql_import_spark.queries_ml import _pq_cb_argmin_sql
+
+    fallback = r"broadcast join \(operators\.clustering\.assign_clusters\)"
+    k = LITERAL_ARGMIN_MAX_CELLS // 64 + 1
+    with pytest.raises(ValueError, match=fallback):
+        _cent_argmin_expr({c: [0] * 64 for c in range(k)})
+
+    per_m = LITERAL_ARGMIN_MAX_CELLS // (4 * 16)
+    cb = {m: [(c, [0] * 16) for c in range(per_m)] for m in range(4)}
+    assert _pq_cb_argmin_sql(cb).startswith("array_min(")  # at the limit
+    cb[0].append((per_m, [0] * 16))
+    with pytest.raises(ValueError, match=fallback):
+        _pq_cb_argmin_sql(cb)
+
+
 class TestKCenterGreedy:
     def test_planted_geometry_picks_and_radii(self, spark):
         from opendata_gov_lt_mysql_import_spark.operators.clustering import (

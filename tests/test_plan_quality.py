@@ -1578,6 +1578,28 @@ def test_tdiv_matches_spark_div_on_negatives(spark):
         assert _tdiv(a, b) == rows[f"r{i}"], (a, b)
 
 
+def test_warm_audit_calls_compile_nothing(spark, sf_dir, queries):
+    """Repeated calls reuse their compiled code (session.py): alternating
+    the two recipe_audit entries three times in one session, calls 2
+    and 3 of each compile no generated class, and every call gives the
+    same rows and checksum. With AQE's stage number in the class names
+    each warm call compiled 66-82 classes, because the number changes
+    from call to call and identical code then misses the cache."""
+    from bench import force_eval_chk
+
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    names = ("pq_recall_calibration_trained", "ivfadc_recall_calibration")
+    calls: dict[str, list] = {name: [] for name in names}
+    for _ in range(3):
+        for name in names:
+            before = compiled.getCount()
+            result = force_eval_chk(queries[name](spark, sf_dir))
+            calls[name].append((compiled.getCount() - before, result))
+    for name, seen in calls.items():
+        assert len({result for _, result in seen}) == 1, (name, seen)
+        assert [n for n, _ in seen[1:]] == [0, 0], (name, seen)
+
+
 def test_audit_panel_is_fixed_count_takeordered(spark, sf_dir):
     """The recall audits' query panel (round-11 fix of the %31 defect):
     it must be a FIXED count — 64 rows at any corpus size, so the

@@ -592,6 +592,27 @@ class TestSnapshotMaintenance:
         with pytest.raises(ValueError, match="not an append"):
             read_snapshot_changes(spark, t, 1)
 
+    def test_incremental_read_parses_only_base_and_target_manifests(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Over a 20-version append range the lineage check reads each
+        version's mode only: the base and target manifests are the only
+        ones parsed in full, however long the stacked file lists grow."""
+        from opendata_gov_lt_mysql_import_spark.sources import snapshots
+
+        t = str(tmp_path / "tbl")
+        for i in range(21):  # v0..v20, each stacking one more file
+            commit_snapshot(spark.range(10 * i, 10 * i + 10), t)
+        parsed = []
+        load = snapshots._load_manifest
+        monkeypatch.setattr(
+            snapshots, "_load_manifest",
+            lambda table_dir, v: parsed.append(v) or load(table_dir, v),
+        )
+        delta = snapshots.read_snapshot_changes(spark, t, from_version=0)
+        assert delta.count() == 200
+        assert sorted(parsed) == [0, 20]
+
     def test_compaction_preserves_rows_and_shrinks_files(self, spark, tmp_path):
         from opendata_gov_lt_mysql_import_spark.sources.snapshots import (
             compact_snapshot,
