@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .textanalysis import tokens
 
 
@@ -133,8 +134,8 @@ def learn_bpe(
         vocab = apply_merge(vocab, row["left"], row["right"])
         if (rank + 1) % checkpoint_every == 0:
             vocab = vocab.localCheckpoint(eager=True)
-    return spark.createDataFrame(
-        merges, "rank BIGINT, left STRING, right STRING, pair_count BIGINT"
+    return local_frame(
+        spark, merges, "rank BIGINT, left STRING, right STRING, pair_count BIGINT"
     )
 
 

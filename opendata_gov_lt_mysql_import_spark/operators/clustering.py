@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
+
 
 def _sqdist(vec: Column, centroid: Column) -> Column:
     """Squared euclidean distance, sequential left-to-right summation
@@ -324,8 +326,9 @@ def lloyd_fixed_point(
         F.col("_b.lbl").alias("cluster"),
         F.col("_b.d2").alias("d2"),
     )
-    cent = e.sparkSession.createDataFrame(
-        [(cl, cv) for cl, cv in sorted(cents.items())],
+    cent = local_frame(
+        e.sparkSession,
+        sorted(cents.items()),
         "cluster long, centroid array<bigint>",
     )
     return assigned, cent

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_frame
 from .textanalysis import tokens
 
 
@@ -702,7 +703,7 @@ def connected_components(
         nodes = set(parent)
         nodes.update(r["a"] for r in edges.select("a").distinct().collect())
         out = [(n, find(n)) for n in sorted(nodes)]
-        return spark.createDataFrame(out, "id long, cluster long")
+        return local_frame(spark, out, "id long, cluster long")
     parts = max(1, min(
         spark.sparkContext.defaultParallelism, n_edges // 100_000 + 1
     ))

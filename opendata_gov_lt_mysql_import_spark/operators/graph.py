@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..sources.local import local_frame
+
 
 def pagerank(
     edges: DataFrame,
@@ -263,7 +265,8 @@ def triangle_count(
     n_nodes = deg.count()
     n_edges = oriented.count()  # oriented rows == canonical edges
     n_triangles = closed.count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_nodes, n_edges, n_triangles)],
-        schema="n_nodes long, n_edges long, n_triangles long",
+        "n_nodes long, n_edges long, n_triangles long",
     )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.diff import changed_rows
 from ..operators.joins import stale_rows
+from ..sources.local import local_frame
 
 
 def ensure_harvest_user(users: DataFrame, name: str = "harvest") -> DataFrame:
@@ -44,9 +45,8 @@ def ensure_harvest_user(users: DataFrame, name: str = "harvest") -> DataFrame:
     )
     defaults = {"name": name, "sysadmin": True, "password": "secret123"}
     spark = users.sparkSession
-    bootstrap = spark.createDataFrame(
-        [tuple(defaults.get(f.name) for f in users.schema.fields)],
-        schema=users.schema,
+    bootstrap = local_frame(
+        spark, [tuple(defaults.get(f.name) for f in users.schema.fields)], users.schema
     )
     missing = bootstrap.join(users.select("name"), on="name", how="left_anti")
     return promoted.unionByName(missing)

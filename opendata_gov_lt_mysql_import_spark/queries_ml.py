@@ -38,6 +38,7 @@ from .operators.textanalysis import (
     tokens,
 )
 from .queries import query
+from .sources.local import local_frame
 from .sources.parquet import load_table
 
 
@@ -7866,7 +7867,8 @@ def classifier_train_perceptron_q(spark: SparkSession, sf: str) -> DataFrame:
         )
         for b in buckets
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "bucket long, w_init long, w_ep1 long, w_ep2 long, w_ep3 long, "
         "err1 long, err2 long, err3 long",
@@ -8266,8 +8268,12 @@ def pq_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("rn") <= 10)
         .select("qid", "vec_id")
     )
-    hits = exact10.join(adc10, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("h")
+    # both sides are <= 64 x 10 rows by construction; the hint pins the
+    # build side, which AQE otherwise picks by stage completion order
+    hits = (
+        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
+        .groupBy("qid")
+        .agg(F.count(F.lit(1)).alias("h"))
     )
     return (
         qs.select("qid")
@@ -8921,24 +8927,23 @@ def _pq_train_lloyd(
 
 def _pq_train_frames(
     spark: SparkSession, sf: str, iters: int = 2, scale: int = 10**4
-) -> tuple[DataFrame, list[DataFrame], list[DataFrame]]:
-    """The fixed-point Lloyd trainer's frames, shared by the trace
-    report and the trained-codebook ADC search: (sub, cbs, asgs) where
-    ``sub`` is the quantized subvector explode, ``cbs[t]`` is codebook
-    t (t=0 the data-as-codebook init) as a LocalRelation twin of the
-    driver-held codebook (broadcast-joining it costs no scan job), and
-    ``asgs[t]`` the assignment against codebook t (so asgs[-1] is the
-    final coded corpus). Since round 15 the rounds are driver-
-    coordinated (``_pq_train_lloyd``): the corpus is never shuffled."""
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The fixed-point Lloyd trainer's frames, shared by the trained-
+    codebook ADC search and its recall audit: (sub, cb, asg) where
+    ``sub`` is the quantized subvector explode, ``cb`` the final
+    codebook as a LocalRelation twin of the driver-held codebook (its
+    rows live in the plan: broadcasting it reads no file and starts no
+    Python worker) and ``asg`` the assignment against it (the final
+    coded corpus). Since round 15 the rounds are driver-coordinated
+    (``_pq_train_lloyd``): the corpus is never shuffled."""
     sub, cb_lists, asgs, _ = _pq_train_lloyd(spark, sf, iters, scale)
-    cbs = [
-        spark.createDataFrame(
-            [(m, cid, cv) for m in sorted(cl) for cid, cv in cl[m]],
-            "m long, cid long, cv array<bigint>",
-        )
-        for cl in cb_lists
-    ]
-    return sub, cbs, asgs
+    cl = cb_lists[-1]
+    cb = local_frame(
+        spark,
+        [(m, cid, cv) for m in sorted(cl) for cid, cv in cl[m]],
+        "m long, cid long, cv array<bigint>",
+    )
+    return sub, cb, asgs[-1]
 
 
 @query("pq_train_codebook", _pq_train_oracle())
@@ -8986,8 +8991,8 @@ def pq_train_codebook_q(spark: SparkSession, sf: str) -> DataFrame:
                     sum(sum(cv) for _, cv in cl[m]),
                 )
             )
-    return spark.createDataFrame(
-        rows, "iter long, m long, recon_err long, n_cw long, cb_sum long"
+    return local_frame(
+        spark, rows, "iter long, m long, recon_err long, n_cw long, cb_sum long"
     )
 
 
@@ -9009,10 +9014,10 @@ def pq_adc_topk_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     per-round map-only literal argmin + bounded 32-row update collects
     (round-15 driver-coordinated Lloyd; training is the amortized
     offline half and a served system pays only the scan)."""
-    sub, cbs, asgs = _pq_train_frames(spark, sf)
+    sub, cb, asg = _pq_train_frames(spark, sf)
     qt = (
         sub.filter(F.col("vec_id") == 0)
-        .join(F.broadcast(cbs[-1]), "m")
+        .join(F.broadcast(cb), "m")
         .select(
             "m",
             "cid",
@@ -9026,7 +9031,7 @@ def pq_adc_topk_trained_q(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     adc = (
-        asgs[-1].select("vec_id", "m", "cid")
+        asg.select("vec_id", "m", "cid")
         .filter(F.col("vec_id") != 0)
         .join(F.broadcast(qt), ["m", "cid"])
         .groupBy("vec_id")
@@ -9947,7 +9952,7 @@ def _recipe_warm_dirs_locked(spark: SparkSession, sf: str) -> dict:
     commit_snapshot(_recipe_stage_agg(hist_lab, "h"), dirs["hist_agg"])
     commit_snapshot(_recipe_surv_slim(hist_lab), dirs["surv"])
     commit_snapshot(
-        spark.createDataFrame([(state["max_id"],)], "max_id long"),
+        local_frame(spark, [(state["max_id"],)], "max_id long"),
         dirs["meta"],
     )
     _RECIPE_WARM_DIRS[sf] = dirs
@@ -10119,7 +10124,7 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     scale = 10**4
-    sub, cbs, asgs = _pq_train_frames(spark, sf)
+    sub, cb, asg = _pq_train_frames(spark, sf)
     emb = load_table(spark, sf, "embeddings")
     panel = _audit_panel(emb)
     qemb = emb.select(
@@ -10134,7 +10139,7 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     )
     qt = (
         sub.join(F.broadcast(panel), "vec_id")
-        .join(F.broadcast(cbs[-1]), "m")
+        .join(F.broadcast(cb), "m")
         .select(
             F.col("vec_id").alias("qid"),
             "m",
@@ -10150,7 +10155,7 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     )
     w_adc = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
     adc10 = (
-        asgs[-1].select("vec_id", "m", "cid")
+        asg.select("vec_id", "m", "cid")
         .join(F.broadcast(qt), ["m", "cid"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
@@ -10808,7 +10813,7 @@ def _ivfadc_warm_probe(
     qres = [
         (pid, [qe[k] - pivots[pid][k] for k in range(64)]) for pid in probed
     ]
-    return probed, spark.createDataFrame(qres, "pid long, qr array<double>")
+    return probed, local_frame(spark, qres, "pid long, qr array<double>")
 
 
 def _ivfadc_serve(
@@ -11568,8 +11573,11 @@ def ivfadc_residual_gain_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     scanned = members.groupBy("qid").agg(F.count(F.lit(1)).alias("ns"))
 
     def hits(adc10):
-        return exact10.join(adc10, ["qid", "vec_id"]).groupBy("qid").agg(
-            F.count(F.lit(1)).alias("h")
+        # <= 64 x 10 rows by construction; the hint pins the build side
+        return (
+            exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
+            .groupBy("qid")
+            .agg(F.count(F.lit(1)).alias("h"))
         )
 
     hr = hits(adc10r).select("qid", F.col("h").alias("h_res"))
@@ -11764,7 +11772,7 @@ def ivfadc_nprobe_sweep_q(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).alias("ns")
     )
     hits = (
-        exact10.join(adc10, ["qid", "vec_id"])
+        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
         .groupBy("nprobe", "qid")
         .agg(F.count(F.lit(1)).alias("h"))
     )
@@ -11956,7 +11964,7 @@ def ivfadc_residual_nprobe_sweep_q(
         F.count(F.lit(1)).alias("ns")
     )
     hits = (
-        exact10.join(adc10, ["qid", "vec_id"])
+        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
         .groupBy("nprobe", "qid")
         .agg(F.count(F.lit(1)).alias("h"))
     )
@@ -13533,11 +13541,9 @@ def _ivf_retrain_serve(
         for pid, pe in pivn.items()
     )
     probed = [pid for _d, pid in dists[:2]]
-    qres = spark.createDataFrame(
-        [
-            (pid, [qe[k] - pivn[pid][k] for k in range(64)])
-            for pid in probed
-        ],
+    qres = local_frame(
+        spark,
+        [(pid, [qe[k] - pivn[pid][k] for k in range(64)]) for pid in probed],
         "pid long, qr array<double>",
     )
     rcb2 = read_snapshot(

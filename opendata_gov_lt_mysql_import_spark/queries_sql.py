@@ -561,26 +561,54 @@ _PROFILE_COLS = ("o_orderstatus", "o_orderpriority", "o_custkey", "o_totalprice"
 )
 def profile_orders(spark: SparkSession, sf: str) -> DataFrame:
     """Data-quality profiling (null rate, exact cardinality, min/max per
-    column) in ONE scan: a single wide aggregate row unpivoted with
-    stack(). Exact multi-column countDistinct costs one Expand (xN rows
-    map-side) — at 100 TB switch the cardinalities to approx_count_
-    distinct and the scan stays one pass with no Expand."""
-    # compact fixture parquet arrives as ONE partition; the Expand for
-    # exact multi-column distinct then runs single-core. Project to the
-    # profiled columns BEFORE spreading — Catalyst doesn't push the
-    # projection below an explicit round-robin Exchange, so an unpruned
-    # repartition would shuffle every column of the table.
+    column) in ONE scan: the distinct (column, value) cells, then a
+    single wide aggregate row over them unpivoted with stack(). The
+    cells multiply rows by the number of columns map-side — at 100 TB
+    switch the cardinalities to approx_count_distinct and aggregate the
+    scan directly.
+
+    The cells are the distinct rewrite done by hand. Several
+    count(DISTINCT) over different columns in one aggregate make
+    Catalyst build an Expand whose groups it orders by a hash of the
+    columns' expression ids; those ids are new on every call, so every
+    call generated new code (9-11 classes compiled per warm call at
+    sf0.01)."""
+    # compact fixture parquet arrives as ONE partition; the cell
+    # aggregation then runs single-core. Project to the profiled columns
+    # BEFORE spreading — Catalyst doesn't push the projection below an
+    # explicit round-robin Exchange, so an unpruned repartition would
+    # shuffle every column of the table.
     par = spark.sparkContext.defaultParallelism
     o = load_table(spark, sf, "orders").select(*_PROFILE_COLS).repartition(par)
-    aggs = []
-    for c in _PROFILE_COLS:
-        aggs += [
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            F.count_distinct(F.col(c)).alias(f"{c}__dist"),
-            F.min(c).cast("string").alias(f"{c}__min"),
-            F.max(c).cast("string").alias(f"{c}__max"),
-        ]
-    wide = o.agg(*aggs)
+    types = dict(o.dtypes)
+    slots = [f"v{j}" for j in range(len(_PROFILE_COLS))]
+
+    def cell(k: int) -> str:
+        # cell k of a row: column k in slot v{k}, typed nulls elsewhere
+        return "named_struct('k', %d, %s)" % (k, ", ".join(
+            f"'{v}', " + (c if j == k else f"CAST(NULL AS {types[c]})")
+            for j, (c, v) in enumerate(zip(_PROFILE_COLS, slots))
+        ))
+
+    # one group per distinct (k, value), n = its row count; the wide row
+    # is then plain aggregates over the groups (SQL strings: one py4j
+    # call each instead of one per Column node)
+    cells = (
+        o.selectExpr(f"inline(array({', '.join(cell(k) for k in range(len(slots)))}))")
+        .groupBy("k", *slots)
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    wide = cells.selectExpr(*[
+        e
+        for k, (c, v) in enumerate(zip(_PROFILE_COLS, slots))
+        for e in (
+            f"sum(CASE WHEN k = {k} THEN CAST({v} IS NULL AS BIGINT) * n END)"
+            f" AS {c}__nulls",
+            f"count({v}) AS {c}__dist",
+            f"CAST(min({v}) AS STRING) AS {c}__min",
+            f"CAST(max({v}) AS STRING) AS {c}__max",
+        )
+    ])
     stack_args = ", ".join(
         f"'{c}', {c}__nulls, {c}__dist, {c}__min, {c}__max"
         for c in _PROFILE_COLS

@@ -91,6 +91,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
+from .local import local_frame
+
 _MANIFEST_DIR = "_manifests"
 
 
@@ -606,7 +608,7 @@ def _read_files(
     """The manifest-relative files ``rels`` under resolved manifest
     ``m``'s declared schema (an empty frame when there are none)."""
     if not rels:
-        return spark.createDataFrame([], m["_struct"])
+        return local_frame(spark, [], m["_struct"])
     return spark.read.schema(m["_struct"]).parquet(
         *(os.path.join(table_dir, f) for f in rels)
     )
@@ -665,7 +667,8 @@ def merge_snapshot(
     shape — a daily batch against a big table) collects its distinct
     keys in one pass and each file is tested EXACTLY against its [min,
     max]; a source with more than 100,000 distinct keys falls back to
-    the overall key-range overlap; multi-column keys affect every file.
+    the overall key-range overlap; multi-column keys, and keys no file
+    has stats on (strings), affect every file without a probe.
     The rewrite is one anti-join (kept = affected ⟕̸ source keys) + a
     union; Spark broadcasts the key side when small. Source columns
     must match the declared schema by name. (Reference analog: the
@@ -684,7 +687,12 @@ def merge_snapshot(
         )
     source = source.select(*declared)
 
-    if len(keys) != 1:
+    stats = m.get("stats", {})
+    if len(keys) != 1 or not any(
+        (stats.get(rel) or {}).get(keys[0]) is not None for rel in m["files"]
+    ):
+        # no file has stats on the key (string keys never do, see
+        # _file_footer): no probe can prune, so skip its source pass
         affected = list(m["files"])
     else:
         key = keys[0]
@@ -694,7 +702,6 @@ def merge_snapshot(
         )
         if len(probe) <= _KEY_SET_CAP:
             key_set = sorted(_norm_stat_value(r[0]) for r in probe)
-            stats = m.get("stats", {})
 
             def may_hold_key(rel: str) -> bool:
                 st = (stats.get(rel) or {}).get(key)
