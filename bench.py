@@ -41,11 +41,13 @@ import inspect
 import io
 import json
 import os
+import re
 import subprocess
 import sys
 import tarfile
 import tempfile
 import time
+from collections import Counter
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
@@ -409,6 +411,22 @@ def time_entries(spark, names, runs, evaluate=force_eval_chk,
 # ---------------------------------------------------------------------------
 
 
+# one executed-plan node per line: tree drawing, an optional codegen
+# stage marker "*(n) ", then the operator name
+_PLAN_NODE = re.compile(r"^[\s:+|-]*(?:\*\(\d+\) )?([A-Z]\w*)")
+
+
+def plan_ops(agg) -> dict[str, int]:
+    """Each physical operator name in the final executed plan of ``agg``
+    with its count: the part of the plan string that
+    ``layers.count_exchanges`` reads, so two runs whose tables are equal
+    evaluated the same operators."""
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    ops = Counter(m.group(1) for m in map(_PLAN_NODE.match, final.splitlines()) if m)
+    return dict(sorted(ops.items()))
+
+
 class Profile:
     """The traced run's counters: every timed run is one op of a
     ``layers.SparkTracer`` and ``layers.LayerRecorder``, so the jobs of
@@ -419,6 +437,7 @@ class Profile:
         self.tracer = layers.SparkTracer(spark.sparkContext)
         self.rec = layers.LayerRecorder(spark)
         self.op = 0
+        self.ops: dict[int, dict[str, int]] = {}  # plan.ops per op
         self.df = None  # the last run's entry frame, for the plan dump
         jvm = spark._jvm
         self._compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
@@ -453,6 +472,7 @@ class Profile:
         self.rec.record(self.op, "codegen.compiles", count - self._cg0[0])
         self.rec.record(self.op, "codegen.compile_s", (ns - self._cg0[1]) / 1e9)
         self.rec.after_action(self.op, agg)
+        self.ops[self.op] = plan_ops(agg)
         self.rec.end_op(self.op)
         self.df = df
         return n, chk or 0
@@ -477,7 +497,9 @@ def traced_record(names, runs) -> dict:
     ``functions.python_udf_s`` (Spark's ``udf.profiler=perf``), plus
     ``codegen.compiles`` and ``codegen.compile_s``: the generated classes
     compiled, and their compile seconds, over construction plus action
-    (0 on a warm run whose code is all in the compiled-class cache). Under
+    (0 on a warm run whose code is all in the compiled-class cache), and
+    ``plan.ops``, the operator counts of the evaluated plan
+    (:func:`plan_ops`). Under
     ``jobs_by_group`` it holds jobs, tasks, task CPU, input, shuffle and
     spill of the construction's jobs (the eager barriers:
     checkpoints, driver collects) and of the action's jobs."""
@@ -509,6 +531,7 @@ def traced_record(names, runs) -> dict:
             op += 1
             run = _run_fields(r)
             run.update((k, round(v, 4)) for k, v in sorted(prof.rec.values[op].items()))
+            run["plan.ops"] = prof.ops[op]
             run["jobs_by_group"] = {
                 phase: {k: round(v, 4) for k, v in vars(by_group[f"pb:{op}:{phase}"]).items()
                         if k not in ("group", "scan_rows")}

@@ -1485,19 +1485,13 @@ def nearest_centroid_assign_q(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("cents")
     )
 
-    def d2(c):
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), c["centroid"], lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     best = F.array_min(
         F.transform(
             F.col("cents"),
-            lambda c: F.struct(d2(c).alias("d2"), c["c_label"].alias("lbl")),
+            lambda c: F.struct(
+                _l2_col(F.col("embedding"), c["centroid"]).alias("d2"),
+                c["c_label"].alias("lbl"),
+            ),
         )
     )
     return e.crossJoin(F.broadcast(cents)).select(
@@ -7602,8 +7596,6 @@ def ann_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     per-query ranking shuffles Q×N scored rows on qid. At extreme N
     the exact side becomes per-query TakeOrdered (bounded state) — the
     panel stays the unit of account either way."""
-    from pyspark.sql import Window
-
     from .operators.similarity import cosine, dot
 
     # round-15: the exact Q×N cosine side and the N×16 assignment both
@@ -7623,44 +7615,26 @@ def ann_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     probe = _probe_cells(
         qs, piv, dot(F.col("qe"), F.col("ce")), "cid", 2, True
     ).select("qid", "cid")
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc("sim"), F.asc("vec_id")
-    )
-    top10 = (
-        emb.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            F.round(cosine(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
-    hits = (
-        top10.join(asg, "vec_id")
-        .join(probe, ["qid", "cid"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    top10 = _exact_topk(
+        emb,
+        qs,
+        F.round(cosine(F.col("embedding"), F.col("qe")), 4),
+        largest=True,
     )
     probed = (
         probe.join(asg, "cid")
         .groupBy("qid")
         .agg(F.count(F.lit(1)).alias("np"))
     )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .join(probed, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("np"), F.lit(0)).cast("long").alias("n_probed"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
+    # membership recall: an exact top-10 row is a hit when its cell
+    # was probed
+    report, recall = _recall_report(
+        qs.select("qid"), top10.join(asg, "vec_id"), probe, on=("qid", "cid")
+    )
+    return report.join(probed, "qid", "left").select(
+        "qid",
+        F.coalesce(F.col("np"), F.lit(0)).cast("long").alias("n_probed"),
+        *recall,
     )
 
 
@@ -8008,14 +7982,6 @@ def _pq_sub(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _pq_dist():
-    return F.aggregate(
-        F.zip_with(F.col("sv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_assign(spark: SparkSession, sf: str) -> DataFrame:
     """(vec_id, m, cid, d): every subvector's nearest codeword (squared
     L2, codeword-id tiebreak) from the data-as-codebook rows 1..8 —
@@ -8026,7 +7992,7 @@ def _pq_assign(spark: SparkSession, sf: str) -> DataFrame:
     )
     return argbest(
         sub.join(F.broadcast(cb), "m").select(
-            "vec_id", "m", "cid", _pq_dist().alias("d")
+            "vec_id", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("d")
         ),
         ["vec_id", "m"],
         "d",
@@ -8148,7 +8114,7 @@ def pq_adc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     qt = (
         sub.filter(F.col("vec_id") == 0)
         .join(F.broadcast(cb), "m")
-        .select("m", "cid", _pq_dist().alias("qd"))
+        .select("m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     adc = (
         asg.filter(F.col("vec_id") != 0)
@@ -8219,8 +8185,6 @@ def pq_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     audit's Q×N cross join with Q = 64 constant BY CONSTRUCTION (the
     panel is a LIMIT, not a modulus — it does not grow with the
     corpus)."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf, "embeddings")
     panel = _audit_panel(emb)
     sub = _pq_sub(spark, sf)
@@ -8232,60 +8196,37 @@ def pq_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
         sub.join(F.broadcast(panel), "vec_id")
         .join(F.broadcast(cb), "m")
         .select(
-            F.col("vec_id").alias("qid"), "m", "cid", _pq_dist().alias("qd")
+            F.col("vec_id").alias("qid"),
+            "m",
+            "cid",
+            _l2_col(F.col("sv"), F.col("cv")).alias("qd"),
         )
     )
-    w_adc = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
-    adc10 = (
+    adc10 = _topk_per_query(
         asg.join(F.broadcast(qt), ["m", "cid"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
     )
     qs = emb.join(F.broadcast(panel), "vec_id").select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").cast("array<double>").alias("qe"),
     )
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("e"), F.col("qe"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
+    exact10 = _exact_topk(
         emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-        .crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(l2, 4).alias("d"))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+        ),
+        qs,
+        F.round(_l2_col(F.col("e"), F.col("qe")), 4),
     )
     # both sides are <= 64 x 10 rows by construction; the hint pins the
     # build side, which AQE otherwise picks by stage completion order
-    hits = (
-        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    report, recall = _recall_report(
+        qs.select("qid"), exact10, F.broadcast(adc10)
     )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
-    )
+    return report.select("qid", *recall)
 
 
 @query(
@@ -8478,7 +8419,7 @@ def ann_ivfadc_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     qt = (
         sub.filter(F.col("vec_id") == 0)
         .join(F.broadcast(cb), "m")
-        .select("m", "cid", _pq_dist().alias("qd"))
+        .select("m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     asg = _pq_assign(spark, sf).select("vec_id", "m", "cid")
     adc = (
@@ -8575,8 +8516,6 @@ def ivfadc_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
     panel is a LIMIT); ADC ranking joins the broadcast 64×32 lookup
     tables against code columns only; the exact side is the audit's
     Q×N cross join with Q = 64."""
-    from pyspark.sql import Window
-
     from .operators.similarity import dot
 
     emb64 = load_table(spark, sf, "embeddings").select(
@@ -8604,57 +8543,35 @@ def ivfadc_recall_calibration_q(spark: SparkSession, sf: str) -> DataFrame:
         sub.join(F.broadcast(panel), "vec_id")
         .join(F.broadcast(cb), "m")
         .select(
-            F.col("vec_id").alias("qid"), "m", "cid", _pq_dist().alias("qd")
+            F.col("vec_id").alias("qid"),
+            "m",
+            "cid",
+            _l2_col(F.col("sv"), F.col("cv")).alias("qd"),
         )
     )
     asg = _pq_assign(spark, sf).select("vec_id", "m", "cid")
-    w_adc = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
-    adc10 = (
+    adc10 = _topk_per_query(
         members.join(asg, "vec_id")
         .join(F.broadcast(qt), ["qid", "m", "cid"])
         .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
     )
-    l2 = F.aggregate(
-        F.zip_with(
-            F.col("e"), F.col("qe"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
-        emb64.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", F.round(l2, 4).alias("d"))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+    exact10 = _exact_topk(
+        emb64, qs, F.round(_l2_col(F.col("e"), F.col("qe")), 4)
     )
     scanned = members.groupBy("qid").agg(F.count(F.lit(1)).alias("ns"))
     # both sides are <= 64 x 10 rows by construction; the hint pins the
     # build side, which AQE otherwise picks by stage completion order
     # (a new plan variant compiles new code on a warm call)
-    hits = (
-        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    report, recall = _recall_report(
+        qs.select("qid"), exact10, F.broadcast(adc10)
     )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .join(scanned, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
+    return report.join(scanned, "qid", "left").select(
+        "qid",
+        F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
+        *recall,
     )
 
 
@@ -9018,17 +8935,7 @@ def pq_adc_topk_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     qt = (
         sub.filter(F.col("vec_id") == 0)
         .join(F.broadcast(cb), "m")
-        .select(
-            "m",
-            "cid",
-            F.aggregate(
-                F.zip_with(
-                    F.col("sv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("qd"),
-        )
+        .select("m", "cid", _il2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     adc = (
         asg.select("vec_id", "m", "cid")
@@ -10121,8 +10028,6 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
     the audit contract — panel × 32 lookup tables broadcast, the ADC
     scan touching codes only, the exact side Q×N with Q = 64 constant
     BY CONSTRUCTION."""
-    from pyspark.sql import Window
-
     scale = 10**4
     sub, cb, asg = _pq_train_frames(spark, sf)
     emb = load_table(spark, sf, "embeddings")
@@ -10144,61 +10049,26 @@ def pq_recall_calibration_trained_q(spark: SparkSession, sf: str) -> DataFrame:
             F.col("vec_id").alias("qid"),
             "m",
             "cid",
-            F.aggregate(
-                F.zip_with(
-                    F.col("sv"), F.col("cv"), lambda a, b: (a - b) * (a - b)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("qd"),
+            _il2_col(F.col("sv"), F.col("cv")).alias("qd"),
         )
     )
-    w_adc = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
-    adc10 = (
+    adc10 = _topk_per_query(
         asg.select("vec_id", "m", "cid")
         .join(F.broadcast(qt), ["m", "cid"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
-        .agg(F.sum("qd").cast("long").alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+        .agg(F.sum("qd").cast("long").alias("adc")),
+        "adc",
+        10,
     )
-    il2 = F.aggregate(
-        F.zip_with(
-            F.col("ev"), F.col("qe"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
-        qemb.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", il2.alias("d"))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
+    exact10 = _exact_topk(qemb, qs, _il2_col(F.col("ev"), F.col("qe")))
     # both sides are <= 64 x 10 rows by construction; the hint pins the
     # build side, which AQE otherwise picks by stage completion order
     # (a new plan variant compiles new code on a warm call)
-    hits = (
-        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    report, recall = _recall_report(
+        qs.select("qid"), exact10, F.broadcast(adc10)
     )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
-    )
+    return report.select("qid", *recall)
 
 
 @query(
@@ -10444,11 +10314,90 @@ _RESCL_CTES = """
 
 
 def _l2_col(a, b):
+    """Squared L2 over two double arrays, summed left to right."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _il2_col(a, b):
+    """Exact integer squared-L2 over two BIGINT arrays — order-free
+    (integer addition is associative), so cross-engine replay is
+    bit-exact with no ulp boundary at all."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _topk_per_query(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    by: tuple[str, ...] = ("qid",),
+    largest: bool = False,
+    carry: tuple[str, ...] = (),
+    tie: str = "vec_id",
+) -> DataFrame:
+    """Rows (*by, tie, *carry): the ``k`` best rows of ``scored`` per
+    ``by`` key by ``score`` (smallest, or largest with ``largest``),
+    ties to the smaller ``tie``. One row_number() window and a filter;
+    the rank ``rn`` can be carried too."""
+    from pyspark.sql import Window
+
+    order = F.desc(score) if largest else F.asc(score)
+    w = Window.partitionBy(*by).orderBy(order, F.asc(tie))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select(*by, tie, *carry)
+    )
+
+
+def _exact_topk(
+    corpus: DataFrame, qs: DataFrame, d: Column, largest: bool = False
+) -> DataFrame:
+    """(qid, vec_id): each query's exact top 10 of ``corpus`` by the
+    score ``d`` over the ``corpus`` × broadcast ``qs`` cross join, the
+    query itself excluded — a recall audit's Q×N side."""
+    return _topk_per_query(
+        corpus.crossJoin(F.broadcast(qs))
+        .filter(F.col("vec_id") != F.col("qid"))
+        .select("qid", "vec_id", d.alias("d")),
+        "d",
+        10,
+        largest=largest,
+    )
+
+
+def _recall_report(
+    base: DataFrame,
+    exact: DataFrame,
+    approx: DataFrame,
+    by: tuple[str, ...] = ("qid",),
+    on: tuple[str, ...] = ("qid", "vec_id"),
+    suffix: str = "",
+) -> tuple[DataFrame, list[Column]]:
+    """(report, columns) of a recall@10 audit. ``report`` is ``base``
+    (one row per ``by`` key: the whole query panel) left-joined with
+    h<suffix>, the count per ``by`` of the ``exact`` top-10 rows that
+    ``approx`` also holds, matched on ``on``. The columns are
+    hits10<suffix> and recall_bp<suffix> (hits × 1000, recall@10 in
+    basis points), 0 rather than NULL for a query with no hit."""
+    h = "h" + suffix
+    hits = (
+        exact.join(approx, list(on))
+        .groupBy(*by)
+        .agg(F.count(F.lit(1)).alias(h))
+    )
+    n = F.coalesce(F.col(h), F.lit(0))
+    return base.join(hits, list(by), "left"), [
+        n.cast("long").alias("hits10" + suffix),
+        (n * 1000).cast("long").alias("recall_bp" + suffix),
+    ]
 
 
 def _assign_cells(
@@ -10482,15 +10431,13 @@ def _probe_cells(
     <= ``n`` under (d ASC, or DESC with ``largest``; key ASC). A window,
     not ``argbest``: the multi-probe callers need the top n, not the
     top 1."""
-    from pyspark.sql import Window
-
-    order = F.desc("d") if largest else F.asc("d")
-    w = Window.partitionBy("qid").orderBy(order, F.asc(key))
-    return (
-        qs.crossJoin(F.broadcast(piv))
-        .select("qid", key, *carry, d.alias("d"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n)
+    return _topk_per_query(
+        qs.crossJoin(F.broadcast(piv)).select("qid", key, *carry, d.alias("d")),
+        "d",
+        n,
+        largest=largest,
+        carry=(*carry, "d", "rn"),
+        tie=key,
     )
 
 
@@ -10525,7 +10472,7 @@ def _pq_encode_with(sub: DataFrame, cb: DataFrame) -> DataFrame:
     keep = [c for c in sub.columns if c != "sv"]
     return argbest(
         sub.join(F.broadcast(cb), "m").select(
-            *keep, "cid", _pq_dist().alias("d")
+            *keep, "cid", _l2_col(F.col("sv"), F.col("cv")).alias("d")
         ),
         ["vec_id", "m"],
         "d",
@@ -10698,7 +10645,7 @@ def ann_ivfadc_residual_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     qt = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb), "m")
-        .select("pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     members = asgc.join(
         F.broadcast(probe.select("pid")), "pid"
@@ -10837,7 +10784,7 @@ def _ivfadc_serve(
     qt = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb), "m")
-        .select("pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     codes = read_snapshot_pruned(
         spark, dirs["codes"], [("pid", "in", probed)], version=version
@@ -11168,8 +11115,6 @@ def _ivfadc_serve_batched(
     query panel through it. Codes are read at the pinned pre-ingest
     version (the same version every per-query serve pins), so both
     dispatch arms serve the identical table state."""
-    from pyspark.sql import Window
-
     from .sources.snapshots import read_snapshot
 
     rcb = read_snapshot(spark, dirs["codebook"], version=dirs["codebook_version"])
@@ -11185,23 +11130,20 @@ def _ivfadc_serve_batched(
     qtres = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb), "m")
-        .select("qid", "pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("qid", "pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     codes = read_snapshot(
         spark, dirs["codes"], version=dirs["codes_base_version"]
     )
-    w_adc = Window.partitionBy("qid").orderBy(
-        F.asc("adc_dist"), F.asc("vec_id")
-    )
-    return (
+    return _topk_per_query(
         codes.join(F.broadcast(probe.select("qid", "pid")), "pid")
         .filter(F.col("vec_id") != F.col("qid"))
         .join(F.broadcast(qtres), ["qid", "pid", "m", "cid"])
         .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc_dist"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id", "adc_dist")
+        .agg(F.round(F.sum("qd"), 4).alias("adc_dist")),
+        "adc_dist",
+        10,
+        carry=("adc_dist",),
     )
 
 
@@ -11506,8 +11448,6 @@ def ivfadc_residual_gain_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     (64×2×32 residual + 64×32 raw rows) against code columns only,
     Q×N exact side; the two ADC rankings share the one members
     frame."""
-    from pyspark.sql import Window
-
     cl, piv0, asgc, rcb, rasg, ccb, casg = _rescl_frames(spark, sf)
     panel = _audit_panel(cl)
     qs = cl.join(F.broadcast(panel), "vec_id").select(
@@ -11530,78 +11470,44 @@ def ivfadc_residual_gain_audit_q(spark: SparkSession, sf: str) -> DataFrame:
     qtres = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb), "m")
-        .select("qid", "pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("qid", "pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
-    w_adc = Window.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
-
-    def top10(scored):
-        return (
-            scored.withColumn("rn", F.row_number().over(w_adc))
-            .filter(F.col("rn") <= 10)
-            .select("qid", "vec_id")
-        )
-
-    adc10r = top10(
+    adc10r = _topk_per_query(
         members.join(rasg.drop("pid"), "vec_id")
         .join(F.broadcast(qtres), ["qid", "pid", "m", "cid"])
         .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
     )
     qtraw = (
         _subspace_explode(qs.select("qid", "qe"), "qe", "sv")
         .join(F.broadcast(ccb), "m")
-        .select("qid", "m", "cid", _pq_dist().alias("qd"))
+        .select("qid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
-    adc10c = top10(
+    adc10c = _topk_per_query(
         members.join(casg, "vec_id")
         .join(F.broadcast(qtraw), ["qid", "m", "cid"])
         .groupBy("qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
     )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
-        cl.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            F.round(_l2_col(F.col("e"), F.col("qe")), 4).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
+    exact10 = _exact_topk(cl, qs, F.round(_l2_col(F.col("e"), F.col("qe")), 4))
     scanned = members.groupBy("qid").agg(F.count(F.lit(1)).alias("ns"))
-
-    def hits(adc10):
-        # <= 64 x 10 rows by construction; the hint pins the build side
-        return (
-            exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("h"))
-        )
-
-    hr = hits(adc10r).select("qid", F.col("h").alias("h_res"))
-    hc = hits(adc10c).select("qid", F.col("h").alias("h_raw"))
-    bp = lambda c: (  # noqa: E731
-        (F.coalesce(F.col(c), F.lit(0)) * 1000).cast("long")
+    # each ADC side is <= 64 x 10 rows by construction; the hint pins
+    # the build side
+    report, res = _recall_report(
+        qs.select("qid"), exact10, F.broadcast(adc10r), suffix="_res"
     )
-    return (
-        qs.select("qid")
-        .join(hr, "qid", "left")
-        .join(hc, "qid", "left")
-        .join(scanned, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
-            F.coalesce(F.col("h_raw"), F.lit(0))
-            .cast("long")
-            .alias("hits10_raw"),
-            bp("h_raw").alias("recall_bp_raw"),
-            F.coalesce(F.col("h_res"), F.lit(0))
-            .cast("long")
-            .alias("hits10_res"),
-            bp("h_res").alias("recall_bp_res"),
-        )
+    report, raw = _recall_report(
+        report, exact10, F.broadcast(adc10c), suffix="_raw"
+    )
+    return report.join(scanned, "qid", "left").select(
+        "qid",
+        F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
+        *raw,
+        *res,
     )
 
 
@@ -11703,8 +11609,6 @@ def ivfadc_nprobe_sweep_q(spark: SparkSession, sf: str) -> DataFrame:
     (Q·N·Σnprobe/ncells with Q=64 constant BY CONSTRUCTION); the
     bound join is a 3-row broadcast onto the 4-deep probe set; the
     exact side stays the single Q×N pass every calibration pays."""
-    from pyspark.sql import Window
-
     from .operators.similarity import dot
 
     emb64 = load_table(spark, sf, "embeddings").select(
@@ -11740,55 +11644,39 @@ def ivfadc_nprobe_sweep_q(spark: SparkSession, sf: str) -> DataFrame:
         sub.join(F.broadcast(panel), "vec_id")
         .join(F.broadcast(cb), "m")
         .select(
-            F.col("vec_id").alias("qid"), "m", "cid", _pq_dist().alias("qd")
+            F.col("vec_id").alias("qid"),
+            "m",
+            "cid",
+            _l2_col(F.col("sv"), F.col("cv")).alias("qd"),
         )
     )
     asg = _pq_assign(spark, sf).select("vec_id", "m", "cid")
-    w_adc = Window.partitionBy("nprobe", "qid").orderBy(
-        F.asc("adc"), F.asc("vec_id")
-    )
-    adc10 = (
+    adc10 = _topk_per_query(
         members.join(asg, "vec_id")
         .join(F.broadcast(qt), ["qid", "m", "cid"])
         .groupBy("nprobe", "qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("nprobe", "qid", "vec_id")
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
+        by=("nprobe", "qid"),
     )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
-        emb64.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            F.round(_l2_col(F.col("e"), F.col("qe")), 4).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
+    exact10 = _exact_topk(
+        emb64, qs, F.round(_l2_col(F.col("e"), F.col("qe")), 4)
     )
     scanned = members.groupBy("nprobe", "qid").agg(
         F.count(F.lit(1)).alias("ns")
     )
-    hits = (
-        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-        .groupBy("nprobe", "qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    report, recall = _recall_report(
+        qs.select("qid").withColumn("nprobe", F.explode(nps)),
+        exact10,
+        F.broadcast(adc10),
+        by=("nprobe", "qid"),
     )
-    base = qs.select("qid").withColumn("nprobe", F.explode(nps))
-    return (
-        base.join(hits, ["nprobe", "qid"], "left")
-        .join(scanned, ["nprobe", "qid"], "left")
-        .select(
-            "nprobe",
-            "qid",
-            F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
+    return report.join(scanned, ["nprobe", "qid"], "left").select(
+        "nprobe",
+        "qid",
+        F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
+        *recall,
     )
 
 
@@ -11901,8 +11789,6 @@ def ivfadc_residual_nprobe_sweep_q(
     3-value broadcast explode on the 4-deep probe set, members are
     restricted BEFORE any ADC work, Q=64 constant by construction,
     per-cell lookup tables stay 64×4×32 rows broadcast."""
-    from pyspark.sql import Window
-
     cl, piv0, asgc, rcb, rasg, _ccb, _casg = _rescl_frames(spark, sf)
     panel = _audit_panel(cl)
     qs = cl.join(F.broadcast(panel), "vec_id").select(
@@ -11934,53 +11820,32 @@ def ivfadc_residual_nprobe_sweep_q(
     qtres = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb), "m")
-        .select("qid", "pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("qid", "pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
-    w_adc = Window.partitionBy("nprobe", "qid").orderBy(
-        F.asc("adc"), F.asc("vec_id")
-    )
-    adc10 = (
+    adc10 = _topk_per_query(
         members.join(rasg.drop("pid"), "vec_id")
         .join(F.broadcast(qtres), ["qid", "pid", "m", "cid"])
         .groupBy("nprobe", "qid", "vec_id")
-        .agg(F.round(F.sum("qd"), 4).alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 10)
-        .select("nprobe", "qid", "vec_id")
+        .agg(F.round(F.sum("qd"), 4).alias("adc")),
+        "adc",
+        10,
+        by=("nprobe", "qid"),
     )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
-    exact10 = (
-        cl.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id",
-            F.round(_l2_col(F.col("e"), F.col("qe")), 4).alias("d"),
-        )
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-    )
+    exact10 = _exact_topk(cl, qs, F.round(_l2_col(F.col("e"), F.col("qe")), 4))
     scanned = members.groupBy("nprobe", "qid").agg(
         F.count(F.lit(1)).alias("ns")
     )
-    hits = (
-        exact10.join(F.broadcast(adc10), ["qid", "vec_id"])
-        .groupBy("nprobe", "qid")
-        .agg(F.count(F.lit(1)).alias("h"))
+    report, recall = _recall_report(
+        qs.select("qid").withColumn("nprobe", F.explode(nps)),
+        exact10,
+        F.broadcast(adc10),
+        by=("nprobe", "qid"),
     )
-    base = qs.select("qid").withColumn("nprobe", F.explode(nps))
-    return (
-        base.join(hits, ["nprobe", "qid"], "left")
-        .join(scanned, ["nprobe", "qid"], "left")
-        .select(
-            "nprobe",
-            "qid",
-            F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
-            F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hits10"),
-            (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-            .cast("long")
-            .alias("recall_bp"),
-        )
+    return report.join(scanned, ["nprobe", "qid"], "left").select(
+        "nprobe",
+        "qid",
+        F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
+        *recall,
     )
 
 
@@ -12140,8 +12005,6 @@ def ann_ivf_recall_after_drift_q(spark: SparkSession, sf: str) -> DataFrame:
     64-dim explode + (16×64)-group mean for the update (map-side
     partial aggs), panel × pivots broadcast probing, and the audit's
     Q×N exact side with Q=64 constant BY CONSTRUCTION."""
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf, "embeddings")
     emb64 = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -12219,54 +12082,23 @@ def ann_ivf_recall_after_drift_q(spark: SparkSession, sf: str) -> DataFrame:
 
     memf = mem(af, probe(fpiv))
     memr = mem(ar, probe(rpiv))
-    il2 = F.aggregate(
-        F.zip_with(
-            F.col("ie"), F.col("qe"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w_ex = Window.partitionBy("qid").orderBy(F.asc("d"), F.asc("vec_id"))
     # round-15: the exact Q×N integer-L2 side was the entry's dominant
     # job and ran at the union-of-scans width (2 tasks, ~2.5s);
     # spread ONLY this branch — one extra exchange of 2N slim rows,
     # consumed once by the eager checkpoint (guide §2: widen the
     # CPU-dense stage, not every consumer of the load)
-    exact10 = (
-        _spread(c2)
-        .crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", il2.alias("d"))
-        .withColumn("rn", F.row_number().over(w_ex))
-        .filter(F.col("rn") <= 10)
-        .select("qid", "vec_id")
-        .localCheckpoint(eager=True)  # scored against both variants
-    )
+    exact10 = _exact_topk(
+        _spread(c2), qs, _il2_col(F.col("ie"), F.col("qe"))
+    ).localCheckpoint(eager=True)  # scored against both variants
 
     def variant(name, members):
         scanned = members.groupBy("qid").agg(F.count(F.lit(1)).alias("ns"))
-        hits = (
-            exact10.join(members, ["qid", "vec_id"])
-            .groupBy("qid")
-            .agg(F.count(F.lit(1)).alias("h"))
-        )
-        return (
-            qs.select("qid")
-            .join(hits, "qid", "left")
-            .join(scanned, "qid", "left")
-            .select(
-                F.lit(name).alias("variant"),
-                "qid",
-                F.coalesce(F.col("ns"), F.lit(0))
-                .cast("long")
-                .alias("n_scanned"),
-                F.coalesce(F.col("h"), F.lit(0))
-                .cast("long")
-                .alias("hits10"),
-                (F.coalesce(F.col("h"), F.lit(0)) * 1000)
-                .cast("long")
-                .alias("recall_bp"),
-            )
+        report, recall = _recall_report(qs.select("qid"), exact10, members)
+        return report.join(scanned, "qid", "left").select(
+            F.lit(name).alias("variant"),
+            "qid",
+            F.coalesce(F.col("ns"), F.lit(0)).cast("long").alias("n_scanned"),
+            *recall,
         )
 
     return variant("frozen", memf).unionByName(variant("retrained", memr))
@@ -13299,17 +13131,6 @@ _IVF_RETRAIN_TXN = "ivfadc-warm-retrain-1"
 _IVF_RETRAIN_TARGET_OCC = 125
 
 
-def _il2_col(a, b):
-    """Exact integer squared-L2 over two BIGINT arrays — order-free
-    (integer addition is associative), so cross-engine replay is
-    bit-exact with no ulp boundary at all."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _ivf_retrain_corpus(spark: SparkSession, sf: str, dirs: dict) -> DataFrame:
     """The drifted corpus (history ∪ the ingested jittered batch) with
     BOTH views the retrain needs — doubles (``e``, for residual encode)
@@ -13552,7 +13373,7 @@ def _ivf_retrain_serve(
     qt = (
         _subspace_explode(qres, "qr", "sv")
         .join(F.broadcast(rcb2), "m")
-        .select("pid", "m", "cid", _pq_dist().alias("qd"))
+        .select("pid", "m", "cid", _l2_col(F.col("sv"), F.col("cv")).alias("qd"))
     )
     codes = read_snapshot_pruned(
         spark,

@@ -29,8 +29,7 @@ import threading
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -95,18 +94,6 @@ def _read_parquet(
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS) parquet, which Spark refuses by
-        # default; read nanos as long and convert losslessly to the
-        # microsecond timestamp type (fixture sub-second components are
-        # µs-resolution). Integer division — double division would lose
-        # precision above 2^53 ns.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df, schema = _read_parquet(spark, path)
-        schema = schema or df.schema
-        if "ts" in schema.names and schema["ts"].dataType == LongType():
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
     return _read_parquet(spark, path)[0]
 
 

@@ -203,6 +203,26 @@ def test_schema_cache_is_bounded(spark, tmp_path, monkeypatch):
         assert len(P._schemas) <= 2
 
 
+def test_load_table_reads_events_under_the_callers_conf(spark, sf_dir):
+    """``load_table`` sets no session conf on an ``events`` read (the
+    session's settings belong to ``get_spark`` and its caller), and
+    ``events.ts``, written as microsecond timestamps, reads as a
+    timestamp."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from opendata_gov_lt_mysql_import_spark.sources import parquet as P
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = P.load_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "false"
+        assert isinstance(df.schema["ts"].dataType, (TimestampType, TimestampNTZType))
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_string_keyed_merge_runs_no_probe(spark, tmp_path):
     """String keys carry no file stats, so the distinct-key probe could
     prune nothing; the merge must skip it and rewrite every file."""

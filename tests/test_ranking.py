@@ -1,5 +1,6 @@
-"""Unit tests for operators/ranking.py (BM25, DSIR, argbest) and
-operators/graph.py triangle_count — pure-Python golden replicas plus
+"""Unit tests for operators/ranking.py (BM25, DSIR, argbest), the
+recall-audit kernel of queries_ml.py (_topk_per_query, _recall_report)
+and operators/graph.py triangle_count — pure-Python golden replicas plus
 structural invariants; the cross-engine oracle parity is covered by the
 full-registry gate (test_oracle_gate.py)."""
 
@@ -225,6 +226,86 @@ def test_argbest_equals_row_number_first(spark, largest):
     got_rows, want_rows = _canon(got.collect()), _canon(want.collect())
     assert len(got_rows) == 66
     assert got_rows == want_rows
+
+
+def _topk_rows():
+    """(nprobe, qid, vec_id, s, lab): every qid under two nprobe values,
+    integer scores drawn from a small pool so that many rows tie, also
+    at the k-th place; vec_ids are shuffled so no input order agrees
+    with the tiebreak."""
+    rng = random.Random(11)
+    rows = []
+    for nprobe in (1, 2):
+        for qid in range(6):
+            ids = rng.sample(range(100), rng.randint(1, 9))
+            rows += [
+                (nprobe, qid, v, float(rng.choice((0, 1, 2))), f"{nprobe}.{qid}.{v}")
+                for v in ids
+            ]
+    return rows
+
+
+@pytest.mark.parametrize("largest", [False, True])
+def test_topk_per_query_and_recall_report(spark, largest):
+    """``_topk_per_query`` keeps the k best rows per (nprobe, qid) key,
+    score ties to the smaller vec_id, with carried columns; the recall
+    report gives every panel query a row, hits10 and recall_bp 0 (not
+    NULL) for a query with no hit, also for an empty approximate side."""
+    from opendata_gov_lt_mysql_import_spark.queries_ml import (
+        _recall_report,
+        _topk_per_query,
+    )
+    from opendata_gov_lt_mysql_import_spark.sources.local import local_frame
+
+    k = 3
+    rows = _topk_rows()
+    scored = local_frame(
+        spark, rows, "nprobe long, qid long, vec_id long, s double, lab string"
+    ).repartition(3)
+    got = _topk_per_query(
+        scored, "s", k, by=("nprobe", "qid"), largest=largest, carry=("s", "lab")
+    )
+    assert got.columns == ["nprobe", "qid", "vec_id", "s", "lab"]
+    groups = {}
+    for r in rows:
+        groups.setdefault(r[:2], []).append(r)
+    want = []
+    for g in groups.values():
+        g.sort(key=lambda r: (-r[3] if largest else r[3], r[2]))
+        want += g[:k]
+    assert sorted(map(tuple, got.collect())) == sorted(want)
+    # the k-th place is contested somewhere, and both nprobe keys of one
+    # qid were ranked on their own
+    assert any(
+        len(g) > k and g[k - 1][3] == g[k][3] for g in groups.values()
+    )
+    assert {r[0] for r in want} == {1, 2}
+
+    # recall: the exact top-k of the nprobe=1 key against the even
+    # vec_ids of that key as the approximate side, qid 5 left out of it;
+    # qid 6 is in the panel but in no side
+    exact = got.filter(F.col("nprobe") == 1).select("qid", "vec_id")
+    approx = scored.filter(
+        (F.col("nprobe") == 1) & (F.col("vec_id") % 2 == 0) & (F.col("qid") != 5)
+    ).select("qid", "vec_id")
+    panel = local_frame(spark, [(q,) for q in range(7)], "qid long")
+    report, cols = _recall_report(panel, exact, approx)
+    out = {r["qid"]: (r["hits10"], r["recall_bp"])
+           for r in report.select("qid", *cols).collect()}
+    hits = {q: 0 for q in range(7)}
+    for r in want:
+        if r[0] == 1 and r[2] % 2 == 0 and r[1] != 5:
+            hits[r[1]] += 1
+    assert out == {q: (h, h * 1000) for q, h in hits.items()}
+    assert max(hits.values()) > 1 and out[5] == out[6] == (0, 0)
+
+    empty = local_frame(spark, [], "qid long, vec_id long")
+    report, cols = _recall_report(panel, exact, empty, suffix="_raw")
+    got_empty = report.select("qid", *cols)
+    assert got_empty.columns == ["qid", "hits10_raw", "recall_bp_raw"]
+    assert sorted(map(tuple, got_empty.collect())) == [
+        (q, 0, 0) for q in range(7)
+    ]
 
 
 def _edges_df(spark, pairs):
