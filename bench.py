@@ -442,15 +442,19 @@ class Profile:
         jvm = spark._jvm
         self._compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
         self._codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-        self._cg0 = (0, 0)
+        self._jit = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+        self._cg0 = (0, 0, 0)
 
-    def _codegen_now(self) -> tuple[int, int]:
-        """(classes compiled, compile ns) so far in this JVM. Every
-        compiled-class cache miss adds one sample to the compilation
-        histogram; its reservoir keeps no sum (and whole milliseconds),
-        so the seconds come from ``CodeGenerator.compileTime``, the
-        nanosecond total of the same compiles."""
-        return self._compiles.getCount(), self._codegen.compileTime()
+    def _codegen_now(self) -> tuple[int, int, int]:
+        """(classes compiled, compile ns, JIT ms) so far in this JVM.
+        Every compiled-class cache miss adds one sample to the
+        compilation histogram; its reservoir keeps no sum (and whole
+        milliseconds), so the seconds come from
+        ``CodeGenerator.compileTime``, the nanosecond total of the same
+        compiles. The JIT figure is the JVM's own bytecode-to-machine-code
+        compile time, summed over its compiler threads."""
+        return (self._compiles.getCount(), self._codegen.compileTime(),
+                self._jit.getTotalCompilationTime())
 
     @contextlib.contextmanager
     def construct(self):
@@ -468,9 +472,10 @@ class Profile:
         with self.tracer.span("exec.action", self.op):
             agg = checksum_frame(df)
             n, chk = agg.collect()[0]
-        count, ns = self._codegen_now()
+        count, ns, jit_ms = self._codegen_now()
         self.rec.record(self.op, "codegen.compiles", count - self._cg0[0])
         self.rec.record(self.op, "codegen.compile_s", (ns - self._cg0[1]) / 1e9)
+        self.rec.record(self.op, "jit.compile_s", (jit_ms - self._cg0[2]) / 1e3)
         self.rec.after_action(self.op, agg)
         self.ops[self.op] = plan_ops(agg)
         self.rec.end_op(self.op)
@@ -497,9 +502,11 @@ def traced_record(names, runs) -> dict:
     ``functions.python_udf_s`` (Spark's ``udf.profiler=perf``), plus
     ``codegen.compiles`` and ``codegen.compile_s``: the generated classes
     compiled, and their compile seconds, over construction plus action
-    (0 on a warm run whose code is all in the compiled-class cache), and
-    ``plan.ops``, the operator counts of the evaluated plan
-    (:func:`plan_ops`). Under
+    (0 on a warm run whose code is all in the compiled-class cache),
+    ``jit.compile_s``, the JVM's JIT compile seconds over the same span
+    (the compiler threads keep compiling Spark's and the generated code
+    long after the first run), and ``plan.ops``, the operator counts of
+    the evaluated plan (:func:`plan_ops`). Under
     ``jobs_by_group`` it holds jobs, tasks, task CPU, input, shuffle and
     spill of the construction's jobs (the eager barriers:
     checkpoints, driver collects) and of the action's jobs."""

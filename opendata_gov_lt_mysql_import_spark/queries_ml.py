@@ -468,8 +468,6 @@ def emb_dup_pairs_q(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup pairs blocked by label (the brute-force-within-
     block verifier; at scale the block key is an LSH/IVF bucket)."""
     emb = load_table(spark, sf, "embeddings")
-    from pyspark.sql import Window
-
     pairs = cosine_dup_pairs(emb, block_col="label", min_sim=0.3)
     return pairs.select("id_a", "id_b", F.round(F.col("sim"), 4).alias("sim"))
 
@@ -11086,8 +11084,6 @@ def ann_ivfadc_warm_panel_serve_q(spark: SparkSession, sf: str) -> DataFrame:
     computes. Scale shape: ONE scan of the only corpus-sized artifact,
     every query-side frame broadcast, one (qid, vec_id) aggregate
     shuffle, one per-qid bounded window."""
-    from pyspark.sql import Window
-
     from .sources.snapshots import read_snapshot
 
     dirs = _ivfadc_warm_dirs(spark, sf)

@@ -30,6 +30,56 @@ Config choices are scale-oriented:
 
 Both codegen settings change no plan and no result; ``extra_conf``
 overrides them like any other setting.
+
+The harvester runs as a job: one gather, fetch and import pass per run,
+so a session is short and its driver builds plans over small data. Two
+settings size the driver for that. Per-thread CPU of the driver JVM
+(``/proc/<jvm>/task/*/stat``), read around 8 warm calls of the two
+``recipe_audit`` entries on ``perfbench``'s seed-11 fixtures in one
+session on 4 vCPUs, without these settings: 1.59-3.15 cpu-s per call,
+of which the JIT compiler threads took 0.64-2.02 s (40-64%), the py4j
+gateway threads 0.24-0.44 s, the executor task threads about 0.5-0.7 s
+and the Python driver 0.07-0.08 s.
+
+- ``-XX:CICompilerCount=2`` in ``spark.driver.defaultJavaOptions``
+  (``JIT_COMPILER_THREADS``): one C1 and one C2 compiler thread, the
+  fewest tiered compilation accepts. JDK 17's default grows with the
+  core count (3 on 4 vCPUs: 1 C1 + 2 C2), and under ``local[k]`` the
+  compiler threads compete with the task threads and the driver thread
+  for the same cores. With one C2 thread HotSpot still compiles the
+  hottest methods first and drops queued compiles that went stale. In
+  the probe above the compiler threads then took 0.76-1.17 cpu-s per
+  call. Spark puts ``defaultJavaOptions`` before
+  ``spark.driver.extraJavaOptions`` on the driver's command line, so a
+  caller's extra options still apply and a caller's own
+  ``-XX:CICompilerCount`` comes later and wins. The option reaches only
+  the driver JVM, and only when this call launches it. Rejected:
+  ``-XX:TieredStopAtLevel=1`` (C1 only) cut ``op_cpu_s.p50`` by 25% on
+  ``recipe_audit`` and 48% on ``catalog_sync`` but raised wall time per
+  ``recipe_audit`` op from 1.05 to 1.41 s (worse in 4 of 4 pairs) and
+  per ``operator_mix`` op from 0.147 to 0.172 s, trading latency for
+  CPU; ``-XX:CompileThresholdScaling=10`` raised ``catalog_sync``
+  ``setup_s`` from 11.8 to 14.3 s.
+- ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark's
+  call-site capture sends extra py4j commands on every Column and
+  DataFrame call to record the Python frame that made it.
+  ``F.col("a").alias("b")`` sends 24 commands with it and 4 without;
+  ``df.select(F.col("id").alias("b"))`` 30 and 10. A traced
+  ``recipe_audit`` op went from 2,435.5 to 1,220.5 construction py4j
+  calls. On its own it did not move ``op_cpu_s.p50`` beyond noise
+  (median 2.65 to 2.63 s, lower in 4 of 6 interleaved pairs), so it is
+  kept on the counter. The cost: an analysis or runtime error no longer
+  names the Python file and line that built the failing expression.
+  PySpark reads the setting once per process
+  (``pyspark.errors.utils._enable_debugging_cache``), at the first Column
+  call made while a session is active, so it must be set when the
+  session is built; a later ``spark.conf.set`` is not seen.
+
+Both settings together, in interleaved ``perfbench/run.py --seconds 5``
+pairs on 4 vCPUs: ``recipe_audit`` ``op_cpu_s.p50`` 2.95 to 2.38 s
+(lower in 10 of 10 pairs) and wall time per op 1.01 to 0.91 s;
+``catalog_sync`` 3.78 to 3.20 s (5 of 5); ``operator_mix`` wall time per
+op 0.158 to 0.124 s (3 of 3). They change no plan and no result.
 """
 
 from __future__ import annotations
@@ -48,6 +98,10 @@ DEFAULT_APP_NAME = "odgovlt-spark-engine"
 # suite's shared session and entries outside the headline set. A cached
 # class holds Metaspace, so the cache stays bounded.
 CODEGEN_CACHE_ENTRIES = 4096
+
+# JIT compiler threads of the driver JVM: one C1 and one C2, the fewest
+# tiered compilation accepts (module docstring).
+JIT_COMPILER_THREADS = 2
 
 
 def cpu_count() -> int:
@@ -94,6 +148,13 @@ def get_spark(
         # repeated calls reuse their compiled code (module docstring)
         .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # a short session: fewer JIT threads, no call-site capture
+        # (module docstring)
+        .config(
+            "spark.driver.defaultJavaOptions",
+            f"-XX:CICompilerCount={JIT_COMPILER_THREADS}",
+        )
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master:
         builder = builder.master(master)

@@ -1,8 +1,8 @@
 """Pins for bench.py's one timing core: the ``run`` and ``ab``
 subcommands refuse unregistered names before Spark starts, ``run``
 reports the same results as an in-process evaluation and, traced, the
-layers of perfbench/layers.py plus the codegen counters and the plan's
-operator counts, and the A/B record keeps what completed."""
+layers of perfbench/layers.py plus the codegen and JIT counters and the
+plan's operator counts, and the A/B record keeps what completed."""
 
 from __future__ import annotations
 
@@ -64,6 +64,7 @@ def test_run_matches_in_process_evaluation(spark, sf_dir, trace):
             assert sum(run[p] for p in phases) > 0
             for r in entry["runs"]:
                 assert r["codegen.compiles"] >= 0 and r["codegen.compile_s"] >= 0
+                assert r["jit.compile_s"] >= 0
                 # the checksum aggregate is a HashAggregate in every plan
                 assert r["plan.ops"].get("HashAggregate", 0) >= 1
     if trace:

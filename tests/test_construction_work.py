@@ -8,6 +8,8 @@
 - No package module but ``sources/local.py`` calls ``createDataFrame``.
 - ``merge_snapshot`` skips its key probe when no file has stats on the
   key (``sources/snapshots.py``).
+- Column and DataFrame calls record no Python call site, so they send
+  no py4j commands for it (``session.get_spark``).
 """
 
 from __future__ import annotations
@@ -255,3 +257,30 @@ def test_string_keyed_merge_runs_no_probe(spark, tmp_path):
     assert got["k006"] == 6
     # parent of this change: 5 (the probe's distinct collect took two)
     assert n <= 3, f"string-keyed merge scheduled {n} jobs"
+
+
+def test_column_calls_capture_no_call_site(spark):
+    """With PySpark's call-site capture on (its default),
+    ``F.col("a").alias("b")`` sent 24 py4j commands and
+    ``df.select(F.col("id").alias("b"))`` 30."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    from perfbench.layers import Py4jCounter
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    df = spark.range(3)
+    counter = Py4jCounter()
+    counter.install()
+    try:
+        F.col("warm").alias("up")
+        counter.arm()
+        F.col("a").alias("b")
+        alias = counter.disarm()
+        counter.arm()
+        df.select(F.col("id").alias("b"))
+        select = counter.disarm()
+    finally:
+        counter.uninstall()
+    assert alias <= 4, f"F.col(...).alias(...) sent {alias} py4j commands"
+    assert select <= 10, f"df.select(...) sent {select} py4j commands"
