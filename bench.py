@@ -64,6 +64,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 NOISE_BAND = 1.3
 # an A/B side still running after this is recorded as failed
 SIDE_TIMEOUT_S = 3600
+# calls per entry in one session: the headline record and each A/B side
+# compare the minimum of these; the first is the cold call
+CALLS = 3
 PROFILE_PATH = os.path.join(HERE, "PROFILE_LOCAL.json")
 PLAN_DIR = os.path.join(HERE, "plans", "local")
 COMPARE_PATH = os.path.join(HERE, "BENCH_COMPARE.json")
@@ -603,14 +606,15 @@ def _side_runner() -> str:
         + inspect.getsource(time_entries)
         + "names, SF_DIR = sys.argv[1].split(','), sys.argv[2]\n"
         "spark = get_spark(app_name='bench-ab', extra_conf=json.loads(sys.argv[3]))\n"
-        "out = {n: r[0] for n, r in time_entries(spark, names, 1)}\n"
+        f"out = dict(time_entries(spark, names, {CALLS}))\n"
         "print('@@RESULT@@' + json.dumps(out))\n"
     )
 
 
 def _run_side(side: dict, names: list[str]) -> dict | str:
-    """One round of one side in a fresh interpreter: ``{name: [s,
-    construction s, rows, chk]}``, or why the side failed."""
+    """One round of one side in a fresh interpreter: ``{name: [[s,
+    construction s, rows, chk], ...]}``, one record per call in the
+    side's session, or why the side failed."""
     env = dict(os.environ, PYTHONPATH=side["tree"])
     if side["cpus"]:
         env["SPARK_GRAFT_CPUS"] = str(side["cpus"])
@@ -631,13 +635,16 @@ def _run_side(side: dict, names: list[str]) -> dict | str:
 
 def ab_record(names: list[str], rounds: list[dict], sides: dict) -> dict:
     """The A/B record. ``rounds`` holds one ``{"a": ..., "b": ...}`` per
-    round, each side a ``_run_side`` result or the reason it failed.
+    round, each side a ``_run_side`` result (per entry, the run records
+    of its calls) or the reason it failed.
 
     Completed sides are kept; failed ones are listed under
-    ``failed_sides``. Per entry: each side's wall times, its minimum,
-    ``ratio_b_over_a`` of the minima and a verdict — ``noise-band``
-    inside :data:`NOISE_BAND`, else ``a-faster`` or ``b-faster`` — unless
-    the runs disagree on (rows, checksum), which is ``checksum-mismatch``
+    ``failed_sides``. Per entry: each side's minimum wall time per round
+    (``a_s``/``b_s``), its first, cold call per round
+    (``a_cold_s``/``b_cold_s``), its overall minimum, ``ratio_b_over_a``
+    of the minima and a verdict — ``noise-band`` inside
+    :data:`NOISE_BAND`, else ``a-faster`` or ``b-faster`` — unless the
+    calls disagree on (rows, checksum), which is ``checksum-mismatch``
     whatever the timings say."""
     failed = [
         {"round": i, "side": k, "error": r[k]}
@@ -646,9 +653,10 @@ def ab_record(names: list[str], rounds: list[dict], sides: dict) -> dict:
     entries = {}
     for name in names:
         got = {k: [r[k][name] for r in rounds if isinstance(r[k], dict)] for k in ("a", "b")}
-        mins = {k: min((x[0] for x in v), default=None) for k, v in got.items()}
+        per_round = {k: [min(x[0] for x in calls) for calls in v] for k, v in got.items()}
+        mins = {k: min(v, default=None) for k, v in per_round.items()}
         ratio = round(mins["b"] / mins["a"], 3) if mins["a"] and mins["b"] else None
-        results = sorted({(x[2], x[3]) for v in got.values() for x in v})
+        results = sorted({(x[2], x[3]) for v in got.values() for calls in v for x in calls})
         if len(results) > 1:
             verdict = "checksum-mismatch"
         elif ratio is None:
@@ -660,13 +668,16 @@ def ab_record(names: list[str], rounds: list[dict], sides: dict) -> dict:
         else:
             verdict = "noise-band"
         entries[name] = {
-            "a_s": [x[0] for x in got["a"]], "b_s": [x[0] for x in got["b"]],
+            "a_s": per_round["a"], "b_s": per_round["b"],
+            "a_cold_s": [calls[0][0] for calls in got["a"]],
+            "b_cold_s": [calls[0][0] for calls in got["b"]],
             "a_min": mins["a"], "b_min": mins["b"], "ratio_b_over_a": ratio,
             "rows_chk": [list(x) for x in results], "verdict": verdict,
         }
     return {
         "protocol": "interleaved rounds, the side that goes first alternating, "
-                    "one subprocess per side per round, full-evaluation checksums",
+                    f"one subprocess per side per round timing {CALLS} calls per "
+                    "entry, minima compared, full-evaluation checksums",
         "sf_dir": SF_DIR,
         "sides": sides,
         "rounds": len(rounds),
@@ -722,7 +733,8 @@ def ab_cmd(argv: list[str]) -> int:
                 rounds[-1][key] = res = _run_side(a if key == "a" else b, args.names)
                 print(f"# round {r + 1}/{args.runs} side {key}: "
                       + (res if isinstance(res, str) else
-                         ", ".join(f"{n}={v[0]:.3f}s" for n, v in res.items())),
+                         ", ".join(f"{n}={min(x[0] for x in v):.3f}s (cold {v[0][0]:.3f}s)"
+                                   for n, v in res.items())),
                       file=sys.stderr, flush=True)
     sides = {k: {f: s[f] for f in ("commit", "cpus", "conf")} for k, s in (("a", a), ("b", b))}
     record = ab_record(args.names, rounds, sides)
@@ -820,7 +832,7 @@ def headline(argv: list[str]) -> int:
     # reports the query's actual cost for ~17s extra wall.
     timings: dict[str, float] = {}
     spread: dict[str, dict[str, float]] = {}
-    for name, res in time_entries(spark, HEADLINE, 3):
+    for name, res in time_entries(spark, HEADLINE, CALLS):
         runs = sorted(r[0] for r in res)
         timings[name] = runs[0]
         # min/median/max across the 3 runs: a wide max/min ratio marks a

@@ -1,8 +1,8 @@
 """Scalar function library — the reference's F1-F9 surface (SURVEY.md §2.7).
 
-Pure-Python reference-semantics implementations live in ``text`` (used by
-UDFs and unit tests); Spark column-expression equivalents are preferred in
-query plans (JVM-side, whole-stage-codegen friendly).
+Pure-Python reference-semantics implementations live in ``text`` (the
+spec and the unit tests' oracle); query plans use their Spark
+column-expression equivalents (JVM-side, no Python worker).
 """
 
 from .text import (  # noqa: F401
@@ -11,7 +11,7 @@ from .text import (  # noqa: F401
     get_package_tags,
     package_tags_col,
     slugify,
-    slugify_udf,
+    slugify_col,
     tagify,
     tagify_col,
     transliterate,

@@ -11,22 +11,25 @@ re-derived from observed behavior and the golden tests):
 - ``get_package_tags``   — /root/reference/odgovlt.py:79-94 (golden:
   tests/test_odgovlt.py:364-375)
 
-Each has a pure-Python form (used in unit tests and as UDF fallback) and a
-Spark ``Column`` form built from JVM-side expressions wherever the
-semantics allow — only ``slugify`` needs Python (transliteration + the
-front/back greedy truncation), and it runs as an Arrow-vectorized
-pandas_udf so it stays off the row-at-a-time path.
+Each has a pure-Python form, the spec and the unit tests' oracle, and a
+Spark ``Column`` form built from JVM-side expressions. ``slugify_col`` is
+the one whose semantics took work to move: ``transliterate`` works code
+point by code point, so ``slug_tables`` derives its per-code-point images
+once per process (one-to-one images for ``translate``, multi-char ones
+for one map lookup) and ``_SLUGIFY_SQL`` spells the rest of the slug and
+the front/back greedy truncation as one SQL lambda. No plan built from
+this module runs a Python worker.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re
 import unicodedata
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # ---------------------------------------------------------------------------
 # transliteration (stand-in for the unidecode dependency)
@@ -117,6 +120,10 @@ def fixcase_col(c: Column) -> Column:
 # F2 slugify (with the golden-tested front/back truncation)
 # ---------------------------------------------------------------------------
 
+_SLUG_DROP = re.compile(r"[^\w\s-]")
+_SLUG_SEP = re.compile(r"[-\s]+")
+
+
 def slugify(title: str | None = None, length: int = 90) -> str:
     """ASCII slug with budgeted truncation.
 
@@ -129,9 +136,8 @@ def slugify(title: str | None = None, length: int = 90) -> str:
     if not title:
         return ""
 
-    slug = transliterate(title)
-    slug = re.sub(r"[^\w\s-]", "", slug).strip().lower()
-    slug = re.sub(r"[-\s]+", "-", slug)
+    slug = _SLUG_DROP.sub("", transliterate(title)).strip().lower()
+    slug = _SLUG_SEP.sub("-", slug)
 
     if len(slug) > length:
         left: list[str] = []
@@ -154,18 +160,173 @@ def slugify(title: str | None = None, length: int = 90) -> str:
     return slug
 
 
-def slugify_udf(length: int = 90):
-    """Arrow-vectorized slugify for DataFrame plans (Python is unavoidable:
-    transliteration table + the truncation algorithm)."""
-    from pyspark.sql.functions import pandas_udf
+class TransliterationTableError(ValueError):
+    """``transliterate`` does not fold into the bounded per-code-point
+    tables that ``slugify_col`` compiles into its expression."""
 
-    # no type hints: `from __future__ import annotations` turns them into
-    # strings pyspark can't resolve; the explicit returnType form infers
-    # a scalar pandas UDF
-    def _slugify(s):
-        return s.map(lambda v: slugify(v, length) if v is not None else None)
 
-    return pandas_udf(_slugify, StringType())
+# Bounds on the tables compiled into every ``slugify_col`` expression, so
+# its SQL text and the map Catalyst folds from it stay small by
+# construction. The table+NFKD backend yields 1,706 one-to-one and 293
+# multi-char entries. An installed ``unidecode`` maps CJK and many other
+# scripts to multi-char strings, tens of thousands of them, and is
+# refused here rather than compiled into a megabyte-sized expression.
+MAX_ONE_TO_ONE = 4096
+MAX_MULTI_CHAR = 1024
+
+
+def _images():
+    """(code point, ``transliterate`` image) for every code point but NUL
+    and the surrogates: one call per block of 4,096 NUL-joined code
+    points, so the derivation never holds a million strings at once (one
+    call over all of them raised the Python process's peak RSS by 120 MiB)."""
+    for lo in range(1, 0x110000, 4096):
+        hi = min(lo + 4096, 0x110000)
+        points = [chr(i) for i in range(lo, hi) if not 0xD800 <= i <= 0xDFFF]
+        images = transliterate("\0".join(points)).split("\0")
+        if len(images) != len(points):
+            raise TransliterationTableError(
+                f"transliterate mapped {len(points)} NUL-joined code points to "
+                f"{len(images)} pieces; it must work code point by code point"
+            )
+        yield from zip(points, images)
+
+
+@functools.lru_cache(maxsize=None)
+def slug_tables() -> tuple[dict[str, str], dict[str, str]]:
+    """Per-code-point images of slugify's first two steps
+    (``transliterate``, then the ``_SLUG_DROP`` filter) for every
+    non-ASCII code point whose image is not empty, split into one-to-one
+    and multi-char images. Any other non-ASCII code point is deleted.
+
+    Derived once per process from ``transliterate`` itself (``_images``;
+    about 0.6 s on the table+NFKD backend). This relies on
+    ``transliterate`` working code point by code point, as both backends
+    do; NUL and every ASCII character must map to themselves, and every
+    image must be ASCII. Raises ``TransliterationTableError`` when any of
+    that fails or a table outgrows ``MAX_ONE_TO_ONE`` /
+    ``MAX_MULTI_CHAR``. The ``unidecode`` backend is not installed in the
+    project's test environment, so this derivation is untested against
+    it; by its tables it would exceed ``MAX_MULTI_CHAR``.
+    """
+    if transliterate("\0") != "\0":
+        raise TransliterationTableError("transliterate must map NUL to itself")
+    one: dict[str, str] = {}
+    multi: dict[str, str] = {}
+    for ch, image in _images():
+        if ch.isascii():
+            if image != ch:
+                raise TransliterationTableError(
+                    f"transliterate maps ASCII {ch!r} to {image!r}"
+                )
+            continue
+        kept = _SLUG_DROP.sub("", image)
+        if not kept.isascii():
+            raise TransliterationTableError(
+                f"transliterate maps {ch!r} to non-ASCII {image!r}"
+            )
+        if len(kept) == 1:
+            one[ch] = kept
+        elif kept:
+            multi[ch] = kept
+    if len(one) > MAX_ONE_TO_ONE or len(multi) > MAX_MULTI_CHAR:
+        raise TransliterationTableError(
+            f"{len(one)} one-to-one and {len(multi)} multi-char slug images; "
+            f"the bounds are {MAX_ONE_TO_ONE} and {MAX_MULTI_CHAR}"
+        )
+    return one, multi
+
+
+def _ascii_chars(pred) -> str:
+    return "".join(ch for ch in map(chr, range(128)) if pred(ch))
+
+
+def _java_class(chars: str, negate: bool = False) -> str:
+    """Java regex character class of ``chars``: each code point as
+    ``\\x{h}``, consecutive ones as a range."""
+    runs: list[list[int]] = []
+    for cp in sorted(set(map(ord, chars))):
+        if runs and cp == runs[-1][1] + 1:
+            runs[-1][1] = cp
+        else:
+            runs.append([cp, cp])
+    body = "".join(rf"\x{{{lo:x}}}" + (rf"-\x{{{hi:x}}}" if hi > lo else "") for lo, hi in runs)
+    return f"[{'^' if negate else ''}{body}]"
+
+
+def _sql_str(value: str) -> str:
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+# The lambda ``slugify_col`` applies, one step of ``slugify`` per line:
+# transliterate (one-to-one images by ``translate``; a string that still
+# holds a non-ASCII code point is cut into ASCII runs and single code
+# points, and each is looked up in the multi-char map), ``_SLUG_DROP``
+# (the ASCII characters it keeps; every non-ASCII code point left is
+# dropped), ``strip``, ``lower``, ``_SLUG_SEP``; then, above the budget,
+# the truncation as one ``aggregate`` over the words in front/back slot
+# order (front index j, then back index n-1-j, as ``slugify``'s
+# ``zip_longest``), taking words until the budget breaks.
+#
+# Each intermediate is bound once, as the variable of a one-element
+# ``transform(array(x), y -> ...)[0]``: a higher-order function evaluates
+# every expression from outside its lambda again for each element, so a
+# truncation that read the slug from outside would rebuild it per word.
+_SLUGIFY_SQL = """v -> transform(array(
+  regexp_replace(lower(regexp_replace(regexp_replace(
+    transform(array(translate(v, {one_from}, {one_to})), t ->
+      IF(t RLIKE {non_ascii},
+         array_join(transform(regexp_extract_all(t, {pieces}, 0),
+                              p -> coalesce({multi}[p], p)), ''),
+         t))[0],
+    {drop}, ''), {strip}, '')), {sep}, '-')
+), s -> IF(length(s) <= {length}, s, transform(array(split(s, '-', -1)), w ->
+  aggregate(
+    flatten(transform(sequence(0, greatest({front}, size(w) - {front}) - 1), j ->
+      filter(array(IF(j < {front}, j, NULL), IF(j < size(w) - {front}, size(w) - 1 - j, NULL)),
+             x -> x IS NOT NULL))),
+    named_struct('total', 0, 'taken', 0, 'full', false,
+                 'front', CAST(array() AS ARRAY<STRING>), 'back', CAST(array() AS ARRAY<STRING>)),
+    (a, i) -> IF(a.full OR a.total + length(w[i]) + IF(a.taken = 0, 0, a.taken + 1) > {length},
+      named_struct('total', a.total, 'taken', a.taken, 'full', true,
+                   'front', a.front, 'back', a.back),
+      named_struct('total', a.total + length(w[i]), 'taken', a.taken + 1, 'full', false,
+                   'front', IF(i < {front}, concat(a.front, array(w[i])), a.front),
+                   'back', IF(i < {front}, a.back, concat(a.back, array(w[i]))))),
+    a -> concat(array_join(a.front, '-'), '--', array_join(a.back, '-')))
+)[0]))[0]"""
+
+
+@functools.lru_cache(maxsize=None)
+def _slugify_lambda(length: int) -> str:
+    one, multi = slug_tables()
+    # Python's str.strip and \s sets hold \x0b and \x1c-\x1f, which
+    # Java's \s and Spark's trim miss, so both are spelled out
+    space = _java_class(_ascii_chars(str.isspace))
+    return _SLUGIFY_SQL.format(
+        one_from=_sql_str("".join(one)),
+        one_to=_sql_str("".join(one.values())),
+        non_ascii=_sql_str(r"[^\x{0}-\x{7f}]"),
+        pieces=_sql_str(r"[\x{0}-\x{7f}]+|[^\x{0}-\x{7f}]"),
+        # one string literal: Spark parses it far faster than a map() of
+        # 586 literals; \x01 and \x02 are in no key (all non-ASCII) and
+        # in no image (all in the ASCII set _SLUG_DROP keeps)
+        multi=f"str_to_map({_sql_str(chr(2).join(k + chr(1) + v for k, v in multi.items()))}, "
+        f"{_sql_str(chr(2))}, {_sql_str(chr(1))})",
+        drop=_sql_str(_java_class(_ascii_chars(lambda ch: not _SLUG_DROP.match(ch)), negate=True)),
+        strip=_sql_str(rf"\A{space}+|{space}+\z"),
+        sep=_sql_str(_java_class(_ascii_chars(_SLUG_SEP.match)) + "+"),
+        front="CAST(size(w) * 0.6D AS INT)",
+        length=int(length),
+    )
+
+
+def slugify_col(c: Column, length: int = 90) -> Column:
+    """JVM-side ``slugify``: equal to it on every string, and NULL stays
+    NULL. One SQL lambda (``_SLUGIFY_SQL``) over the tables of
+    ``slug_tables``, parsed by Spark, so the plan runs no Python worker
+    and its construction costs a handful of py4j calls."""
+    return F.call_function("transform", F.array(c), F.expr(_slugify_lambda(length)))[0]
 
 
 # ---------------------------------------------------------------------------

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import package_tags_col, slugify_udf
+from ..functions.text import package_tags_col, slugify_col
 
 # Well-known extras keys (reference constants, odgovlt.py:25-29)
 CODE_KEY = "Kodas"
@@ -30,7 +30,7 @@ def user_document(users: DataFrame) -> DataFrame:
     """P5: user row → {name: slug(LOGIN), email, password, fullname}."""
     return users.select(
         F.col("ID").alias("source_id"),
-        slugify_udf()(F.col("LOGIN")).alias("name"),
+        slugify_col(F.col("LOGIN")).alias("name"),
         F.col("EMAIL").alias("email"),
         F.col("PASS").alias("password"),
         F.concat_ws(" ", F.col("FIRST_NAME"), F.col("LAST_NAME")).alias("fullname"),
@@ -41,7 +41,7 @@ def organization_document(orgs: DataFrame) -> DataFrame:
     """P6: organization row → {name, title, state, extras[ID/KODAS/ADRESAS]}."""
     return orgs.select(
         F.col("ID").alias("source_id"),
-        slugify_udf()(F.col("PAVADINIMAS")).alias("name"),
+        slugify_col(F.col("PAVADINIMAS")).alias("name"),
         F.col("PAVADINIMAS").alias("title"),
         F.lit("active").alias("state"),
         F.array(
@@ -66,7 +66,7 @@ def package_document(
     """
     return datasets.select(
         F.col("ID").cast("string").alias("id"),
-        slugify_udf(length=42)(F.col("PAVADINIMAS")).alias("name"),
+        slugify_col(F.col("PAVADINIMAS"), 42).alias("name"),
         F.col("PAVADINIMAS").alias("title"),
         F.col("SANTRAUKA").alias("notes"),
         F.col("TINKLAPIS").alias("url"),

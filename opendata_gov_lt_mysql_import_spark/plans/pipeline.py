@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import slugify_udf
+from ..functions.text import slugify_col
 from ..operators.hierarchy import tree_closure
 from ..operators.joins import mn_bridge_collect
 from ..operators.projections import (
@@ -41,7 +41,7 @@ from ..sources.staging import stage_read, stage_write
 def group_name_col(pavadinimas: F.Column, id_col: F.Column) -> F.Column:
     """W2: deterministic group naming — slug of 'PAVADINIMAS ID' so names
     embed the PK (reference _get_group_name, odgovlt.py:289-290)."""
-    return slugify_udf()(F.concat_ws(" ", pavadinimas, id_col.cast("string")))
+    return slugify_col(F.concat_ws(" ", pavadinimas, id_col.cast("string")))
 
 
 class HarvestPipeline:

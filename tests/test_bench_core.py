@@ -76,9 +76,9 @@ def test_run_matches_in_process_evaluation(spark, sf_dir, trace):
 
 def test_ab_record_keeps_completed_rounds_and_flags_mismatch():
     rounds = [
-        {"a": {"x": [1.0, 0.1, 5, 42], "y": [1.0, 0.1, 3, 7]},
-         "b": {"x": [2.0, 0.1, 5, 42], "y": [1.1, 0.1, 3, 8]}},
-        {"a": {"x": [0.9, 0.1, 5, 42], "y": [1.0, 0.1, 3, 7]},
+        {"a": {"x": [[1.0, 0.1, 5, 42]], "y": [[1.0, 0.1, 3, 7]]},
+         "b": {"x": [[2.0, 0.1, 5, 42]], "y": [[1.1, 0.1, 3, 8]]}},
+        {"a": {"x": [[0.9, 0.1, 5, 42]], "y": [[1.0, 0.1, 3, 7]]},
          "b": "timed out after 3600 s"},
     ]
     rec = bench.ab_record(["x", "y"], rounds, {})
@@ -93,3 +93,24 @@ def test_ab_record_keeps_completed_rounds_and_flags_mismatch():
     y = rec["entries"]["y"]
     assert y["rows_chk"] == [[3, 7], [3, 8]]
     assert y["verdict"] == "checksum-mismatch"
+
+
+def test_ab_record_compares_warm_minima_and_keeps_cold_calls():
+    """A side times ``bench.CALLS`` calls per entry in its session; the
+    record compares their minima, as the headline does, and keeps the
+    first, cold call of every round beside them."""
+    assert f"time_entries(spark, names, {bench.CALLS})" in bench._side_runner()
+    rounds = [
+        {"a": {"x": [[3.0, 0.5, 5, 42], [1.0, 0.1, 5, 42], [1.1, 0.1, 5, 42]]},
+         "b": {"x": [[2.5, 0.5, 5, 42], [1.6, 0.1, 5, 42], [1.5, 0.1, 5, 42]]}},
+        {"a": {"x": [[2.8, 0.5, 5, 42], [0.9, 0.1, 5, 42], [1.2, 0.1, 5, 42]]},
+         "b": {"x": [[2.4, 0.5, 5, 42], [1.4, 0.1, 5, 42], [1.7, 0.1, 5, 42]]}},
+    ]
+    x = bench.ab_record(["x"], rounds, {})["entries"]["x"]
+    assert (x["a_s"], x["b_s"]) == ([1.0, 0.9], [1.5, 1.4])
+    assert (x["a_cold_s"], x["b_cold_s"]) == ([3.0, 2.8], [2.5, 2.4])
+    assert (x["a_min"], x["b_min"]) == (0.9, 1.4)
+    assert x["verdict"] == "a-faster"  # 1.4 / 0.9 > 1.3; the cold calls say b
+    # a warm call that disagrees with the cold one is a mismatch
+    rounds[1]["b"]["x"][2] = [1.7, 0.1, 5, 41]
+    assert bench.ab_record(["x"], rounds, {})["entries"]["x"]["verdict"] == "checksum-mismatch"

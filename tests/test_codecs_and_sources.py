@@ -380,11 +380,11 @@ class TestTextSourceFormats:
         assert got == dict(rows)  # byte-exact decode of Lithuanian text
 
         # and the decoded text flows straight into the slugify pipeline
-        from opendata_gov_lt_mysql_import_spark.functions.text import slugify_udf
+        from opendata_gov_lt_mysql_import_spark.functions.text import slugify_col
 
         slugs = {
             r["id"]: r["slug"]
-            for r in df.select("id", slugify_udf()(F.col("title")).alias("slug")).collect()
+            for r in df.select("id", slugify_col(F.col("title")).alias("slug")).collect()
         }
         assert slugs[1].startswith("radiacines-saugos-centras")
         assert "siauliu-universitetas" in slugs[2]

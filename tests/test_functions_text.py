@@ -3,12 +3,21 @@ golden values (reference tests/test_odgovlt.py:362-399)."""
 
 from __future__ import annotations
 
-import pytest
+import random
+import re
+import string
 
+import pytest
+from pyspark.sql import functions as F
+
+from opendata_gov_lt_mysql_import_spark.functions import text as textmod
 from opendata_gov_lt_mysql_import_spark.functions.text import (
+    TransliterationTableError,
     fixcase,
     get_package_tags,
+    slug_tables,
     slugify,
+    slugify_col,
     tagify,
     transliterate,
 )
@@ -46,6 +55,88 @@ class TestSlugify:
         out = slugify("x" * 91, length=90)
         assert out.startswith("x" * 90) is False  # truncated form contains '--'
         assert "--" in out
+
+
+# Python's \s over ASCII: Java's \s lacks \x1c-\x1f, Spark's trim all but " "
+PY_ASCII_SPACE = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f "
+
+
+def _slug_cases() -> list[str | None]:
+    """10,000 seeded draws, every non-ASCII code point with a non-empty
+    slug image (found from ``transliterate`` code point by code point, not
+    from ``slug_tables``) and the edge cases."""
+    keys = [
+        ch
+        for ch in map(chr, range(128, 0x110000))
+        if not 0xD800 <= ord(ch) <= 0xDFFF and re.sub(r"[^\w\s-]", "", transliterate(ch))
+    ]
+    rng = random.Random(20261020)
+
+    def any_point() -> str:  # the whole range, astral included, no surrogates
+        cp = rng.randrange(1, 0x110000 - 0x800)
+        return chr(cp + 0x800 if cp >= 0xD800 else cp)
+
+    pickers = [
+        any_point,
+        lambda: rng.choice(keys),
+        lambda: chr(rng.randrange(1, 128)),
+        lambda: rng.choice(string.ascii_letters + string.digits),
+        lambda: rng.choice(string.ascii_letters + string.digits),
+    ]
+    seps = [" ", "-", "--", " - ", ",", "\u3000", *PY_ASCII_SPACE]
+
+    def draw() -> str:
+        words = (
+            "".join(rng.choice(pickers)() for _ in range(rng.randint(1, 9)))
+            for _ in range(rng.randint(1, 24))
+        )
+        edge = rng.choice(["", "", "-", " ", *PY_ASCII_SPACE])
+        return edge + "".join(w + rng.choice(seps) for w in words) + rng.choice(["", edge])
+
+    # each entry between letters, so an image that is a space or "-" shows
+    entries = [" ".join(f"x{k}x" for k in keys[i:i + 8]) for i in range(0, len(keys), 8)]
+    edges = [
+        # ICU 77 (Spark's) folds U+1CCD6 to "A"; Python 3.11's NFKD keeps it
+        None, "", "\U0001CCD6", "A\U0001CCD6B",
+        "a\x1cb", "\x0bx\x0b", "\x1cA\x1dB\x1e", "\x1f-\x1f", " \x1ca b\x1f ",
+        "-", "---", "a---b", "-a-", "a - - b", "- -", "-" * 100, "x" * 91,
+        GOLDEN_TITLE,
+    ]
+    return [draw() for _ in range(10_000)] + entries + edges
+
+
+def test_slugify_col_matches_slugify(spark):
+    """``slugify_col`` equals ``slugify`` (NULL stays NULL) on every case
+    at the three budgets: one collect per budget."""
+    cases = _slug_cases()
+    df = spark.createDataFrame(list(enumerate(cases)), "i int, s string")
+    for length in (10, 42, 90):
+        got = dict(df.select("i", slugify_col(F.col("s"), length)).collect())
+        bad = [
+            (cases[i], got[i])
+            for i in range(len(cases))
+            if got[i] != (None if cases[i] is None else slugify(cases[i], length))
+        ]
+        assert not bad, f"{len(bad)} mismatches at length {length}, first: {bad[:3]!r}"
+
+
+@pytest.mark.parametrize(
+    "backend,message",
+    [
+        # unidecode's shape: whole scripts map to multi-char strings
+        (lambda s: "".join(c if c.isascii() else "zh" for c in s), "the bounds are"),
+        # an image the ASCII-only slug steps would mangle
+        (lambda s: s.replace("é", "ë"), "non-ASCII"),
+    ],
+)
+def test_slug_tables_refuse_a_backend_they_cannot_fold(monkeypatch, backend, message):
+    monkeypatch.setattr(textmod, "transliterate", backend)
+    slug_tables.cache_clear()
+    try:
+        with pytest.raises(TransliterationTableError, match=message):
+            slug_tables()
+    finally:
+        slug_tables.cache_clear()
 
 
 class TestFixcase:

@@ -1394,6 +1394,26 @@ def test_sync_cycle_job_budget(spark, tmp_path):
     )
 
 
+def test_harvest_documents_run_no_python_worker(spark):
+    """Packages, groups, users and organizations are named by the
+    JVM-side slugify, so the harvest's executed plans hold no Python
+    evaluation node and no sync cycle starts a Python worker."""
+    from reference_fixture import build_reference_tables
+
+    from opendata_gov_lt_mysql_import_spark.plans.pipeline import HarvestPipeline
+
+    pipe = HarvestPipeline(spark, build_reference_tables(spark))
+    for build in (
+        pipe.package_documents,
+        pipe.group_documents,
+        pipe.user_documents,
+        pipe.organization_documents,
+    ):
+        plan = final_plan(build())
+        assert "ArrowEvalPython" not in plan, build.__name__
+        assert "BatchEvalPython" not in plan, build.__name__
+
+
 def test_gram_warm_lifecycle_exactly_once_and_serves_from_table(
     spark, sf_dir, queries
 ):
