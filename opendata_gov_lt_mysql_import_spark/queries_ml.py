@@ -40,6 +40,7 @@ from .operators.textanalysis import (
 from .queries import query
 from .sources.local import local_frame
 from .sources.parquet import load_table
+from .sources.warm import Warm, warm_build
 
 
 def _const_part(col: str):
@@ -9744,37 +9745,8 @@ def corpus_recipe_increment_q(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_RECIPE_WARM_DIRS: dict[str, dict[str, object]] = {}
-
-# Same hazard as _IVF_WARM_LOCK below: the registry gate runs queries
-# on a thread pool, and an unlocked check-then-build would let two
-# concurrent callers both run the expensive one-time history labeling
-# and commit duplicate snapshot trees (round-12 advisory).
-import threading as _threading  # noqa: E402
-
-_RECIPE_WARM_LOCK = _threading.Lock()
-
-_RECIPE_WARM_TABLES = (
-    "bp", "url_index", "fp_index", "scrub", "lsh_index", "gram_index",
-    "ev_grams", "hist_agg", "surv", "meta",
-)
-
-
-def _warm_scratch_dir(prefix: str) -> str:
-    """mkdtemp registered for atexit removal — warm-state trees
-    (recipe + IVF index) are per-process scratch, and leaving one per
-    pytest/bench run leaked a full persisted index tree per sf dir
-    (round-12 advisory)."""
-    import atexit
-    import shutil
-    import tempfile
-
-    root = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-def _recipe_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
+@warm_build("recipe")
+def _recipe_warm_dirs(spark: SparkSession, sf: str, dirs: Warm) -> None:
     """Build-once persisted recipe state for the WARM increment: the
     one-time history labeling runs a single time per process+sf and is
     committed as snapshot tables (the same primitives the streaming
@@ -9785,28 +9757,16 @@ def _recipe_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
     Everything a per-ingest run probes; nothing it rebuilds.
 
     In a real deployment these tables ARE the pipeline's state carried
-    between crawls; here a module-level cache stands in for cross-run
-    persistence so bench.py's min-of-3 prices the warm path honestly:
-    run 1 pays the one-time build, runs 2-3 measure read-state +
+    between crawls; here the warm cache (`sources/warm.py`) stands in
+    for cross-run persistence, so runs 2-3 measure read-state +
     label-one-batch + emit-datasheet — the number a per-ingest run
     actually costs (round-11 verdict item 2)."""
-    cached = _RECIPE_WARM_DIRS.get(sf)
-    if cached is not None:
-        return cached
-    with _RECIPE_WARM_LOCK:
-        return _recipe_warm_dirs_locked(spark, sf)
-
-
-def _recipe_warm_dirs_locked(spark: SparkSession, sf: str) -> dict:
-    import os
-
     from .sources.snapshots import commit_snapshot
 
-    cached = _RECIPE_WARM_DIRS.get(sf)
-    if cached is not None:  # built while we waited on the lock
-        return cached
-    root = _warm_scratch_dir("recipe_warm_")
-    dirs = {k: os.path.join(root, k) for k in _RECIPE_WARM_TABLES}
+    dirs.tables(
+        "bp", "url_index", "fp_index", "scrub", "lsh_index", "gram_index",
+        "ev_grams", "hist_agg", "surv", "meta",
+    )
     hist_corpus, _ = _recipe_hist_batch(spark, sf)
     hist_corpus = _spread(hist_corpus)
     bp = _recipe_bp(hist_corpus)
@@ -9860,46 +9820,43 @@ def _recipe_warm_dirs_locked(spark: SparkSession, sf: str) -> dict:
         local_frame(spark, [(state["max_id"],)], "max_id long"),
         dirs["meta"],
     )
-    _RECIPE_WARM_DIRS[sf] = dirs
-    return dirs
 
 
-def _recipe_warm_state(spark: SparkSession, dirs: dict[str, object]) -> dict:
+def _recipe_warm_state(spark: SparkSession, dirs: Warm) -> dict:
     """Reconstruct the `_recipe_label_batch` state dict from persisted
     snapshot tables — the read half of the warm increment contract.
     The eval slice derives from the scrubbed store by the same frozen
     id predicate `_recipe_state` uses (original-epoch docs only, so it
     is identical no matter how many batches extended the store).
 
-    The dict itself is cached on ``dirs`` (round-15, verdict item 4):
-    the frames are LAZY reads of immutable pinned tables, so rebuilding
-    them per ingest re-paid only driver-side work — 8 manifest
-    resolves + py4j plan construction + the max-id meta collect
-    (~0.4s of the warm wall, measured by the round-15 eager-point
-    instrumentation) — while the executor-side state reads still
-    happen inside every run's jobs. A deployment's long-lived session
-    (the streaming twin) holds exactly these frames between
-    micro-batches."""
+    The dict itself is the state's once-only ``"state"`` step
+    (round-15, verdict item 4): the frames are LAZY reads of immutable
+    pinned tables, so rebuilding them per ingest re-paid only
+    driver-side work — 8 manifest resolves + py4j plan construction +
+    the max-id meta collect (~0.4s of the warm wall, measured by the
+    round-15 eager-point instrumentation) — while the executor-side
+    state reads still happen inside every run's jobs. A deployment's
+    long-lived session (the streaming twin) holds exactly these frames
+    between micro-batches."""
     from .sources.snapshots import read_snapshot
 
-    cached = dirs.get("state_cache")
-    if cached is not None:
-        return cached
-    scrub = read_snapshot(spark, dirs["scrub"])
-    dirs["state_cache"] = state = {
-        "max_id": read_snapshot(spark, dirs["meta"]).collect()[0][0],
-        "bp": read_snapshot(spark, dirs["bp"]),
-        "url_index": read_snapshot(spark, dirs["url_index"]),
-        "fp_index": read_snapshot(spark, dirs["fp_index"]),
-        "scrub": scrub,
-        "lsh_index": read_snapshot(spark, dirs["lsh_index"]),
-        "gram_index": read_snapshot(spark, dirs["gram_index"]),
-        "ev_grams": read_snapshot(spark, dirs["ev_grams"]),
-        "ev": scrub.filter(
-            (F.col("doc_id") % 20 == 0) & (F.col("doc_id") < 1000000)
-        ),
-    }
-    return state
+    def state(_txn: str) -> dict:
+        scrub = read_snapshot(spark, dirs["scrub"])
+        return {
+            "max_id": read_snapshot(spark, dirs["meta"]).collect()[0][0],
+            "bp": read_snapshot(spark, dirs["bp"]),
+            "url_index": read_snapshot(spark, dirs["url_index"]),
+            "fp_index": read_snapshot(spark, dirs["fp_index"]),
+            "scrub": scrub,
+            "lsh_index": read_snapshot(spark, dirs["lsh_index"]),
+            "gram_index": read_snapshot(spark, dirs["gram_index"]),
+            "ev_grams": read_snapshot(spark, dirs["ev_grams"]),
+            "ev": scrub.filter(
+                (F.col("doc_id") % 20 == 0) & (F.col("doc_id") < 1000000)
+            ),
+        }
+
+    return dirs.once("state", state)
 
 
 @query(
@@ -10661,19 +10618,8 @@ def ann_ivfadc_residual_topk_q(spark: SparkSession, sf: str) -> DataFrame:
     return adc.orderBy(F.asc("adc_dist"), F.asc("vec_id")).limit(10)
 
 
-_IVF_WARM_DIRS: dict[str, dict[str, object]] = {}
-
-# One lock for every warm-index mutation (build / ingest / compact):
-# the registry gate runs queries on a thread pool, and two threads
-# racing commit_snapshot_idempotent would BOTH pass the txn check
-# against the pre-commit version and optimistic-retry into a double
-# append. The latches + txn ids handle replays; the lock handles
-# concurrency. (threading imported as _threading at the recipe warm
-# state above.)
-_IVF_WARM_LOCK = _threading.Lock()
-
-
-def _ivfadc_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
+@warm_build("ivf")
+def _ivfadc_warm_dirs(spark: SparkSession, sf: str, dirs: Warm) -> None:
     """Build-once persisted residual-IVFADC index — the OFFLINE half of
     a production ANN deployment, run once per corpus: the code table
     committed as a snapshot CLUSTERED BY the coarse cell id
@@ -10681,26 +10627,10 @@ def _ivfadc_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
     range-partitions + sorts, so each file owns a disjoint pid range
     and the manifest min/max stats make the probe's cell filter skip
     files), plus the 16-row pivot table and the 32-row residual
-    codebook. Module-level cache per sf dir — bench.py's min-of-3
-    prices the SERVE path (run 1 pays the build), the same contract as
-    ``_recipe_warm_dirs``."""
-    cached = _IVF_WARM_DIRS.get(sf)
-    if cached is not None:
-        return cached
-    with _IVF_WARM_LOCK:
-        return _ivfadc_warm_dirs_locked(spark, sf)
-
-
-def _ivfadc_warm_dirs_locked(spark: SparkSession, sf: str) -> dict[str, object]:
-    import os
-
+    codebook."""
     from .sources.snapshots import commit_snapshot
 
-    cached = _IVF_WARM_DIRS.get(sf)
-    if cached is not None:  # built while we waited on the lock
-        return cached
-    root = _warm_scratch_dir("ivf_warm_")
-    dirs = {k: os.path.join(root, k) for k in ("codes", "pivots", "codebook")}
+    dirs.tables("codes", "pivots", "codebook")
     _cl, piv0, _asgc, rcb, rasg, _ccb, _casg = _rescl_frames(spark, sf)
     # the base serve pins this version (time travel), so a later
     # warm-ingest append cannot change what `ann_ivfadc_warm_serve`
@@ -10710,12 +10640,10 @@ def _ivfadc_warm_dirs_locked(spark: SparkSession, sf: str) -> dict[str, object]:
     )
     # the index PARAMETERS are versioned tables too: every base-
     # generation reader pins these versions, so a retrain generation
-    # (`_ivfadc_retrain`) can overwrite-commit scaled pivots/codebook
+    # (`_ivf_retrain`) can overwrite-commit scaled pivots/codebook
     # onto the SAME tables without perturbing any gen-1 entry
     dirs["pivots_version"] = commit_snapshot(piv0, dirs["pivots"])
     dirs["codebook_version"] = commit_snapshot(rcb, dirs["codebook"])
-    _IVF_WARM_DIRS[sf] = dirs
-    return dirs
 
 
 def _ivfadc_warm_probe(
@@ -10933,11 +10861,34 @@ def _ivfadc_warm_ingest(spark: SparkSession, sf: str) -> dict:
     sink contract). cluster_by keeps the appended files' pid ranges
     disjoint, so the probe's manifest pruning keeps working on the
     grown index. History codes are never read, let alone rewritten."""
+    from .sources.snapshots import commit_snapshot_idempotent, read_snapshot
+
     dirs = _ivfadc_warm_dirs(spark, sf)
-    with _IVF_WARM_LOCK:
-        if dirs.get("ingested"):
-            return dirs
-        return _ivfadc_warm_ingest_locked(spark, sf, dirs)
+
+    def ingest(txn: str) -> None:
+        piv0 = read_snapshot(
+            spark, dirs["pivots"], version=dirs["pivots_version"]
+        )
+        rcb = read_snapshot(
+            spark, dirs["codebook"], version=dirs["codebook_version"]
+        )
+        emb64 = load_table(spark, sf, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("e")
+        )
+        bcodes = _ivfadc_batch_codes(
+            _ivfadc_jittered_batch(_rescl_corpus(emb64, piv0)), piv0, rcb
+        )
+        dirs["codes_ingest_version"] = commit_snapshot_idempotent(
+            bcodes,
+            dirs["codes"],
+            txn_id=txn,
+            mode="append",
+            cluster_by=["pid"],
+            target_files=16,
+        )
+
+    dirs.once("ingest", ingest)
+    return dirs
 
 
 def _ivfadc_jittered_batch(cl: DataFrame) -> DataFrame:
@@ -10977,35 +10928,6 @@ def _ivfadc_batch_codes(
         )
     )
     return _pq_encode_with(_subspace_explode(bres, "r", "sv"), rcb)
-
-
-def _ivfadc_warm_ingest_locked(
-    spark: SparkSession, sf: str, dirs: dict
-) -> dict:
-    from .sources.snapshots import commit_snapshot_idempotent, read_snapshot
-
-    piv0 = read_snapshot(spark, dirs["pivots"], version=dirs["pivots_version"])
-    rcb = read_snapshot(spark, dirs["codebook"], version=dirs["codebook_version"])
-    emb64 = load_table(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    bcodes = _ivfadc_batch_codes(
-        _ivfadc_jittered_batch(_rescl_corpus(emb64, piv0)), piv0, rcb
-    )
-    dirs["codes_ingest_version"] = commit_snapshot_idempotent(
-        bcodes,
-        dirs["codes"],
-        txn_id="ivfadc-warm-ingest-1",
-        mode="append",
-        cluster_by=["pid"],
-        target_files=16,
-    )
-    # process-local latch ON TOP of the txn check: the txn id guards
-    # the current version only (the foreachBatch contract), so a later
-    # COMPACTION version would let a replayed ingest re-append — the
-    # latch makes build → ingest → compact re-entrant in any order
-    dirs["ingested"] = True
-    return dirs
 
 
 # The batched-serve oracle tail over a `qs` (qid, qe) CTE — shared by
@@ -11243,25 +11165,24 @@ def _ivfadc_warm_compact(spark: SparkSession, sf: str) -> dict:
     unchanged (serve output provably invariant: same oracle), file
     count restored, manifest pruning back to ~1 file per cell. Old
     versions stay readable (the base serve keeps its pin); vacuum
-    reclaims them on its own schedule. Idempotent via the compaction
-    txn id + the process latch."""
+    reclaims them on its own schedule."""
     from .sources.snapshots import commit_snapshot_idempotent, read_snapshot
 
     dirs = _ivfadc_warm_ingest(spark, sf)
-    with _IVF_WARM_LOCK:
-        if not dirs.get("compacted"):
-            dirs["codes_compact_version"] = commit_snapshot_idempotent(
-                read_snapshot(
-                    spark, dirs["codes"],
-                    version=dirs["codes_ingest_version"],
-                ),
-                dirs["codes"],
-                txn_id="ivfadc-warm-compact-1",
-                mode="overwrite",
-                cluster_by=["pid"],
-                target_files=16,
-            )
-            dirs["compacted"] = True
+
+    def compact(txn: str) -> None:
+        dirs["codes_compact_version"] = commit_snapshot_idempotent(
+            read_snapshot(
+                spark, dirs["codes"], version=dirs["codes_ingest_version"]
+            ),
+            dirs["codes"],
+            txn_id=txn,
+            mode="overwrite",
+            cluster_by=["pid"],
+            target_files=16,
+        )
+
+    dirs.once("compact", compact)
     return dirs
 
 
@@ -12249,67 +12170,48 @@ def ngram_jaccard_verify_grams_index_q(
     )
 
 
-_GRAM_WARM_DIRS: dict[str, dict[str, object]] = {}
-_GRAM_WARM_LOCK = _threading.Lock()
 # Files per build and per ingest commit of the gram table: fixed, not
 # the core count, so the ingest version holds 2 × 8 files on every
 # machine and the compaction to 8 id-clustered files always shrinks it.
 _GRAM_WARM_FILES = 8
 
 
-def _gram_warm_dirs(spark: SparkSession, sf: str) -> dict[str, object]:
+@warm_build("gram")
+def _gram_warm_dirs(spark: SparkSession, sf: str, dirs: Warm) -> None:
     """Build-once persisted gram-hash verify index (round-13 verdict
     item 3): `ngram_jaccard_verify_grams_index` still built the index
     in-DAG per run, so every verify paid the one-time shingling again.
-    This gives the gram index the same warm-table lifecycle as the IVF
-    codes (`_ivfadc_warm_dirs`): the BASE epoch (original document
-    ids) is shingled once and committed as a snapshot table; the clone
-    batch (ids +1000000, `_documents_with_dups`) is a later INGEST
-    folded in idempotently (`_gram_warm_ingest`). Same bench contract
-    as every warm table: run 1 pays the build, min-of-N prices the
-    serve."""
-    cached = _GRAM_WARM_DIRS.get(sf)
-    if cached is not None:
-        return cached
-    with _GRAM_WARM_LOCK:
-        cached = _GRAM_WARM_DIRS.get(sf)
-        if cached is not None:  # built while we waited on the lock
-            return cached
-        import os
+    Here the BASE epoch (original document ids) is shingled once and
+    committed as a snapshot table; the clone batch (ids +1000000,
+    `_documents_with_dups`) is a later INGEST folded in idempotently
+    (`_gram_warm_ingest`)."""
+    from .operators.dedup import gram_hash_index
+    from .sources.snapshots import commit_snapshot
 
-        from .operators.dedup import gram_hash_index
-        from .sources.snapshots import commit_snapshot
-
-        root = _warm_scratch_dir("gram_warm_")
-        dirs: dict[str, object] = {"grams": os.path.join(root, "grams")}
-        base = (
-            _documents_with_dups(spark, sf)
-            .repartition(_GRAM_WARM_FILES)
-            .filter(F.col("doc_id") < 1000000)
-        )
-        dirs["grams_base_version"] = commit_snapshot(
-            gram_hash_index(base, "text", "doc_id", n=2), dirs["grams"]
-        )
-        _GRAM_WARM_DIRS[sf] = dirs
-        return dirs
+    dirs.tables("grams")
+    base = (
+        _documents_with_dups(spark, sf)
+        .repartition(_GRAM_WARM_FILES)
+        .filter(F.col("doc_id") < 1000000)
+    )
+    dirs["grams_base_version"] = commit_snapshot(
+        gram_hash_index(base, "text", "doc_id", n=2), dirs["grams"]
+    )
 
 
 def _gram_warm_ingest(spark: SparkSession, sf: str) -> dict[str, object]:
     """Fold the clone batch's gram sets into the committed index —
     gram-index maintenance as a TABLE operation, mirroring
     `_ivfadc_warm_ingest`: the batch is shingled ONCE (the only
-    shingling it ever gets), appended with
-    ``commit_snapshot_idempotent`` (fixed txn id: bench's min-of-N and
-    crashed-writer restarts land the batch exactly once), and the
-    process-local latch makes re-entry cheap after later versions
-    exist. History gram rows are never read, let alone rewritten."""
-    dirs = _gram_warm_dirs(spark, sf)
-    with _GRAM_WARM_LOCK:
-        if dirs.get("ingested"):
-            return dirs
-        from .operators.dedup import gram_hash_index
-        from .sources.snapshots import commit_snapshot_idempotent
+    shingling it ever gets) and appended with
+    ``commit_snapshot_idempotent``. History gram rows are never read,
+    let alone rewritten."""
+    from .operators.dedup import gram_hash_index
+    from .sources.snapshots import commit_snapshot_idempotent
 
+    dirs = _gram_warm_dirs(spark, sf)
+
+    def ingest(txn: str) -> None:
         batch = (
             _documents_with_dups(spark, sf)
             .repartition(_GRAM_WARM_FILES)
@@ -12318,11 +12220,12 @@ def _gram_warm_ingest(spark: SparkSession, sf: str) -> dict[str, object]:
         dirs["grams_ingest_version"] = commit_snapshot_idempotent(
             gram_hash_index(batch, "text", "doc_id", n=2),
             dirs["grams"],
-            txn_id="gram-warm-ingest-1",
+            txn_id=txn,
             mode="append",
         )
-        dirs["ingested"] = True
-        return dirs
+
+    dirs.once("ingest", ingest)
+    return dirs
 
 
 def _gram_warm_compact(spark: SparkSession, sf: str) -> dict[str, object]:
@@ -12334,26 +12237,24 @@ def _gram_warm_compact(spark: SparkSession, sf: str) -> dict[str, object]:
     version — rows unchanged (the compact verify entry shares the
     verify oracle: the hash match IS the proof), file count restored,
     and the id min/max stats now prune (the base/ingest commits
-    are unclustered). Old versions stay readable; idempotent via the
-    compaction txn id + the process latch."""
+    are unclustered). Old versions stay readable."""
     from .sources.snapshots import commit_snapshot_idempotent, read_snapshot
 
     dirs = _gram_warm_ingest(spark, sf)
-    with _GRAM_WARM_LOCK:
-        if not dirs.get("compacted"):
-            dirs["grams_compact_version"] = commit_snapshot_idempotent(
-                read_snapshot(
-                    spark,
-                    dirs["grams"],
-                    version=dirs["grams_ingest_version"],
-                ),
-                dirs["grams"],
-                txn_id="gram-warm-compact-1",
-                mode="overwrite",
-                cluster_by=["id"],
-                target_files=8,
-            )
-            dirs["compacted"] = True
+
+    def compact(txn: str) -> None:
+        dirs["grams_compact_version"] = commit_snapshot_idempotent(
+            read_snapshot(
+                spark, dirs["grams"], version=dirs["grams_ingest_version"]
+            ),
+            dirs["grams"],
+            txn_id=txn,
+            mode="overwrite",
+            cluster_by=["id"],
+            target_files=8,
+        )
+
+    dirs.once("compact", compact)
     return dirs
 
 
@@ -13115,8 +13016,6 @@ _ORACLE_REG["bpe_learn_merges"] = _bpe_oracle(8)
 # versions stay readable — every gen-1 entry pins its versions), and
 # serve/screen over the new generation.
 
-_IVF_RETRAIN_TXN = "ivfadc-warm-retrain-1"
-
 # The retrain's design occupancy: cells are scaled so each holds ~this
 # many vectors — the sf0.1 reference build's per-cell occupancy
 # (2000 vectors / 16 cells). An ABSOLUTE target, not a growth ratio:
@@ -13178,19 +13077,10 @@ def _ivf_retrain_corpus(spark: SparkSession, sf: str, dirs: dict) -> DataFrame:
 
 
 def _ivf_retrain(spark: SparkSession, sf: str) -> dict:
-    """Retrain the warm index with cell count scaled to the corpus —
-    idempotent (one snapshot txn id + the process latch), ordered
-    after the ingest (it retrains the DRIFTED corpus)."""
-    dirs = _ivfadc_warm_ingest(spark, sf)
-    with _IVF_WARM_LOCK:
-        if dirs.get("retrained"):
-            return dirs
-        return _ivf_retrain_locked(spark, sf, dirs)
-
-
-def _ivf_retrain_locked(spark: SparkSession, sf: str, dirs: dict) -> dict:
-    """The retrain ACTION, as three generation-2 commits onto the SAME
-    tables the index already lives in:
+    """Retrain the warm index with cell count scaled to the corpus,
+    ordered after the ingest (it retrains the DRIFTED corpus): three
+    generation-2 commits onto the SAME tables the index already lives
+    in, all under the step's one txn id:
 
     1. cell count from MANIFEST ARITHMETIC — `snapshot_row_count` over
        the pinned post-ingest codes version (4 rows per vector), so
@@ -13223,83 +13113,87 @@ def _ivf_retrain_locked(spark: SparkSession, sf: str, dirs: dict) -> dict:
         snapshot_row_count,
     )
 
-    n_total = (
-        snapshot_row_count(dirs["codes"], dirs["codes_ingest_version"]) // 4
-    )
-    n_cells = max(16, n_total // _IVF_RETRAIN_TARGET_OCC)
+    dirs = _ivfadc_warm_ingest(spark, sf)
 
-    av = _ivf_retrain_corpus(spark, sf, dirs).localCheckpoint(eager=True)
-    seeds = av.filter(F.col("vec_id").between(1, n_cells)).select(
-        F.col("vec_id").alias("pid"), F.col("ie").alias("pe")
-    )
-    a0 = _assign_cells(
-        av.select("vec_id", "ie"), seeds,
-        _il2_col(F.col("ie"), F.col("pe")), "pid", False,
-    )
-    lloyd = (
-        a0.join(av, "vec_id")
-        .select("pid", F.posexplode("ie").alias("k", "val"))
-        .groupBy("pid", "k")
-        .agg(F.expr("sum(val) DIV count(val)").alias("pv"))
-        .groupBy("pid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("k", "pv"))),
-                lambda s: s["pv"],
-            ).alias("pe_new")
+    def retrain(txn: str) -> None:
+        n_total = (
+            snapshot_row_count(dirs["codes"], dirs["codes_ingest_version"]) // 4
         )
-    )
-    pivn = (
-        seeds.join(lloyd, "pid", "left")
-        .select(
-            "pid", F.coalesce(F.col("pe_new"), F.col("pe")).alias("pe")
+        n_cells = max(16, n_total // _IVF_RETRAIN_TARGET_OCC)
+
+        av = _ivf_retrain_corpus(spark, sf, dirs).localCheckpoint(eager=True)
+        seeds = av.filter(F.col("vec_id").between(1, n_cells)).select(
+            F.col("vec_id").alias("pid"), F.col("ie").alias("pe")
         )
-        .localCheckpoint(eager=True)  # reused by a1, residuals, commit
-    )
-    pivd = pivn.select(
-        "pid",
-        F.transform(F.col("pe"), lambda x: x.cast("double") / 10000).alias(
-            "pe"
-        ),
-    )
-    a1 = _assign_cells(
-        av.select("vec_id", "ie"), pivn,
-        _il2_col(F.col("ie"), F.col("pe")), "pid", False,
-    )
-    res = (
-        a1.join(av, "vec_id")
-        .join(F.broadcast(pivd), "pid")
-        .select(
-            "vec_id",
+        a0 = _assign_cells(
+            av.select("vec_id", "ie"), seeds,
+            _il2_col(F.col("ie"), F.col("pe")), "pid", False,
+        )
+        lloyd = (
+            a0.join(av, "vec_id")
+            .select("pid", F.posexplode("ie").alias("k", "val"))
+            .groupBy("pid", "k")
+            .agg(F.expr("sum(val) DIV count(val)").alias("pv"))
+            .groupBy("pid")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("k", "pv"))),
+                    lambda s: s["pv"],
+                ).alias("pe_new")
+            )
+        )
+        pivn = (
+            seeds.join(lloyd, "pid", "left")
+            .select(
+                "pid", F.coalesce(F.col("pe_new"), F.col("pe")).alias("pe")
+            )
+            .localCheckpoint(eager=True)  # reused by a1, residuals, commit
+        )
+        pivd = pivn.select(
             "pid",
-            F.zip_with(F.col("e"), F.col("pe"), lambda x, y: x - y).alias(
-                "r"
+            F.transform(F.col("pe"), lambda x: x.cast("double") / 10000).alias(
+                "pe"
             ),
         )
-    )
-    sub = _subspace_explode(res, "r", "sv")
-    rcb2 = sub.filter(
-        F.col("vec_id").between(n_cells + 1, n_cells + 8)
-    ).select(
-        (F.col("vec_id") - n_cells).alias("cid"), "m", F.col("sv").alias("cv")
-    )
-    codes2 = _pq_encode_with(sub, rcb2)
-    dirs["codes_retrain_version"] = commit_snapshot_idempotent(
-        codes2,
-        dirs["codes"],
-        txn_id=_IVF_RETRAIN_TXN,
-        mode="overwrite",
-        cluster_by=["pid"],
-        target_files=n_cells,
-    )
-    dirs["pivots_retrain_version"] = commit_snapshot_idempotent(
-        pivd, dirs["pivots"], txn_id=_IVF_RETRAIN_TXN, mode="overwrite"
-    )
-    dirs["codebook_retrain_version"] = commit_snapshot_idempotent(
-        rcb2, dirs["codebook"], txn_id=_IVF_RETRAIN_TXN, mode="overwrite"
-    )
-    dirs["retrain_cells"] = n_cells
-    dirs["retrained"] = True
+        a1 = _assign_cells(
+            av.select("vec_id", "ie"), pivn,
+            _il2_col(F.col("ie"), F.col("pe")), "pid", False,
+        )
+        res = (
+            a1.join(av, "vec_id")
+            .join(F.broadcast(pivd), "pid")
+            .select(
+                "vec_id",
+                "pid",
+                F.zip_with(F.col("e"), F.col("pe"), lambda x, y: x - y).alias(
+                    "r"
+                ),
+            )
+        )
+        sub = _subspace_explode(res, "r", "sv")
+        rcb2 = sub.filter(
+            F.col("vec_id").between(n_cells + 1, n_cells + 8)
+        ).select(
+            (F.col("vec_id") - n_cells).alias("cid"), "m", F.col("sv").alias("cv")
+        )
+        codes2 = _pq_encode_with(sub, rcb2)
+        dirs["codes_retrain_version"] = commit_snapshot_idempotent(
+            codes2,
+            dirs["codes"],
+            txn_id=txn,
+            mode="overwrite",
+            cluster_by=["pid"],
+            target_files=n_cells,
+        )
+        dirs["pivots_retrain_version"] = commit_snapshot_idempotent(
+            pivd, dirs["pivots"], txn_id=txn, mode="overwrite"
+        )
+        dirs["codebook_retrain_version"] = commit_snapshot_idempotent(
+            rcb2, dirs["codebook"], txn_id=txn, mode="overwrite"
+        )
+        dirs["retrain_cells"] = n_cells
+
+    dirs.once("retrain", retrain)
     return dirs
 
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from .queries import query
 from .sources.parquet import load_table, register_views
+from .sources.warm import Warm, warm_build
 
 
 @query(
@@ -1097,50 +1098,45 @@ def matview_incremental_refresh(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-#: per-process cache of the Z-ordered orders snapshot, keyed by sf dir.
-#: The commit + Morton rewrite is one-off table MAINTENANCE (like an
-#: OPTIMIZE job); the operator under measurement is the stats-pruned
-#: READ. Round 6's bench entry timed the build inside the body (~90% of
-#: its 3.50s), poisoning cross-round comparison — building once per
-#: process and reusing means bench's min-of-N reflects the read path,
-#: while the first call (and the driver's single correctness call) still
-#: exercises the full commit→ZORDER→read pipeline end to end.
-_ZORDER_FIXTURE: dict[str, tuple[str, int, int]] = {}
-
-
-def _zorder_fixture(spark: SparkSession, sf: str) -> tuple[str, int, int]:
-    """Build (once per sf per process) the Z-ordered snapshot of orders
-    on (ckey, cents); return (table_path, ck_hi, c_hi) slice bounds.
-    Registered for atexit cleanup — no temp dirs leak past the run."""
-    got = _ZORDER_FIXTURE.get(sf)
-    if got is not None:
-        return got
-    import atexit
-    import shutil
-    import tempfile
-
-    from .sources.snapshots import commit_snapshot, zorder_snapshot
-
-    o = load_table(spark, sf, "orders").select(
+def _zorder_orders(spark: SparkSession, sf: str) -> DataFrame:
+    return load_table(spark, sf, "orders").select(
         F.col("o_orderkey").cast("long").alias("okey"),
         F.col("o_custkey").cast("long").alias("ckey"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
+
+
+class _NoSliceBounds(Exception):
+    """orders has no non-NULL (ckey, cents) bounds, so no slice row."""
+
+
+@warm_build("zorder")
+def _zorder_fixture(spark: SparkSession, sf: str, w: Warm) -> None:
+    """The Z-ordered snapshot of orders on (ckey, cents) as
+    ``w["orders_z"]``, with the ``ck_hi`` / ``c_hi`` slice bounds. The
+    commit + Morton rewrite is one-off table MAINTENANCE (like an
+    OPTIMIZE job); the operator under measurement is the stats-pruned
+    READ. Round 6's bench entry timed the build inside the body (~90%
+    of its 3.50s), so the table is warm: bench's min-of-N reflects the
+    read path, while the first call (and the driver's single
+    correctness call) still exercises commit→ZORDER→read end to end.
+    Raises ``_NoSliceBounds`` when a bound is NULL (empty orders)."""
+    from .sources.snapshots import commit_snapshot, zorder_snapshot
+
+    o = _zorder_orders(spark, sf)
     b = o.agg(
         F.min("ckey"), F.max("ckey"), F.min("cents"), F.max("cents")
     ).collect()[0]
-    ck_hi = b[0] + (b[1] - b[0]) // 10
-    c_hi = b[2] + (b[3] - b[2]) // 10
-    root = tempfile.mkdtemp(prefix="zorder_q_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    t = f"{root}/orders_z"
+    if None in tuple(b):  # Row's `in` tests field names
+        raise _NoSliceBounds(sf)
+    w["ck_hi"] = b[0] + (b[1] - b[0]) // 10
+    w["c_hi"] = b[2] + (b[3] - b[2]) // 10
+    w.tables("orders_z")
     # few files in the seed commit: its layout is immediately
     # superseded by the ZORDER rewrite, so extra files only cost
     # stat-collection footer reads
-    commit_snapshot(o, t, target_files=4)
-    zorder_snapshot(spark, t, ("ckey", "cents"), target_files=16)
-    _ZORDER_FIXTURE[sf] = (t, ck_hi, c_hi)
-    return _ZORDER_FIXTURE[sf]
+    commit_snapshot(o, w["orders_z"], target_files=4)
+    zorder_snapshot(spark, w["orders_z"], ("ckey", "cents"), target_files=16)
 
 
 @query(
@@ -1178,10 +1174,16 @@ def zorder_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     re-checked row-level), which is what makes a full DuckDB oracle
     possible: the oracle is a plain filtered scan of orders with the
     same integer-exact bounds. Slice bounds are min + (max-min)//10 in
-    BIGINT on both engines — no floats anywhere near the boundary."""
+    BIGINT on both engines — no floats anywhere near the boundary.
+    With a NULL bound (empty orders) no row can satisfy the slice, so
+    the answer is 0 rows and nothing is built."""
     from .sources.snapshots import pruned_file_counts, read_snapshot_pruned
 
-    t, ck_hi, c_hi = _zorder_fixture(spark, sf)
+    try:
+        w = _zorder_fixture(spark, sf)
+    except _NoSliceBounds:
+        return _zorder_orders(spark, sf).limit(0)
+    t, ck_hi, c_hi = w["orders_z"], w["ck_hi"], w["c_hi"]
     f_ck = [("ckey", "<=", ck_hi)]
     f_c = [("cents", "<=", c_hi)]
     kept_ck, total = pruned_file_counts(t, f_ck)

@@ -6,6 +6,8 @@
 - ``load_table`` infers each parquet file's schema once
   (``sources/parquet.py``).
 - No package module but ``sources/local.py`` calls ``createDataFrame``.
+- No package module but ``sources/warm.py`` makes a lock or registers an
+  exit hook: warm state lives in its one cache (two named locks excepted).
 - ``merge_snapshot`` skips its key probe when no file has stats on the
   key (``sources/snapshots.py``).
 - Column and DataFrame calls record no Python call site, so they send
@@ -84,6 +86,71 @@ def test_no_create_dataframe_outside_local_frame():
         and (lines := _create_dataframe_calls(p.read_text(encoding="utf-8")))
     }
     assert found == {}, f"use sources.local.local_frame instead: {found}"
+
+
+_LIFECYCLE = {"threading.Lock", "threading.RLock", "atexit.register"}
+# locks that guard no warm state: the parquet schema cache and the
+# conditional-put mock's store
+_ALLOWED_LOCKS = {
+    ("sources/parquet.py", "_schemas_lock"),
+    ("sources/snapshots.py", "_mutex"),
+}
+
+
+def _lifecycle_uses(source: str) -> list[tuple[str, int]]:
+    """``(assigned name or "", line)`` of each reference to
+    ``threading.Lock``/``RLock`` or ``atexit.register``, through any
+    import alias."""
+    tree = ast.parse(source)
+    alias = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            alias.update({a.asname or a.name: a.name for a in node.names})
+        elif isinstance(node, ast.ImportFrom):
+            alias.update(
+                {a.asname or a.name: f"{node.module}.{a.name}" for a in node.names}
+            )
+    assigned = {
+        id(node.value.func): node.targets[0].id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and isinstance(node.value, ast.Call)
+        and isinstance(node.targets[0], ast.Name)
+    }
+
+    def resolved(node) -> str | None:
+        if isinstance(node, ast.Name):
+            return alias.get(node.id)
+        if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+            return f"{alias.get(node.value.id)}.{node.attr}"
+        return None
+
+    return [
+        (assigned.get(id(node), ""), node.lineno)
+        for node in ast.walk(tree)
+        if resolved(node) in _LIFECYCLE
+    ]
+
+
+def test_no_lock_or_exit_hook_outside_warm():
+    """Build-once state, its lock and its scratch cleanup belong to
+    ``sources/warm.py``; a module that makes its own is a second cache."""
+    sample = (
+        "import threading as _t\nfrom atexit import register\n"
+        "_L = _t.RLock()\nregister(print)\n"
+    )
+    assert _lifecycle_uses(sample) == [("_L", 3), ("", 4)]
+    found = {}
+    for p in sorted(PACKAGE.rglob("*.py")):
+        rel = p.relative_to(PACKAGE).as_posix()
+        uses = [
+            u
+            for u in _lifecycle_uses(p.read_text(encoding="utf-8"))
+            if (rel, u[0]) not in _ALLOWED_LOCKS
+        ]
+        if rel != "sources/warm.py" and uses:
+            found[rel] = uses
+    assert found == {}, f"use sources.warm instead: {found}"
 
 
 def test_local_frame_is_a_local_relation(spark):
