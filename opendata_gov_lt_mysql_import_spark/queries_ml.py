@@ -9829,7 +9829,7 @@ def _recipe_warm_state(spark: SparkSession, dirs: Warm) -> dict:
     id predicate `_recipe_state` uses (original-epoch docs only, so it
     is identical no matter how many batches extended the store).
 
-    The dict itself is the state's once-only ``"state"`` step
+    The dict itself is the state's once-only ``"state_cache"`` step
     (round-15, verdict item 4): the frames are LAZY reads of immutable
     pinned tables, so rebuilding them per ingest re-paid only
     driver-side work — 8 manifest resolves + py4j plan construction +
@@ -9856,7 +9856,7 @@ def _recipe_warm_state(spark: SparkSession, dirs: Warm) -> dict:
             ),
         }
 
-    return dirs.once("state", state)
+    return dirs.once("state_cache", state)
 
 
 @query(
@@ -10866,12 +10866,8 @@ def _ivfadc_warm_ingest(spark: SparkSession, sf: str) -> dict:
     dirs = _ivfadc_warm_dirs(spark, sf)
 
     def ingest(txn: str) -> None:
-        piv0 = read_snapshot(
-            spark, dirs["pivots"], version=dirs["pivots_version"]
-        )
-        rcb = read_snapshot(
-            spark, dirs["codebook"], version=dirs["codebook_version"]
-        )
+        piv0 = read_snapshot(spark, dirs["pivots"], version=dirs["pivots_version"])
+        rcb = read_snapshot(spark, dirs["codebook"], version=dirs["codebook_version"])
         emb64 = load_table(spark, sf, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("e")
         )
@@ -10887,7 +10883,7 @@ def _ivfadc_warm_ingest(spark: SparkSession, sf: str) -> dict:
             target_files=16,
         )
 
-    dirs.once("ingest", ingest)
+    dirs.once("ingested", ingest)
     return dirs
 
 
@@ -11182,7 +11178,7 @@ def _ivfadc_warm_compact(spark: SparkSession, sf: str) -> dict:
             target_files=16,
         )
 
-    dirs.once("compact", compact)
+    dirs.once("compacted", compact)
     return dirs
 
 
@@ -12224,7 +12220,7 @@ def _gram_warm_ingest(spark: SparkSession, sf: str) -> dict[str, object]:
             mode="append",
         )
 
-    dirs.once("ingest", ingest)
+    dirs.once("ingested", ingest)
     return dirs
 
 
@@ -12254,7 +12250,7 @@ def _gram_warm_compact(spark: SparkSession, sf: str) -> dict[str, object]:
             target_files=8,
         )
 
-    dirs.once("compact", compact)
+    dirs.once("compacted", compact)
     return dirs
 
 
@@ -13193,7 +13189,7 @@ def _ivf_retrain(spark: SparkSession, sf: str) -> dict:
         )
         dirs["retrain_cells"] = n_cells
 
-    dirs.once("retrain", retrain)
+    dirs.once("retrained", retrain)
     return dirs
 
 

@@ -46,27 +46,28 @@ _CACHE: dict[tuple[str, str], Warm] = {}
 
 
 class Warm(dict):
-    """One family's warm state at one sf: table paths and committed
-    versions as items, the scratch ``root`` and the step latches."""
+    """One family's warm state at one sf: table paths, committed
+    versions and step latches as items, and the scratch ``root``."""
 
     def __init__(self, family: str, root: str) -> None:
         super().__init__()
         self.family = family
         self.root = root
-        self._done: dict[str, Any] = {}
 
     def tables(self, *names: str) -> None:
         """Point ``self[name]`` at a table directory under the root."""
         self.update({n: os.path.join(self.root, n) for n in names})
 
     def once(self, step: str, body: Callable[[str], T]) -> T:
-        """``body(txn_id)``, run on the first call that reaches it;
-        every call returns that run's result."""
-        if step not in self._done:
+        """``body(txn_id)``, run on the first call that reaches it and
+        latched as ``self[step]``; every call returns that run's result.
+        Popping the latch simulates a restart: the body runs again and
+        its commits replay under the same txn id."""
+        if step not in self:
             with _LOCK:
-                if step not in self._done:
-                    self._done[step] = body(f"{self.family}-warm-{step}-1")
-        return self._done[step]
+                if step not in self:
+                    self[step] = body(f"{self.family}-warm-{step}-1")
+        return self[step]
 
 
 def warm_build(family: str) -> Callable[[Build], Callable[[Any, str], Warm]]:

@@ -893,7 +893,7 @@ def test_ivf_retrain_new_generation_contract(spark, sf_dir, queries):
     v_codes = current_version(dirs["codes"])
     v_piv = current_version(dirs["pivots"])
     v_cb = current_version(dirs["codebook"])
-    dirs._done.pop("retrain")
+    dirs.pop("retrained")
     dirs2 = _ivf_retrain(spark, sf_dir)
     assert dirs2["codes_retrain_version"] == dirs["codes_retrain_version"]
     assert current_version(dirs["codes"]) == v_codes

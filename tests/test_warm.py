@@ -5,6 +5,8 @@ the same guarantees under the registry gate's 8-thread pool."""
 from __future__ import annotations
 
 import os
+import sys
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
@@ -15,7 +17,7 @@ from opendata_gov_lt_mysql_import_spark.sources import warm
 
 def _on_threads(fn, n=8):
     with ThreadPoolExecutor(max_workers=n) as ex:
-        return list(ex.map(lambda _: fn(), range(n)))
+        return list(ex.map(lambda _: fn(), range(n), timeout=600))
 
 
 def test_failed_build_or_step_keeps_nothing(monkeypatch):
@@ -48,6 +50,36 @@ def test_failed_build_or_step_keeps_nothing(monkeypatch):
         w.once("ingest", step)
     assert w.once("ingest", step) == 2 and w.once("ingest", step) == 2
     assert txns == ["probe-warm-ingest-1"] * 2
+
+
+def test_build_and_step_run_once_under_thread_switching(monkeypatch):
+    """More threads than cores and a short switch interval race one
+    build and one step; an unlocked check-then-act runs either twice."""
+    monkeypatch.setattr(warm, "_CACHE", {})
+    builds, txns = [], []
+
+    @warm.warm_build("race")
+    def get(spark, sf, w):
+        builds.append(w.root)
+        time.sleep(0.01)
+
+    def step(txn):
+        txns.append(txn)
+        time.sleep(0.01)
+        return len(txns)
+
+    def call():
+        w = get(None, "sf")
+        return w, w.once("step", step)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        got = _on_threads(call, n=16)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(builds) == 1 and txns == ["race-warm-step-1"]
+    assert all(w is got[0][0] and n == 1 for w, n in got)
 
 
 def test_warm_entries_build_and_step_once_across_threads(
